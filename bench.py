@@ -29,7 +29,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 import pandas as pd  # noqa: E402  (module scope: pandas_udf type hints)
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count()))
 SCALE_DOCS = int(os.environ.get("SPARK_GRAFT_BENCH_DOCS", "120000"))
 REPS = int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "3"))  # paired (N, 4N)
 # measurement rounds; each run gets a fresh session + small JIT-warmup
@@ -214,9 +214,7 @@ def _p50_stage_split(spark, s, query, k: int = 10, reps: int = 5) -> dict:
         t0 = t()
         sc.parallelize(range(npart), npart).count()
         sched.append(t() - t0)
-    qtf = s._query_tf([query])
-    vocab = sorted({tm for d in qtf.values() for tm in d})
-    idf = {tm: s._idf_cache[tm] for tm in vocab if tm in s._idf_cache}
+    qtf, idf = s._prep([query])
     rows = s._posts.filter(F.col("term").isin(list(idf))).collect()
     qid = next(iter(qtf))
     wts = {tm: c * idf[tm] * (s.k1 + 1.0) for tm, c in qtf[qid].items() if tm in idf}
@@ -263,9 +261,9 @@ def _p50_stage_split(spark, s, query, k: int = 10, reps: int = 5) -> dict:
 def measure_query_p50(spark, corpus_path: str) -> tuple[float, float, dict, dict]:
     """Per-query latency over the bench index (one search() per query —
     the reference's per-query ms accounting, BaseQueryApp.java:705-724),
-    the built index's storage footprint, and the kernel/merge serving
-    comparison (maxscore vs bmw x distributed vs driver merge — all
-    result-identical; the published default is the measured winner)."""
+    the built index's storage footprint, and the kernel comparison
+    (maxscore vs bmw — result-identical; the published default is the
+    measured winner)."""
     from flexneuart_spark.fixtures import make_queries
     from flexneuart_spark.index.builder import build_index
     from flexneuart_spark.search.engine import Searcher
@@ -292,29 +290,21 @@ def measure_query_p50(spark, corpus_path: str) -> tuple[float, float, dict, dict
         # first queries pay one-time codegen/broadcast costs)
         for qid, text in queries[:5]:
             s.search([(qid, text)], k=10).count()
-        # kernel/merge comparison (round-3 verdict #4/#5): measure every
-        # result-identical serving config INTERLEAVED (config inner loop,
-        # query outer) so VM drift hits all configs equally
-        configs = [
-            ("maxscore", False),
-            ("bmw", False),
-            ("maxscore", True),
-            ("bmw", True),
-        ]
-        lat = {c: [] for c in configs}
+        # kernel comparison: measure every result-identical kernel
+        # INTERLEAVED (kernel inner loop, query outer) so VM drift hits
+        # all kernels equally
+        kernels = ("maxscore", "bmw")
+        lat = {kern: [] for kern in kernels}
         for qid, text in queries:
-            for kern, dm in configs:
+            for kern in kernels:
                 gc.collect()  # release py4j refs so broadcasts don't pile up
                 t0 = time.time()
-                s.search([(qid, text)], k=10, kernel=kern, driver_merge=dm).count()
-                lat[(kern, dm)].append(time.time() - t0)
-        compare = {
-            f"p50_{k}{'_driver_merge' if dm else ''}": round(statistics.median(v), 4)
-            for (k, dm), v in lat.items()
-        }
+                s.search([(qid, text)], k=10, kernel=kern).count()
+                lat[kern].append(time.time() - t0)
+        compare = {f"p50_{kern}": round(statistics.median(v), 4) for kern, v in lat.items()}
         # batch mode: the whole query set in ONE pass over the index (the
         # reference's batch QueryApp shape) — the honest throughput number
-        for kern in ("maxscore", "bmw"):
+        for kern in kernels:
             reps = []
             for _ in range(2):
                 t0 = time.time()
@@ -480,13 +470,13 @@ def main() -> None:
             f"| Indexing throughput | {thr[LOW_PAR]:.0f} docs/s ({thr[LOW_PAR]*scaling_kb/1000:.0f} MB/s) | local[{LOW_PAR}] (N proxy; {SCALING_DOCS}-doc / {scaling_mb:.0f} MB corpus) |\n"
             f"| Indexing throughput | {thr[HIGH_PAR]:.0f} docs/s ({thr[HIGH_PAR]*scaling_kb/1000:.0f} MB/s) | local[{HIGH_PAR}] (4N proxy) |\n"
             f"| Scaling efficiency N→4N | {eff:.3f} | target ≥ 0.8; median of {REPS} PAIRED (N, 4N) ratios {pair_ratios} — pairing cancels the VM's slow-window drift; all reps (docs/s): {all_reps} |\n"
-            f"| Query p50 latency (top-10) | {p50:.3f} s | local[{CPUS}], one search() per query (default config: maxscore kernel, distributed merge) |\n"
+            f"| Query p50 latency (top-10) | {p50:.3f} s | local[{CPUS}], one search() per query (default maxscore kernel) |\n"
             f"| Query batch throughput | {batch_pq:.3f} s/query | whole query set in one pass (reference batch-app shape) |\n"
             f"| Headline suite total | {suite_sec:.1f} s | sum of per-query medians over {HEADLINE_REPS} interleaved suite passes; {len(qtimes)} queries at sf={results['sf']} |\n"
             f"| Index footprint | postings {index_sizes['postings_mb']} MB, fwd {index_sizes['fwd_mb']} MB, dict {index_sizes['dictionary_mb']} MB | {SCALE_DOCS}-doc / {corpus_mb:.0f} MB corpus (compressed postings = {index_sizes['postings_mb']/corpus_mb*100:.0f}% of raw text) |\n"
         )
         f.write(
-            "\nKernel / merge-path comparison (all configs result-identical,"
+            "\nKernel comparison (all kernels result-identical,"
             " interleaved measurement, median over the same query set):\n\n"
             "| config | value |\n|---|---|\n"
             + "".join(
@@ -498,12 +488,8 @@ def main() -> None:
             "fewer postings blocks, but in this engine the decode is a vectorized\n"
             "Arrow/numpy batch while BMW's per-(term, block) cursor advance is\n"
             "Python-side bookkeeping — the skipped decodes cost less than the\n"
-            "bookkeeping that skips them, on both p50 and batch. driver_merge=True\n"
-            "(single-job, driver-side label+merge) also measured slower than the\n"
-            "distributed join+window merge at local[32]; both stay available as\n"
-            "opt-ins (`search(kernel=, driver_merge=)`) since the trade can flip\n"
-            "on clusters where scheduling dominates (very small k, many tiny\n"
-            "shards, high scheduler latency).\n"
+            "bookkeeping that skips them, on both p50 and batch. BMW stays\n"
+            "available as `search(kernel=\"bmw\")`.\n"
         )
         ss = kernel_compare.get("stage_split", {})
         if ss:

@@ -107,8 +107,7 @@ def code_tokenize_arrow(s: pd.Series) -> pd.Series:
     """Arrow-compute implementation of the code tokenizer — the same spec
     as :func:`code_tokenize_pandas` (equality-tested) with every pass in
     C (RE2 replace, utf8_lower, split): ~2× the pandas-str throughput.
-    Used inside the index builder's tokenizer UDF; falls back to the
-    pandas implementation if a pyarrow kernel is unavailable."""
+    Used inside the index builder's tokenizer UDF."""
     import pyarrow as pa
     import pyarrow.compute as pc
 

@@ -14,7 +14,7 @@ Architecture (designed for 10^12-file corpora on a 1000-executor cluster):
   bounded heap per shard and a tiny global merge (SURVEY.md §2.6 K1).
 - **Stage 1 — forward index** (reference §1.3, parsedText mode
   ``ForwardIndex.java:102-108``): ONE pass over the corpus on its input
-  splits — tokenize (vectorized Arrow/pandas UDF), doc_len, per-row
+  splits — tokenize (vectorized Arrow UDF), doc_len, per-row
   sha256(content) invariant — written partitioned by shard. Deliberately
   NO pre-tokenize repartition: shuffling raw ``content`` costs more than
   every downstream step combined (measured ~3x on this corpus); the input
@@ -24,8 +24,8 @@ Architecture (designed for 10^12-file corpora on a 1000-executor cluster):
   rides the same exchange + sort as the write — the DocEntryParsed
   directory (shard, ord) ↔ doc_id is a pruned-column VIEW of this table,
   not a second job.
-- **Stage 2 — inverted index**: ``groupBy(shard).applyInPandas`` over
-  (ord, tokens, doc_len); the kernel hash-factorizes the token stream
+- **Stage 2 — inverted index**: ``groupBy(shard).applyInArrow`` over
+  (ord, tokens, doc_len); the kernel dictionary-encodes the token stream
   (O(n), no object-array sort), collapses (term, ord) pairs to tfs with
   one int64 sort, and emits delta-gap varint blocks + block-max metadata
   in one batch encode (codec.py).
@@ -60,7 +60,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from flexneuart_spark.config import DEFAULT_NUM_SHARDS, MAX_DOC_SIZE
-from flexneuart_spark.functions.tokenize import code_tokenize_pandas
+from flexneuart_spark.functions.tokenize import code_tokenize_arrow
 from flexneuart_spark.index.codec import encode_postings_batch
 
 _POSTINGS_SCHEMA = T.StructType(
@@ -87,12 +87,7 @@ def _tokens_udf(tokenizer: str):
     @F.pandas_udf(T.ArrayType(T.StringType()))
     def tok(content: pd.Series) -> pd.Series:
         if tokenizer == "code":
-            try:
-                from flexneuart_spark.functions.tokenize import code_tokenize_arrow
-
-                out = code_tokenize_arrow(content)
-            except Exception:
-                out = code_tokenize_pandas(content)
+            out = code_tokenize_arrow(content)
         elif tokenizer == "krovetz":
             from flexneuart_spark.functions.tokenize import krovetz_tokenize_pandas
 
@@ -124,17 +119,18 @@ def _arrow_postings_schema():
     )
 
 
-def _shard_postings_kernel_arrow(tbl):
-    """Arrow-native twin of :func:`_shard_postings_kernel` (used via
-    ``applyInArrow`` — Spark 4): the token stream stays in Arrow the whole
-    way. ``list_flatten`` hands us the already-concatenated flat token
-    array (the pandas path pays a per-row object-array conversion plus an
-    ``np.concatenate`` for the same thing), ``dictionary_encode`` runs the
-    factorize in C, and every output column is built zero-copy from the
-    flat codec arrays (``encode_postings_batch(flat=True)``) via
+def _arrow_postings_kernel(tbl):
+    """Build ALL posting lists of one shard in a single vectorized pass
+    (``applyInArrow`` over groupBy(shard); input: ord, tokens, doc_len).
+    The token stream stays in Arrow the whole way: ``list_flatten`` hands
+    over the concatenated token array, ``dictionary_encode`` factorizes it
+    in C (no object-array sort; only the per-shard vocabulary is sorted),
+    (term, ord) pairs collapse to tfs via one int64 argsort +
+    change-point detection, and every output column is built zero-copy
+    from the codec's flat arrays (:func:`encode_postings_batch`) via
     ``ListArray.from_arrays`` / ``Array.from_buffers`` — no per-term
-    Python objects at any point. Equivalence with the pandas kernel is
-    pinned by tests/test_codec.py + the build tests."""
+    Python objects at any point. Ordinals come from the fwd table
+    (stage-1 window: rank of doc_id ascending per shard)."""
     import pyarrow as pa
     import pyarrow.compute as pc
 
@@ -178,7 +174,7 @@ def _shard_postings_kernel_arrow(tbl):
 
     tb = np.flatnonzero(np.r_[True, gcode[1:] != gcode[:-1]])
     tbounds = np.append(tb, len(gcode))
-    enc = encode_postings_batch(gord, tf, gdl, tbounds, flat=True)
+    enc = encode_postings_batch(gord, tf, gdl, tbounds)
     n_terms = len(tb)
 
     payload_all = enc["payload_all"]
@@ -210,77 +206,6 @@ def _shard_postings_kernel_arrow(tbl):
             "block_max_doc": lst(enc["block_max_doc"], pa.int64()),
             "block_max_tf": lst(enc["block_max_tf"], pa.int64()),
             "block_min_dl": lst(enc["block_min_dl"], pa.int64()),
-        }
-    )
-
-
-def _shard_postings_kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-    """Build ALL posting lists of one shard in a single vectorized pass
-    (applyInPandas over groupBy(shard); input: ord, tokens, doc_len).
-
-    The token stream never goes through an object-array sort:
-    ``pd.factorize`` (hash-based, O(n)) maps tokens to codes, the small
-    per-shard vocabulary is sorted once, and (term, ord) pairs collapse to
-    tfs via one int64 argsort + change-point detection. Ordinals come from
-    the fwd table (stage-1 window: rank of doc_id ascending per shard)."""
-    # typed empty frame (a bare {name: []} defaults to float64 columns,
-    # which Arrow refuses to cast to the list-typed schema fields)
-    cols = {
-        f.name: pd.Series(dtype="int32" if f.name == "shard" else "int64" if f.name == "df_shard" else object)
-        for f in _POSTINGS_SCHEMA.fields
-    }
-    if len(pdf) == 0:
-        return pd.DataFrame(cols)
-    shard = int(pdf["shard"].iloc[0])
-    toks = pdf["tokens"].to_numpy(dtype=object)
-    ords = pdf["ord"].to_numpy(dtype=np.int64)
-    dls = pdf["doc_len"].to_numpy(dtype=np.int64)
-    n_docs = len(toks)
-    reps = np.fromiter((len(t) for t in toks), dtype=np.int64, count=n_docs)
-    if not (reps > 0).any():
-        return pd.DataFrame(cols)
-    all_terms = np.concatenate([np.asarray(t, dtype=object) for t in toks if len(t)])
-    all_ords = np.repeat(ords, reps)
-    all_dls = np.repeat(dls, reps)
-
-    codes, uniq = pd.factorize(all_terms)  # O(n) hash; no string sort of the stream
-    uniq = np.asarray(uniq, dtype=object)
-    vorder = np.argsort(uniq)  # vocabulary-size string sort only
-    rank = np.empty(len(uniq), dtype=np.int64)
-    rank[vorder] = np.arange(len(uniq), dtype=np.int64)
-    codes = rank[codes]
-    vocab = uniq[vorder]
-
-    # collapse (term_code, ord) → tf with one integer sort
-    m = np.int64(int(ords.max()) + 1)  # ord values are dense per shard
-    key = codes * m + all_ords
-    o2 = np.argsort(key)
-    ks = key[o2]
-    newpair = np.empty(len(ks), dtype=bool)
-    newpair[0] = True
-    np.not_equal(ks[1:], ks[:-1], out=newpair[1:])
-    starts = np.flatnonzero(newpair)
-    tf = np.diff(np.append(starts, len(ks)))
-    gkey = ks[starts]
-    gcode = gkey // m
-    gord = gkey - gcode * m
-    gdl = all_dls[o2[starts]]
-
-    tb = np.flatnonzero(np.r_[True, gcode[1:] != gcode[:-1]])
-    tbounds = np.append(tb, len(gcode))
-    enc = encode_postings_batch(gord, tf, gdl, tbounds)
-    n_terms = len(tb)
-    return pd.DataFrame(
-        {
-            "shard": np.full(n_terms, shard, dtype=np.int32),
-            "term": vocab[gcode[tb]],
-            "df_shard": enc["df"],
-            "payload": enc["payload"],
-            "block_off": enc["block_off"],
-            "block_n": enc["block_n"],
-            "block_max_doc": enc["block_max_doc"],
-            "block_max_tf": enc["block_max_tf"],
-            "block_min_dl": enc["block_min_dl"],
         }
     )
 
@@ -413,8 +338,8 @@ def auto_num_shards(
 ) -> int:
     """Shard-count sizing rule (the per-shard memory knob).
 
-    The shard postings kernel (``_shard_postings_kernel``) materializes
-    one whole shard's (term, ord, tf, dl) arrays in a single pandas group,
+    The shard postings kernel (``_arrow_postings_kernel``) materializes
+    one whole shard's (term, ord, tf, dl) arrays in a single Arrow group,
     so the peak task memory is ~50 bytes × shard tokens; the shard count —
     not executor count — bounds it. Estimate raw tokens as
     ``total_bytes × compression_factor / bytes_per_token`` (parquet text
@@ -556,16 +481,12 @@ def build_index(
         .parquet(tables.fwd_dir)
     )
 
-    # ---- Stage 2: inverted postings, one vectorized pass per shard.
-    # Arrow-native kernel when the runtime has applyInArrow (Spark 4):
-    # skips the Arrow→pandas object conversion of the token lists — the
-    # flat token values feed dictionary_encode directly. Same output
-    # (schema, order, bytes); pandas kernel kept as the fallback.
-    grouped = fwdp.select("shard", "ord", "doc_len", "tokens").groupBy("shard")
-    if hasattr(grouped, "applyInArrow"):
-        plist = grouped.applyInArrow(_shard_postings_kernel_arrow, _POSTINGS_SCHEMA)
-    else:
-        plist = grouped.applyInPandas(_shard_postings_kernel, _POSTINGS_SCHEMA)
+    # ---- Stage 2: inverted postings, one Arrow-native pass per shard.
+    plist = (
+        fwdp.select("shard", "ord", "doc_len", "tokens")
+        .groupBy("shard")
+        .applyInArrow(_arrow_postings_kernel, _POSTINGS_SCHEMA)
+    )
     (
         plist.sortWithinPartitions("shard", "term")  # row-group stats → term pushdown at query time
         .write.mode("overwrite")
@@ -650,6 +571,13 @@ def _write_control_table(spark: SparkSession, pdf: pd.DataFrame, path: str, sche
     df.coalesce(1).write.mode("overwrite").parquet(path)
 
 
+def bm25_idf(n_docs: int, df: np.ndarray) -> np.ndarray:
+    """idf = ln(1 + (N - df + 0.5)/(df + 0.5))  (BM25SimilarityLucene.java:41-44).
+    Query-time idf (search/engine.py) and the finalize fast path's idf
+    column both come from this one expression."""
+    return np.log(1.0 + (float(n_docs) - df + 0.5) / (df + 0.5))
+
+
 def _finalize(spark: SparkSession, tables: IndexTables) -> None:
     """Idempotent global merge: dictionary (term_id, df, idf) + corpus
     stats, recomputed from ALL shards — resume-safe (no double counting).
@@ -683,8 +611,7 @@ def _finalize(spark: SparkSession, tables: IndexTables) -> None:
         # fast path: sort + dense ids + idf in pandas, one small write
         head = head.sort_values("term", kind="mergesort").reset_index(drop=True)
         head["term_id"] = np.arange(1, len(head) + 1, dtype=np.int64)
-        dfv = head["df"].to_numpy(np.float64)
-        head["idf"] = np.log(1.0 + (float(n_docs) - dfv + 0.5) / (dfv + 0.5))
+        head["idf"] = bm25_idf(n_docs, head["df"].to_numpy(np.float64))
         _write_control_table(
             spark, head[["term", "term_id", "df", "idf"]], tables.dictionary_dir,
             "term string, term_id long, df long, idf double",

@@ -156,7 +156,7 @@ def encode_postings_batch(
     gdl: np.ndarray,
     term_bounds: np.ndarray,
     block: int = POSTING_BLOCK,
-    flat: bool = False,
+    flat: bool = True,
 ) -> dict:
     """Encode MANY terms' postings in one vectorized pass.
 
@@ -168,9 +168,19 @@ def encode_postings_batch(
     varint pass replaces ~10 numpy calls per term, which dominates when
     most terms have short posting lists.
 
-    Returns dict of per-term lists: payload, block_off, block_n,
-    block_max_doc, block_max_tf, block_min_dl, df.
+    Returns the flat layout the Arrow postings kernel builds its columns
+    from zero-copy: ``payload_all`` (every term's payload, adjacent, in
+    term order) with per-term byte offsets ``term_byte_bounds``; the
+    per-block arrays block_off (relative to the term's payload), block_n,
+    block_max_doc, block_max_tf, block_min_dl with per-term block offsets
+    ``term_blk_bounds``; and per-term ``df``. Term *i*'s payload is
+    ``payload_all[term_byte_bounds[i]:term_byte_bounds[i+1]]`` and its
+    blocks are ``[term_blk_bounds[i], term_blk_bounds[i+1])``. ``flat``
+    is accepted for existing callers that pass ``flat=True``; False is
+    rejected — the flat layout is the only one.
     """
+    if not flat:
+        raise ValueError("encode_postings_batch returns only the flat layout")
     gord = np.asarray(gord, dtype=np.int64)
     gtf = np.asarray(gtf, dtype=np.int64)
     gdl = np.asarray(gdl, dtype=np.int64)
@@ -178,21 +188,18 @@ def encode_postings_batch(
     n = len(gord)
     n_terms = len(tb) - 1
     if n == 0:
-        if flat:
-            z64 = np.empty(0, dtype=np.int64)
-            return {
-                "payload_all": b"",
-                "term_byte_bounds": np.zeros(1, dtype=np.int64),
-                "term_blk_bounds": np.zeros(1, dtype=np.int64),
-                "block_off": z64,
-                "block_n": np.empty(0, dtype=np.int32),
-                "block_max_doc": z64,
-                "block_max_tf": z64,
-                "block_min_dl": z64,
-                "df": z64,
-            }
-        empty: dict = {k: [] for k in ("payload", "block_off", "block_n", "block_max_doc", "block_max_tf", "block_min_dl", "df")}
-        return empty
+        z64 = np.empty(0, dtype=np.int64)
+        return {
+            "payload_all": b"",
+            "term_byte_bounds": np.zeros(1, dtype=np.int64),
+            "term_blk_bounds": np.zeros(1, dtype=np.int64),
+            "block_off": z64,
+            "block_n": np.empty(0, dtype=np.int32),
+            "block_max_doc": z64,
+            "block_max_tf": z64,
+            "block_min_dl": z64,
+            "df": z64,
+        }
     if n_terms > 0 and not (np.diff(tb) > 0).all():
         # an empty term slice (df=0) would silently misalign every
         # subsequent term's block metadata/payload slices — mirror
@@ -202,8 +209,7 @@ def encode_postings_batch(
     df = np.diff(tb)
     # position of each posting within its term
     pos_in_term = np.arange(n, dtype=np.int64) - np.repeat(tb[:-1], df)
-    # block index within term, and global block starts
-    blk_in_term = pos_in_term // block
+    # global block starts
     is_blk_start = (pos_in_term % block) == 0
     blk_starts = np.flatnonzero(is_blk_start)           # global index of each block's first posting
     n_blocks_per_term = (df + block - 1) // block
@@ -238,9 +244,8 @@ def encode_postings_batch(
     vends = np.cumsum(vlens)
     vstarts = vends - vlens
 
-    # byte offset where each block starts / ends in the global payload
+    # byte offset where each block starts in the global payload
     blk_byte_start = vstarts[stream_start]
-    blk_byte_end = np.append(blk_byte_start[1:], vends[-1] if len(vends) else 0)
     term_byte_start = blk_byte_start[term_blk_bounds[:-1]]
 
     # per-block metadata via reduceat on posting slices
@@ -249,36 +254,16 @@ def encode_postings_batch(
     block_min_dl = np.minimum.reduceat(gdl, blk_starts)
 
     rel_off = blk_byte_start - term_byte_start[np.repeat(np.arange(n_terms), n_blocks_per_term)]
-    if flat:
-        # zero-copy shape for the Arrow kernel: flat per-block arrays +
-        # the per-term block offsets, plus the ONE contiguous payload
-        # buffer and per-term byte offsets (terms are adjacent in it)
-        term_byte_bounds = np.append(term_byte_start, vends[-1] if len(vends) else 0)
-        return {
-            "payload_all": payload_all,
-            "term_byte_bounds": term_byte_bounds.astype(np.int64),
-            "term_blk_bounds": term_blk_bounds.astype(np.int64),
-            "block_off": rel_off,
-            "block_n": blk_len.astype(np.int32),
-            "block_max_doc": block_max_doc,
-            "block_max_tf": block_max_tf,
-            "block_min_dl": block_min_dl,
-            "df": df,
-        }
-    mv = memoryview(payload_all)
-    # per-term outputs as array VIEWS (np.split), not element-wise
-    # .tolist() — the per-element Python-int conversion dominated kernel
-    # time on vocab-heavy shards; Arrow converts ndarray cells directly
-    pay_start = blk_byte_start[term_blk_bounds[:-1]]
-    pay_end = blk_byte_end[term_blk_bounds[1:] - 1]
-    cuts = term_blk_bounds[1:-1]
+    term_byte_bounds = np.append(term_byte_start, vends[-1])
     return {
-        "payload": [bytes(mv[int(a): int(b)]) for a, b in zip(pay_start, pay_end)],
-        "block_off": np.split(rel_off, cuts),
-        "block_n": np.split(blk_len.astype(np.int32), cuts),
-        "block_max_doc": np.split(block_max_doc, cuts),
-        "block_max_tf": np.split(block_max_tf, cuts),
-        "block_min_dl": np.split(block_min_dl, cuts),
+        "payload_all": payload_all,
+        "term_byte_bounds": term_byte_bounds.astype(np.int64),
+        "term_blk_bounds": term_blk_bounds.astype(np.int64),
+        "block_off": rel_off,
+        "block_n": blk_len.astype(np.int32),
+        "block_max_doc": block_max_doc,
+        "block_max_tf": block_max_tf,
+        "block_min_dl": block_min_dl,
         "df": df,
     }
 

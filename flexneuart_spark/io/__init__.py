@@ -1,5 +1,6 @@
 from flexneuart_spark.io.trec import (  # noqa: F401
     read_qrels,
+    read_queries,
     read_run,
     run_df_from_search,
     write_qrels,

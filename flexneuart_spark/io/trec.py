@@ -38,6 +38,22 @@ def read_qrels(spark: SparkSession, path: str) -> DataFrame:
     )
 
 
+def read_queries(spark: SparkSession, path: str) -> list[tuple[str, str]]:
+    """[(query_id, text)] from a ``.jsonl`` (one object per line), ``.json``
+    (ONE document — an array or object — so read multiLine) or parquet
+    query file. Both columns are cast to string: numeric ids in a JSON
+    file would otherwise come back as longs and never join the string
+    ``query_id`` of the qrels, zeroing every metric without an error."""
+    if path.endswith(".jsonl"):
+        qdf = spark.read.json(path)
+    elif path.endswith(".json"):
+        qdf = spark.read.option("multiLine", True).json(path)
+    else:
+        qdf = spark.read.parquet(path)
+    qdf = qdf.select(F.col("query_id").cast("string"), F.col("text").cast("string"))
+    return [(r.query_id, r.text) for r in qdf.collect()]
+
+
 def write_qrels(qrels: DataFrame, path: str) -> None:
     (
         qrels.select("query_id", F.lit("0"), "doc_id", F.col("grade").cast("string"))

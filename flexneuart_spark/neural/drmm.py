@@ -41,8 +41,8 @@ from flexneuart_spark.neural.embeddings import (
     sql_dot,
     sql_embedding_cte,
 )
-from flexneuart_spark.neural import knrm as _knrm
 from flexneuart_spark.neural.knrm import KNRM
+from flexneuart_spark.neural.pivot import pivot_reduce
 
 # cedr_drmm.py:29 — NBINS = 11; utils.py:79 — the bin rule constants
 NBINS = 11
@@ -72,12 +72,11 @@ def histogram_features(docs_tok: DataFrame, q_tok: DataFrame) -> DataFrame:
     O(corpus·Q) pair rows; corpus-sized work is one equi-join on term +
     two groupBys, both with map-side partial aggregation.
 
-    And like it, the corpus-side join is pivoted: one row per vocab term
-    carrying the Q-vector of bin indices, so the join output stays |tf|
-    rows (never |tf|·Q) and the per-doc histogram reduction is Q·NBINS
-    conditional sums over one ``groupBy(doc_id)`` shuffle; past
-    ``knrm.PIVOT_MAX_QTERMS`` distinct query terms the long
-    (doc_id, qterm) grouping is the fallback."""
+    And like it, the corpus-side join is the shared pivoted reduction
+    (``neural/pivot.py``): the join output stays |tf| rows (never |tf|·Q)
+    and the per-doc histogram is Q·NBINS conditional sums over one
+    ``groupBy(doc_id)`` shuffle, with the long (doc_id, qterm) grouping
+    as the fallback past the pivot's column budget."""
     tf = (
         docs_tok.select("doc_id", F.explode("tokens").alias("term"))
         .groupBy("doc_id", "term")
@@ -94,62 +93,15 @@ def histogram_features(docs_tok: DataFrame, q_tok: DataFrame) -> DataFrame:
     binned = demb.crossJoin(F.broadcast(qemb)).select(
         "term", "qterm", binc.alias("bin")
     )
-    qt_list = sorted(r[0] for r in qt.select("qterm").distinct().collect())
-    nq = len(qt_list)
-    if 0 < nq <= _knrm.PIVOT_MAX_QTERMS:
-        binarr = (
-            binned.groupBy("term")
-            .agg(F.array_sort(F.collect_list(F.struct("qterm", "bin"))).alias("s"))
-            .select("term", F.col("s.bin").alias("_barr"))
-        )
-        dochist = (
-            tf.join(binarr, "term")
-            .groupBy("doc_id")
-            .agg(
-                *[
-                    F.sum(
-                        F.when(F.col("_barr")[qi] == b, F.col("tf")).otherwise(F.lit(0))
-                    ).alias(f"_h_{qi}_{b}")
-                    for qi in range(nq)
-                    for b in range(NBINS)
-                ]
-            )
-        )
-        # docs×Q long form (post-reduction — tiny relative to |tf|·Q)
-        hist = dochist.select(
-            "doc_id",
-            F.explode(
-                F.map_from_arrays(
-                    F.array(*[F.lit(qt) for qt in qt_list]),
-                    F.array(
-                        *[
-                            F.struct(
-                                *[
-                                    F.col(f"_h_{qi}_{b}").alias(f"h{b}")
-                                    for b in range(NBINS)
-                                ]
-                            )
-                            for qi in range(nq)
-                        ]
-                    ),
-                )
-            ).alias("qterm", "_hs"),
-        ).select(
-            "doc_id", "qterm", *[F.col(f"_hs.h{b}").alias(f"h{b}") for b in range(NBINS)]
-        )
-    else:
-        hist = (
-            tf.join(binned, "term")
-            .groupBy("doc_id", "qterm")
-            .agg(
-                *[
-                    F.sum(
-                        F.when(F.col("bin") == b, F.col("tf")).otherwise(F.lit(0))
-                    ).alias(f"h{b}")
-                    for b in range(NBINS)
-                ]
-            )
-        )
+    hist = pivot_reduce(
+        tf,
+        binned,
+        qt,
+        {
+            f"h{b}": (lambda v, b=b: F.sum(F.when(v("bin") == b, F.col("tf")).otherwise(F.lit(0))))
+            for b in range(NBINS)
+        },
+    )
     return (
         hist.join(F.broadcast(qt), "qterm")
         .groupBy("query_id", "doc_id")

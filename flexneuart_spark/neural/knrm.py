@@ -31,17 +31,13 @@ from flexneuart_spark.neural.embeddings import (
     sql_dot,
     sql_embedding_cte,
 )
+from flexneuart_spark.neural.pivot import pivot_reduce
 
 # cedr_knrm.py:28-29
 MUS = [-0.9, -0.7, -0.5, -0.3, -0.1, 0.1, 0.3, 0.5, 0.7, 0.9, 1.0]
 SIGMAS = [0.1] * 10 + [0.001]
 N_KERNELS = len(MUS)
 LOG_FLOOR = 1e-10  # KNRM's soft-TF log clamp
-
-# Above this many distinct query terms the pivoted per-doc reduction
-# (Q·K aggregate columns) gets wider than it is worth; fall back to the
-# long (doc_id, qterm) grouping. 64 terms → 704 sum buffers, still fine.
-PIVOT_MAX_QTERMS = 64
 
 
 # ---------------------------------------------------------------------------
@@ -63,16 +59,12 @@ def kernel_features(docs_tok: DataFrame, q_tok: DataFrame) -> DataFrame:
     corpus-sized work is one equi-join on term + two partial-aggregated
     groupBys.
 
-    Like ``late_interaction.maxsim_scores``, the corpus-side join avoids
-    the ×Q row blowup: the V×Q kernel table is pivoted to one row per
-    vocab term carrying per-kernel arrays over the (sorted, collected)
-    qterm list, so the join output stays |tf| rows and the soft-TF
-    reduction runs as Q·K map-side-combinable sums over one
-    ``groupBy(doc_id)`` shuffle (the long form's |tf|·Q join output is
-    what made MaxSim grow 16.2× on 10× data before its pivot fix). For
-    query batches past ``PIVOT_MAX_QTERMS`` distinct terms the
-    aggregate width would dominate, so the long (doc_id, qterm)
-    grouping is kept as the fallback — correct at any Q.
+    The corpus-side join is the shared pivoted reduction
+    (``neural/pivot.py``): the join output stays |tf| rows (never |tf|·Q)
+    and the soft-TF reduction runs as Q·K map-side-combinable sums over
+    one ``groupBy(doc_id)`` shuffle, with the long (doc_id, qterm)
+    grouping as the fallback past the pivot's column budget (64 query
+    terms at K = 11).
     """
     tf = (
         docs_tok.select("doc_id", F.explode("tokens").alias("term"))
@@ -97,69 +89,12 @@ def kernel_features(docs_tok: DataFrame, q_tok: DataFrame) -> DataFrame:
             for k, (mu, sg) in enumerate(zip(MUS, SIGMAS))
         ],
     )
-    qt_list = sorted(r[0] for r in qt.select("qterm").distinct().collect())
-    nq = len(qt_list)
-    if 0 < nq <= PIVOT_MAX_QTERMS:
-        # pivot: one row per vocab term, per-kernel cosine-RBF arrays in
-        # qt_list order (array_sort on (qterm, ...) structs sorts by
-        # qterm asc — same order as the sorted collected list)
-        kernarr = (
-            kern.groupBy("term")
-            .agg(
-                F.array_sort(
-                    F.collect_list(
-                        F.struct("qterm", *[f"rbf{k}" for k in range(N_KERNELS)])
-                    )
-                ).alias("s")
-            )
-            .select(
-                "term", *[F.col(f"s.rbf{k}").alias(f"_r{k}") for k in range(N_KERNELS)]
-            )
-        )
-        docsoft = (
-            tf.join(kernarr, "term")
-            .groupBy("doc_id")
-            .agg(
-                *[
-                    F.sum(F.col("tf") * F.col(f"_r{k}")[qi]).alias(f"_s_{qi}_{k}")
-                    for qi in range(nq)
-                    for k in range(N_KERNELS)
-                ]
-            )
-        )
-        # docs×Q long form (post-reduction — tiny relative to |tf|·Q)
-        soft = docsoft.select(
-            "doc_id",
-            F.explode(
-                F.map_from_arrays(
-                    F.array(*[F.lit(qt) for qt in qt_list]),
-                    F.array(
-                        *[
-                            F.struct(
-                                *[
-                                    F.col(f"_s_{qi}_{k}").alias(f"k{k}")
-                                    for k in range(N_KERNELS)
-                                ]
-                            )
-                            for qi in range(nq)
-                        ]
-                    ),
-                )
-            ).alias("qterm", "_ks"),
-        ).select(
-            "doc_id", "qterm", *[F.col(f"_ks.k{k}").alias(f"k{k}") for k in range(N_KERNELS)]
-        )
-    else:
-        soft = (
-            tf.join(kern, "term")
-            .groupBy("doc_id", "qterm")
-            .agg(
-                *[
-                    F.sum(F.col("tf") * F.col(f"rbf{k}")).alias(f"k{k}")
-                    for k in range(N_KERNELS)
-                ]
-            )
-        )
+    soft = pivot_reduce(
+        tf,
+        kern,
+        qt,
+        {f"k{k}": (lambda v, k=k: F.sum(F.col("tf") * v(f"rbf{k}"))) for k in range(N_KERNELS)},
+    )
     return (
         soft.join(F.broadcast(qt), "qterm")
         .groupBy("query_id", "doc_id")

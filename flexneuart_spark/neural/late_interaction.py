@@ -35,6 +35,7 @@ from flexneuart_spark.neural.embeddings import (
     sql_dot,
     sql_embedding_cte,
 )
+from flexneuart_spark.neural.pivot import pivot_reduce
 
 
 def maxsim_scores(docs_tok: DataFrame, q_tok: DataFrame) -> DataFrame:
@@ -43,17 +44,13 @@ def maxsim_scores(docs_tok: DataFrame, q_tok: DataFrame) -> DataFrame:
 
     Scale shape: embeddings and cosines are computed ONCE on the
     vocabulary — a V×Q table built by a broadcast nested-loop against
-    the tiny distinct-query-term side — then PIVOTED to one row per
-    vocab term carrying the Q-vector of cosines, so the corpus-scaled
-    (doc_id, term) table is never row-multiplied by Q: the equi-join
-    output stays |dterms| rows and the per-doc MaxSim reduction runs as
-    Q map-side-combinable ``max`` aggregates over one ``groupBy(doc_id)``
-    shuffle. The earlier long form (join the V×Q table directly, then
-    groupBy (query, qterm, doc)) shuffled |dterms|·Q rows — measured
-    16.2× growth on 10× data at sf1 (103 s); the pivoted plan removes
-    the ×Q factor from every corpus-scaled exchange. Only the Q-sized
-    query-term list is collected (the query side is broadcast-tiny by
-    contract everywhere in the engine — ``search/engine.py``).
+    the tiny distinct-query-term side — and reduced per doc by the
+    shared pivoted corpus join (``neural/pivot.py``): the (doc_id, term)
+    table is never row-multiplied by Q, and the per-doc MaxSim is Q
+    map-side-combinable ``max`` aggregates over one ``groupBy(doc_id)``
+    shuffle. (The long form — join the V×Q table directly, then groupBy
+    (doc, qterm) — shuffled |dterms|·Q rows: 16.2× growth on 10× data at
+    sf1, 103 s; it remains the fallback past the pivot's column budget.)
 
     The expensive md5/cos expressions still touch O(V·Q) rows, never
     O(corpus·Q). (A naive cross-join-then-compute re-evaluates 8 md5s
@@ -67,38 +64,7 @@ def maxsim_scores(docs_tok: DataFrame, q_tok: DataFrame) -> DataFrame:
     cos = demb.crossJoin(F.broadcast(qemb)).select(
         "term", "qterm", hash_dot_col(F.col("qemb"), F.col("demb")).alias("cosm")
     )
-
-    # Fixed qterm order for the pivot (tiny driver-side list — one job
-    # over the broadcast-scale query side only, never the corpus).
-    qt_list = sorted(r[0] for r in qterms.select("qterm").distinct().collect())
-    nq = len(qt_list)
-    if nq == 0:  # no query terms: empty result with the contract schema
-        return qterms.crossJoin(dterms.select("doc_id")).select(
-            "query_id", "doc_id", F.lit(0.0).alias("score")
-        )
-
-    # V rows: per vocab term, the cosine against every qterm in qt_list
-    # order (array_sort on (qterm, cosm) structs sorts by qterm asc).
-    cosarr = (
-        cos.groupBy("term")
-        .agg(F.array_sort(F.collect_list(F.struct("qterm", "cosm"))).alias("s"))
-        .select("term", F.col("s.cosm").alias("carr"))
-    )
-
-    joined = dterms.join(cosarr, "term")
-    docmax = joined.groupBy("doc_id").agg(
-        *[F.max(F.col("carr")[i]).alias(f"_m{i}") for i in range(nq)]
-    )
-    # docs×Q long form (post-reduction — tiny relative to |dterms|·Q)
-    best = docmax.select(
-        "doc_id",
-        F.explode(
-            F.map_from_arrays(
-                F.array(*[F.lit(qt) for qt in qt_list]),
-                F.array(*[F.col(f"_m{i}") for i in range(nq)]),
-            )
-        ).alias("qterm", "best"),
-    )
+    best = pivot_reduce(dterms, cos, qterms, {"best": lambda v: F.max(v("cosm"))})
     scored = best.join(F.broadcast(qterms), "qterm")
     return scored.groupBy("query_id", "doc_id").agg(F.sum("best").alias("score"))
 

@@ -282,7 +282,7 @@ def q_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     on rounded score for cross-engine stability."""
     tables = _engine_index(spark, sf_dir)
     s = Searcher(spark, tables, tokenizer="whitespace")
-    run = s.search(DOC_QUERIES, k=ENGINE_BUFFER, pruned=True)
+    run = s.search(DOC_QUERIES, k=ENGINE_BUFFER)
     run = run.select("query_id", F.col("doc_id").cast("long").alias("doc_id"), "score")
     return _rounded_topk(run)
 

@@ -5,11 +5,21 @@ Spark restatement of the reference's batch retrieval path
 SURVEY.md §3.2): the per-query thread pool becomes shard-parallel tasks;
 the whole query batch is evaluated in ONE pass over the index.
 
+A searcher reads a set of independently-built index segments (the
+incremental-ingest layout, flexneuart_spark.streaming); ``Searcher`` is
+the one-segment case of ``SegmentedSearcher``. Corpus stats and df are
+merged exactly across segments, so scores are identical to a single
+monolithic build — possible because posting payloads carry raw (tf, dl)
+and block metadata is avgdl-independent.
+
 Physical plan:
   1. queries tokenized driver-side (the reference also loads all queries
-     into memory — ``BaseQueryApp.java:670``); per-query term slice of the
-     dictionary collected + closed over (broadcast only the slice, never
-     the dictionary — 10^12-file posture, SURVEY.md §7.4);
+     into memory — ``BaseQueryApp.java:670``); the query vocabulary's
+     (term, df) rows are read from every segment's dictionary in one
+     multi-path scan, summed driver-side into the global df and turned
+     into idf with the builder's finalize formula — no shuffle, and only
+     the query slice of the dictionary is ever collected (10^12-file
+     posture, SURVEY.md §7.4);
   2. ``postings.filter(term IN query_vocab)`` — partition keys + parquet
      row-group stats (postings are written sorted by term within shard)
      prune the scan to the query's posting rows only;
@@ -20,48 +30,28 @@ Physical plan:
      the doc map (seg, shard, ord, doc_id);
   5. global top-k merge: window by query, (score desc, doc_id desc).
 
-Warmed searchers cache the postings pre-partitioned by shard, so the
-per-query groupBy needs no exchange — the kernel runs as one
-scan-and-score stage over the cache. An opt-in driver-merge mode
-(``search(driver_merge=True)``, doc map ≤ a warm limit) instead ships
-per-shard doc_id arrays to the kernel as a broadcast and merges the
-≤ k·shards·queries rows driver-side in a single job — result-identical
-(tested) under the (score desc, doc_id desc) tie rule, measured
-comparable on this box, and the natural mode when the caller wants the
-run driver-local anyway.
-
-``SegmentedSearcher`` searches a set of independently-built index
-segments (the incremental-ingest layout, flexneuart_spark.streaming):
-corpus stats and df are merged exactly across segments, so scores are
-identical to a single monolithic build — possible because posting
-payloads carry raw (tf, dl) and block metadata is avgdl-independent.
+``warm()`` caches the doc map and the postings (with their ``seg``
+column) hash-partitioned by shard, so the per-query groupBy needs no
+exchange — the kernel runs as one scan-and-score stage over the cache.
 """
 
 from __future__ import annotations
 
 from collections import Counter
+from functools import reduce
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from flexneuart_spark.config import BM25_B, BM25_K1
 from flexneuart_spark.functions.tokenize import TOKENIZERS
-from flexneuart_spark.index.builder import IndexTables
+from flexneuart_spark.index.builder import IndexTables, bm25_idf
 from flexneuart_spark.search.scoring import TermPostings, bmw_topk, exhaustive_topk, maxscore_topk
 
+# result-identical top-k kernels (equivalence-tested); maxscore is the default
 _KERNELS = {"maxscore": maxscore_topk, "bmw": bmw_topk, "exhaustive": exhaustive_topk}
-
-
-def _resolve_kernel(pruned: bool, kernel: str | None):
-    """``kernel`` names one of the result-identical top-k kernels
-    (maxscore | bmw | exhaustive); when None, ``pruned`` keeps its
-    original meaning (True → maxscore, False → exhaustive)."""
-    if kernel is None:
-        return maxscore_topk if pruned else exhaustive_topk
-    if kernel not in _KERNELS:
-        raise ValueError(f"unknown kernel {kernel!r}; expected one of {sorted(_KERNELS)}")
-    return _KERNELS[kernel]
 
 _SCORED_SCHEMA = "seg int, shard int, query_id string, ord long, score double"
 _EMPTY_RUN_SCHEMA = "query_id string, doc_id string, score double, rank int"
@@ -81,8 +71,8 @@ def _search_frames(
 ) -> DataFrame:
     """Core search over generic frames. ``posts`` must carry
     (seg, shard, term, payload, block_*); ``fwd_ids`` (seg, shard, ord,
-    doc_id). ``kernel`` is one of the scoring kernels (result-identical;
-    see ``_resolve_kernel``)."""
+    doc_id). ``kernel`` is one of the result-identical scoring kernels
+    in ``_KERNELS``."""
     qweights = {
         qid: {t: c * idf[t] * (k1 + 1.0) for t, c in d.items() if t in idf}
         for qid, d in qtf.items()
@@ -126,77 +116,137 @@ def _search_frames(
     )
 
 
-def _search_fast(
-    spark: SparkSession,
-    posts: DataFrame,
-    docmap_bcast,
-    idf: dict[str, float],
-    avgdl: float,
-    qtf: dict[str, dict[str, int]],
-    k: int,
-    k1: float,
-    b: float,
-    kernel,
-) -> DataFrame:
-    """Single-job search: the kernel labels ordinals from the broadcast
-    per-shard doc_id arrays; the ≤ k·shards·queries rows are merged
-    driver-side under the (score desc, doc_id desc) tie rule."""
-    qweights = {
-        qid: {t: c * idf[t] * (k1 + 1.0) for t, c in d.items() if t in idf}
-        for qid, d in qtf.items()
-    }
-    qweights = {qid: d for qid, d in qweights.items() if d}
-    if not qweights:
-        return spark.createDataFrame([], _EMPTY_RUN_SCHEMA)
+class SegmentedSearcher:
+    """Search across N independently-built segments (incremental layout:
+    ``root/segments/<id>/`` each a full IndexTables). Global df/N/avgdl
+    are exact merges, so results are identical to a monolithic build."""
 
-    def score_shard(pdf: pd.DataFrame) -> pd.DataFrame:
-        shard = int(pdf["shard"].iloc[0])
-        ids = docmap_bcast.value.get(shard)
-        if ids is None:
-            raise RuntimeError(
-                f"shard {shard} missing from the warmed doc-id map — the index "
-                "was rebuilt with a different shard layout after warm(); call "
-                "warm() again or use the distributed search path"
-            )
-        by_term = {row.term: row for row in pdf.itertuples(index=False)}
-        out_q, out_d, out_s = [], [], []
-        for qid, wts in qweights.items():
-            entries = [
-                TermPostings(
-                    r.payload, r.block_off, r.block_n,
-                    r.block_max_doc, r.block_max_tf, r.block_min_dl,
-                    w,
-                )
-                for t, w in wts.items()
-                if (r := by_term.get(t)) is not None
-            ]
-            if not entries:
-                continue
-            ords, scores = kernel(entries, k, avgdl, k1, b)
-            out_q.extend([qid] * len(ords))
-            out_d.extend(ids[ords].tolist())
-            out_s.extend(scores.tolist())
-        return pd.DataFrame({"query_id": out_q, "doc_id": out_d, "score": out_s})
+    def __init__(
+        self,
+        spark: SparkSession,
+        segments: list[IndexTables | str],
+        k1: float = BM25_K1,
+        b: float = BM25_B,
+        tokenizer: str = "code",
+    ):
+        if not segments:
+            raise ValueError("no segments")
+        self.spark = spark
+        self.segments = sorted(
+            (IndexTables(s) if isinstance(s, str) else s for s in segments),
+            key=lambda t: t.index_dir,
+        )
+        self.k1, self.b = k1, b
+        self.tokenize = TOKENIZERS[tokenizer]
+        # ONE multi-path read over every segment's 1-row stats table,
+        # summed driver-side — O(1) driver round-trips regardless of
+        # segment count (a thousand-segment index pays one job, not 1000)
+        rows = (
+            spark.read.parquet(*[t.corpus_stats_dir for t in self.segments])
+            .select("n_docs", "total_tokens")
+            .collect()
+        )
+        self.n_docs = sum(int(r.n_docs) for r in rows)
+        self.total_tokens = sum(int(r.total_tokens) for r in rows)
+        self.avgdl = (self.total_tokens / self.n_docs) if self.n_docs else 1.0
+        self._posts: DataFrame | None = None
+        self._docmap: DataFrame | None = None
+        self._idf_cache: dict[str, float] | None = None
 
-    rows = (
-        posts.groupBy("shard")
-        .applyInPandas(score_shard, "query_id string, doc_id string, score double")
-        .collect()
-    )
-    byq: dict[str, list] = {}
-    for r in rows:
-        byq.setdefault(r.query_id, []).append((r.doc_id, float(r.score)))
-    out = []
-    for qid, lst in byq.items():
-        lst.sort(key=lambda t: t[0], reverse=True)   # doc_id desc (stable)
-        lst.sort(key=lambda t: t[1], reverse=True)   # then score desc
-        out.extend((qid, d, s, rank + 1) for rank, (d, s) in enumerate(lst[:k]))
-    if not out:
-        return spark.createDataFrame([], _EMPTY_RUN_SCHEMA)
-    return spark.createDataFrame(out, _EMPTY_RUN_SCHEMA)
+    def _union(self, read) -> DataFrame:
+        """``read(tables)`` of every segment, tagged with its ``seg`` number."""
+        return reduce(
+            DataFrame.unionByName,
+            [read(t).withColumn("seg", F.lit(i)) for i, t in enumerate(self.segments)],
+        )
+
+    def _read_postings(self) -> DataFrame:
+        return self._union(lambda t: t.postings(self.spark))
+
+    def _read_docmap(self) -> DataFrame:
+        return self._union(lambda t: t.docmap(self.spark).select("shard", "ord", "doc_id"))
+
+    def _read_term_df(self) -> DataFrame:
+        """Every segment's (term, df) dictionary rows, in ONE multi-path read."""
+        return self.spark.read.parquet(*[t.dictionary_dir for t in self.segments]).select("term", "df")
+
+    def _global_idf(self, term_df) -> dict[str, float]:
+        """idf from per-segment (term, df) rows: df summed over segments
+        driver-side, then the builder's finalize formula."""
+        df: Counter = Counter()
+        for term, n in term_df:
+            df[term] += int(n)
+        idf = bm25_idf(self.n_docs, np.fromiter(df.values(), dtype=np.float64, count=len(df)))
+        return dict(zip(df, idf.tolist()))
+
+    def warm(self, max_dict_terms: int = 2_000_000) -> "SegmentedSearcher":
+        """Pin the doc map AND the postings in executor memory and, when
+        the segments' dictionaries hold at most ``max_dict_terms`` rows,
+        cache term→idf driver-side — repeated searches then skip the
+        per-query metadata job and the parquet listing/scan (the
+        reference holds its whole index + idf cache in memory for the
+        batch too, TFIDFSimilarity.java:48-58; Lucene relies on the OS
+        page cache). Re-warming releases the previous caches (safe after
+        the index was rebuilt)."""
+        for cached in (self._docmap, self._posts):
+            if cached is not None:
+                cached.unpersist()
+        self._docmap = self._read_docmap().persist()
+        self._docmap.count()
+        # cache the postings ALREADY hash-partitioned by shard: the
+        # per-query groupBy(seg, shard) then needs no exchange — the whole
+        # search kernel runs as one scan-and-score stage over the cache.
+        # fewer, bigger cache partitions = fewer task round trips per
+        # query (the p50 floor is task scheduling, not compute); 16 still
+        # saturates the batch path, whose kernel loops all queries per task
+        npart = min(16, self.spark.sparkContext.defaultParallelism)
+        self._posts = self._read_postings().repartition(npart, "shard").persist()
+        self._posts.count()
+        head = self._read_term_df().limit(max_dict_terms + 1).collect()
+        self._idf_cache = self._global_idf(head) if len(head) <= max_dict_terms else None
+        return self
+
+    def _prep(self, queries: list[tuple[str, str]]) -> tuple[dict[str, dict[str, int]], dict[str, float]]:
+        """Query prep shared by every search: tokenize → per-query term
+        counts → vocabulary → global idf of the vocabulary's indexed terms."""
+        qtoks = {qid: self.tokenize(text) for qid, text in queries}
+        # empty queries drop out (LuceneCandidateProvider.java:125-126)
+        qtf = {qid: dict(Counter(toks)) for qid, toks in qtoks.items() if toks}
+        vocab = sorted({t for d in qtf.values() for t in d})
+        if not vocab:
+            return qtf, {}
+        if self._idf_cache is not None:
+            return qtf, {t: self._idf_cache[t] for t in vocab if t in self._idf_cache}
+        return qtf, self._global_idf(self._read_term_df().filter(F.col("term").isin(vocab)).collect())
+
+    def search(
+        self,
+        queries: list[tuple[str, str]],
+        k: int = 10,
+        kernel: str = "maxscore",
+    ) -> DataFrame:
+        """queries: [(query_id, text)] → run DataFrame
+        (query_id, doc_id, score, rank) under the reference tie rule.
+
+        ``kernel`` picks the per-shard top-k kernel by name
+        ("maxscore" | "bmw" | "exhaustive" — result-identical,
+        equivalence-tested)."""
+        if kernel not in _KERNELS:
+            raise ValueError(f"unknown kernel {kernel!r}; expected one of {sorted(_KERNELS)}")
+        qtf, idf = self._prep(queries)
+        if not idf:
+            return self.spark.createDataFrame([], _EMPTY_RUN_SCHEMA)
+        posts = self._posts if self._posts is not None else self._read_postings()
+        docmap = self._docmap if self._docmap is not None else self._read_docmap()
+        return _search_frames(
+            self.spark, posts.filter(F.col("term").isin(sorted(idf))), docmap,
+            idf, self.avgdl, qtf, k, self.k1, self.b, _KERNELS[kernel],
+        )
 
 
-class Searcher:
+class Searcher(SegmentedSearcher):
+    """BM25 top-k over one index: the single-segment SegmentedSearcher."""
+
     def __init__(
         self,
         spark: SparkSession,
@@ -206,9 +256,6 @@ class Searcher:
         tokenizer: str = "code",
         adaptive: bool | None = None,
     ):
-        self.spark = spark
-        self.tables = IndexTables(index) if isinstance(index, str) else index
-        self.k1, self.b = k1, b
         if adaptive is not None:
             # interactive top-k jobs are a handful of tiny stages; AQE's
             # per-stage re-planning round trips roughly double their
@@ -218,204 +265,5 @@ class Searcher:
             # leave the session untouched) so that library-internal
             # Searcher construction never flips the caller's AQE.
             spark.conf.set("spark.sql.adaptive.enabled", str(bool(adaptive)).lower())
-        self.tokenize = TOKENIZERS[tokenizer]
-        self.n_docs, self.total_tokens, self.avgdl = self.tables.stats(spark)
-        self._fwd_ids = None
-        self._posts = None
-        self._idf_cache: dict[str, float] | None = None
-        self._docmap_bcast = None
-        self._n_map = 0
-        self._max_docmap_docs = 0
-
-    def warm(self, max_dict_terms: int = 2_000_000, max_docmap_docs: int = 5_000_000) -> "Searcher":
-        """Pin the (shard, ord, doc_id) projection AND the postings table
-        in executor memory and, when the dictionary is small enough, cache
-        term→idf driver-side — repeated searches then skip the per-query
-        metadata jobs and the parquet listing/scan (the reference holds
-        its whole index + idf cache in memory for the batch too,
-        TFIDFSimilarity.java:48-58; Lucene relies on the OS page cache).
-
-        ``max_docmap_docs`` bounds the lazily-built doc-map broadcast used
-        by ``search(driver_merge=True)``. Re-warming releases the previous
-        caches and broadcast (safe after the index was rebuilt)."""
-        if self._fwd_ids is not None:
-            self._fwd_ids.unpersist()
-        if self._posts is not None:
-            self._posts.unpersist()
-        if self._docmap_bcast is not None:
-            self._docmap_bcast.unpersist()
-            self._docmap_bcast = None
-        self._fwd_ids = (
-            self.tables.docmap(self.spark).select("shard", "ord", "doc_id").withColumn("seg", F.lit(0)).persist()
-        )
-        self._n_map = self._fwd_ids.count()
-        self._max_docmap_docs = max_docmap_docs
-        # cache the postings ALREADY hash-partitioned by shard: the
-        # per-query groupBy(shard) then needs no exchange — the whole
-        # search kernel runs as one scan-and-score stage over the cache.
-        # fewer, bigger cache partitions = fewer task round trips per
-        # query (the p50 floor is task scheduling, not compute); 16 still
-        # saturates the batch path, whose kernel loops all queries per task
-        npart = min(16, self.spark.sparkContext.defaultParallelism)
-        self._posts = self.tables.postings(self.spark).repartition(npart, "shard").persist()
-        self._posts.count()
-        head = self.tables.dictionary(self.spark).select("term", "idf").limit(max_dict_terms + 1).collect()
-        if len(head) <= max_dict_terms:
-            self._idf_cache = {r.term: float(r.idf) for r in head}
-        return self
-
-    def _docmap_broadcast(self):
-        if self._docmap_bcast is None:
-            if self._fwd_ids is None or not (0 < self._n_map <= self._max_docmap_docs):
-                return None
-            import numpy as np
-
-            rows = self._fwd_ids.select("shard", "ord", "doc_id").collect()
-            by_shard: dict[int, list] = {}
-            for r in rows:
-                by_shard.setdefault(int(r.shard), []).append((int(r.ord), r.doc_id))
-            shard_ids = {
-                s: np.array([d for _, d in sorted(pairs)], dtype=object)
-                for s, pairs in by_shard.items()
-            }
-            self._docmap_bcast = self.spark.sparkContext.broadcast(shard_ids)
-        return self._docmap_bcast
-
-    def _query_tf(self, queries: list[tuple[str, str]]) -> dict[str, dict[str, int]]:
-        qtoks = {qid: self.tokenize(text) for qid, text in queries}
-        # empty queries drop out (LuceneCandidateProvider.java:125-126)
-        return {qid: dict(Counter(toks)) for qid, toks in qtoks.items() if toks}
-
-    def search(
-        self,
-        queries: list[tuple[str, str]],
-        k: int = 10,
-        pruned: bool = True,
-        driver_merge: bool = False,
-        kernel: str | None = None,
-    ) -> DataFrame:
-        """queries: [(query_id, text)] → run DataFrame
-        (query_id, doc_id, score, rank) under the reference tie rule.
-
-        ``kernel`` picks the per-shard top-k kernel by name
-        ("maxscore" | "bmw" | "exhaustive" — result-identical,
-        equivalence-tested); default follows ``pruned``.
-
-        ``driver_merge=True`` (warmed searchers, doc map within the warm
-        limit) labels/merges the ≤ k·shards·queries rows driver-side in a
-        single Spark job — result-identical (tested); measured comparable
-        to the default distributed join + window plan, kept as an option
-        for driver-local post-processing."""
-        qtf = self._query_tf(queries)
-        vocab = sorted({t for d in qtf.values() for t in d})
-        if not vocab:
-            return self.spark.createDataFrame([], _EMPTY_RUN_SCHEMA)
-        if self._idf_cache is not None:
-            idf = {t: self._idf_cache[t] for t in vocab if t in self._idf_cache}
-        else:
-            dic = (
-                self.tables.dictionary(self.spark)
-                .filter(F.col("term").isin(vocab))
-                .select("term", "idf")
-                .collect()
-            )
-            idf = {r.term: float(r.idf) for r in dic}
-        live = [t for t in vocab if t in idf]
-        if not live:
-            return self.spark.createDataFrame([], _EMPTY_RUN_SCHEMA)
-        posts_src = self._posts if self._posts is not None else self.tables.postings(self.spark)
-        if driver_merge and (bcast := self._docmap_broadcast()) is not None:
-            return _search_fast(
-                self.spark,
-                posts_src.filter(F.col("term").isin(live)),
-                bcast,
-                idf, self.avgdl, qtf, k, self.k1, self.b,
-                _resolve_kernel(pruned, kernel),
-            )
-        posts = posts_src.filter(F.col("term").isin(live)).withColumn("seg", F.lit(0))
-        fwd_ids = self._fwd_ids if self._fwd_ids is not None else (
-            self.tables.docmap(self.spark)
-            .select("shard", "ord", "doc_id")
-            .withColumn("seg", F.lit(0))
-        )
-        return _search_frames(
-            self.spark, posts, fwd_ids, idf, self.avgdl, qtf, k, self.k1, self.b,
-            _resolve_kernel(pruned, kernel),
-        )
-
-
-class SegmentedSearcher:
-    """Search across N independently-built segments (incremental layout:
-    ``root/segments/<id>/`` each a full IndexTables). Global df/N/avgdl
-    are exact merges, so results are identical to a monolithic build."""
-
-    def __init__(
-        self,
-        spark: SparkSession,
-        segment_dirs: list[str],
-        k1: float = BM25_K1,
-        b: float = BM25_B,
-        tokenizer: str = "code",
-    ):
-        if not segment_dirs:
-            raise ValueError("no segments")
-        self.spark = spark
-        self.tables = [IndexTables(p) for p in sorted(segment_dirs)]
-        self.k1, self.b = k1, b
-        self.tokenize = TOKENIZERS[tokenizer]
-        # ONE multi-path read over every segment's 1-row stats table —
-        # O(1) driver round-trips regardless of segment count (a
-        # thousand-segment incremental index pays one job, not 1000)
-        agg = (
-            spark.read.parquet(*[t.corpus_stats_dir for t in self.tables])
-            .agg(F.sum("n_docs").alias("nd"), F.sum("total_tokens").alias("tt"))
-            .collect()[0]
-        )
-        self.n_docs = int(agg.nd or 0)
-        self.total_tokens = int(agg.tt or 0)
-        self.avgdl = (self.total_tokens / self.n_docs) if self.n_docs else 1.0
-
-    def search(
-        self,
-        queries: list[tuple[str, str]],
-        k: int = 10,
-        pruned: bool = True,
-        kernel: str | None = None,
-    ) -> DataFrame:
-        import math
-
-        qtoks = {qid: self.tokenize(text) for qid, text in queries}
-        qtf = {qid: dict(Counter(toks)) for qid, toks in qtoks.items() if toks}
-        vocab = sorted({t for d in qtf.values() for t in d})
-        if not vocab:
-            return self.spark.createDataFrame([], _EMPTY_RUN_SCHEMA)
-        # exact global df merge across segments — ONE multi-path read +
-        # groupBy, a single collect of ≤|vocab| rows however many
-        # segments exist (no per-segment driver round-trips)
-        df_glob: Counter = Counter()
-        merged = (
-            self.spark.read.parquet(*[t.dictionary_dir for t in self.tables])
-            .filter(F.col("term").isin(vocab))
-            .groupBy("term")
-            .agg(F.sum("df").alias("df"))
-            .collect()
-        )
-        for r in merged:
-            df_glob[r.term] = int(r.df)
-        if not df_glob:
-            return self.spark.createDataFrame([], _EMPTY_RUN_SCHEMA)
-        idf = {
-            t: math.log(1.0 + (self.n_docs - df + 0.5) / (df + 0.5)) for t, df in df_glob.items()
-        }
-        live = sorted(idf)
-        posts = None
-        fwd_ids = None
-        for i, t in enumerate(self.tables):
-            p = t.postings(self.spark).filter(F.col("term").isin(live)).withColumn("seg", F.lit(i))
-            f_ = t.docmap(self.spark).select("shard", "ord", "doc_id").withColumn("seg", F.lit(i))
-            posts = p if posts is None else posts.unionByName(p)
-            fwd_ids = f_ if fwd_ids is None else fwd_ids.unionByName(f_)
-        return _search_frames(
-            self.spark, posts, fwd_ids, idf, self.avgdl, qtf, k, self.k1, self.b,
-            _resolve_kernel(pruned, kernel),
-        )
+        super().__init__(spark, [index], k1, b, tokenizer)
+        self.tables = self.segments[0]

@@ -27,18 +27,6 @@ import json
 import sys
 
 
-def _read_queries(spark, path: str) -> list[tuple[str, str]]:
-    if path.endswith(".jsonl"):
-        qdf = spark.read.json(path)
-    elif path.endswith(".json"):
-        # a .json file is typically ONE document (array or object), not
-        # line-delimited — multiLine parses both; .jsonl stays line mode
-        qdf = spark.read.option("multiLine", True).json(path)
-    else:
-        qdf = spark.read.parquet(path)
-    return [(r.query_id, r.text) for r in qdf.select("query_id", "text").collect()]
-
-
 def _kv_pairs(items: list[str], flag: str) -> dict[str, str]:
     out: dict[str, str] = {}
     for it in items:
@@ -69,7 +57,7 @@ def main() -> None:
     from pyspark.sql import SparkSession
 
     from flexneuart_spark.exper import run_experiment
-    from flexneuart_spark.io.trec import read_qrels
+    from flexneuart_spark.io.trec import read_qrels, read_queries
 
     # validate BEFORE any Spark work: a training descriptor without
     # training queries would otherwise fail deep inside the trainer
@@ -92,8 +80,8 @@ def main() -> None:
         spark,
         args.descriptor,
         index=index,
-        train_queries=_read_queries(spark, args.train_queries) if args.train_queries else [],
-        test_queries=_read_queries(spark, args.test_queries),
+        train_queries=read_queries(spark, args.train_queries) if args.train_queries else [],
+        test_queries=read_queries(spark, args.test_queries),
         qrels=read_qrels(spark, args.qrels),
         out_dir=args.output,
         tokenizer=args.tokenizer,

@@ -3,7 +3,7 @@
 
     spark-submit --py-files dist/flexneuart_spark.zip \\
         scripts/query_job.py --index <index-dir> \\
-        --queries <jsonl-or-parquet with query_id,text> \\
+        --queries <json, jsonl or parquet with query_id,text> \\
         --output <run-dir> --k 100 [--run-id my_run]
 """
 
@@ -27,15 +27,11 @@ def main() -> None:
 
     from pyspark.sql import SparkSession
 
-    from flexneuart_spark.io.trec import write_run
+    from flexneuart_spark.io.trec import read_queries, write_run
     from flexneuart_spark.search.engine import Searcher
 
     spark = SparkSession.builder.appName("flexneuart_query").getOrCreate()
-    if args.queries.endswith(".jsonl") or args.queries.endswith(".json"):
-        qdf = spark.read.json(args.queries)
-    else:
-        qdf = spark.read.parquet(args.queries)
-    queries = [(r.query_id, r.text) for r in qdf.select("query_id", "text").collect()]
+    queries = read_queries(spark, args.queries)
     s = Searcher(spark, args.index, tokenizer=args.tokenizer)
     run = s.search(queries, k=args.k, kernel=args.kernel)
     write_run(run, args.output, run_id=args.run_id)

@@ -53,7 +53,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 os.environ.setdefault("SPARK_DRIVER_MEM", "64g")
 
 BASE_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count()))
 FACTOR = int(os.environ.get("SPARK_GRAFT_SCALE_FACTOR", "10"))
 SCALE_DOCS = int(os.environ.get("SPARK_GRAFT_BENCH_DOCS", "120000")) * FACTOR
 CHUNK = 100_000

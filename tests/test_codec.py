@@ -81,6 +81,17 @@ def test_strictly_ascending_required():
         encode_postings(np.array([3, 3]), np.array([1, 1]), np.array([1, 1]))
 
 
+def _term(batch: dict, i: int) -> dict:
+    """Term ``i``'s slice of encode_postings_batch's flat output, in
+    encode_postings' per-term shape."""
+    b0, b1 = batch["term_blk_bounds"][i], batch["term_blk_bounds"][i + 1]
+    p0, p1 = batch["term_byte_bounds"][i], batch["term_byte_bounds"][i + 1]
+    out = {k: list(batch[k][b0:b1]) for k in ("block_off", "block_n", "block_max_doc", "block_max_tf", "block_min_dl")}
+    out["payload"] = batch["payload_all"][p0:p1]
+    out["df"] = int(batch["df"][i])
+    return out
+
+
 def test_batch_encoder_equals_per_term():
     """encode_postings_batch over many terms == encode_postings per term
     (randomized: varied list lengths incl. >1 block, big ords/tfs/dls)."""
@@ -96,15 +107,10 @@ def test_batch_encoder_equals_per_term():
         bounds.append(bounds[-1] + df)
     cat = lambda xs: np.concatenate(xs)
     batch = encode_postings_batch(cat(gord), cat(gtf), cat(gdl), np.array(bounds))
+    assert len(batch["term_blk_bounds"]) == len(batch["term_byte_bounds"]) == len(gord) + 1
+    assert batch["term_byte_bounds"][-1] == len(batch["payload_all"])
     for i in range(len(gord)):
-        ref = encode_postings(gord[i], gtf[i], gdl[i])
-        assert batch["payload"][i] == ref["payload"], i
-        assert list(batch["block_off"][i]) == list(ref["block_off"]), i
-        assert list(batch["block_n"][i]) == list(ref["block_n"]), i
-        assert list(batch["block_max_doc"][i]) == list(ref["block_max_doc"]), i
-        assert list(batch["block_max_tf"][i]) == list(ref["block_max_tf"]), i
-        assert list(batch["block_min_dl"][i]) == list(ref["block_min_dl"]), i
-        assert batch["df"][i] == ref["df"], i
+        assert _term(batch, i) == encode_postings(gord[i], gtf[i], gdl[i]), i
 
 
 def test_batch_encoder_empty():
@@ -112,7 +118,9 @@ def test_batch_encoder_empty():
 
     z = np.empty(0, dtype=np.int64)
     out = encode_postings_batch(z, z, z, np.array([0]))
-    assert out["payload"] == []
+    assert out["payload_all"] == b""
+    assert list(out["term_byte_bounds"]) == list(out["term_blk_bounds"]) == [0]
+    assert len(out["df"]) == len(out["block_n"]) == 0
 
 
 # ---------------------------------------------------------------------------
@@ -160,8 +168,7 @@ def test_postings_roundtrip_property(rows):
     from flexneuart_spark.index.codec import encode_postings_batch
 
     batch = encode_postings_batch(ords, tfs, dls, np.array([0, len(ords)]))
-    assert batch["payload"][0] == enc["payload"]
-    assert list(batch["block_off"][0]) == list(enc["block_off"])
+    assert _term(batch, 0) == enc
 
 
 def test_batch_encoder_rejects_empty_term_slice():

@@ -200,12 +200,18 @@ def test_build_and_search_with_krovetz_tokenizer(spark, tmp_path_factory):
     assert {r.doc_id.split(":")[1].split("@")[0] for r in run} == {"p0", "p1"}
 
 
-def test_arrow_kernel_equals_pandas_kernel(spark, tmp_path_factory):
-    # the two stage-2 kernels must produce byte-identical postings tables
+def test_arrow_kernel_equals_reference_encoder(spark, tmp_path_factory):
+    # every (shard, term) row of the stage-2 Arrow kernel must equal the
+    # per-term reference encoder (codec.encode_postings) run on that
+    # term's (ord, tf, doc_len) postings counted in plain Python
+    from collections import Counter
+
+    from pyspark.sql import Window
     from pyspark.sql import functions as F
 
     from flexneuart_spark.fixtures import make_corpus
     from flexneuart_spark.index import builder as B
+    from flexneuart_spark.index.codec import encode_postings
 
     corpus = spark.createDataFrame(make_corpus(150, 11))
     docs = B.derive_doc_id(corpus).withColumn(
@@ -217,8 +223,6 @@ def test_arrow_kernel_equals_pandas_kernel(spark, tmp_path_factory):
         .withColumn("doc_len", F.size("tokens").cast("long"))
         .select("shard", "doc_id", "tokens", "doc_len")
     )
-    from pyspark.sql import Window
-
     fwdp = (
         fwd.repartition(4, "shard")
         .sortWithinPartitions("shard", "doc_id")
@@ -226,14 +230,20 @@ def test_arrow_kernel_equals_pandas_kernel(spark, tmp_path_factory):
         .select("shard", "ord", "doc_len", "tokens")
         .persist()
     )
-    a = fwdp.groupBy("shard").applyInArrow(B._shard_postings_kernel_arrow, B._POSTINGS_SCHEMA)
-    p = fwdp.groupBy("shard").applyInPandas(B._shard_postings_kernel, B._POSTINGS_SCHEMA)
-    ra = sorted(map(tuple, a.collect()))
-    rp = sorted(map(tuple, p.collect()))
-    assert len(ra) == len(rp) > 0
-    for x, y in zip(ra, rp):
-        assert x == y  # byte-identical payloads + identical metadata
+    postings: dict[tuple[int, str], list[tuple[int, int, int]]] = {}
+    for r in fwdp.collect():
+        for term, tf in Counter(r.tokens).items():
+            postings.setdefault((r.shard, term), []).append((r.ord, tf, r.doc_len))
+    got = fwdp.groupBy("shard").applyInArrow(B._arrow_postings_kernel, B._POSTINGS_SCHEMA).collect()
     fwdp.unpersist()
+    assert len(got) == len(postings) > 0
+    for row in got:
+        ords, tfs, dls = zip(*sorted(postings[(row.shard, row.term)]))
+        ref = encode_postings(ords, tfs, dls)
+        assert row.payload == ref["payload"], (row.shard, row.term)
+        assert row.df_shard == ref["df"]
+        for col in ("block_off", "block_n", "block_max_doc", "block_max_tf", "block_min_dl"):
+            assert list(getattr(row, col)) == list(ref[col]), (row.shard, row.term, col)
 
 
 def test_estimate_corpus_bytes_file_backed(spark, tmp_path_factory):

@@ -152,3 +152,33 @@ def test_read_run_rejects_short_lines(spark, tmp_path):
     got = read_run(spark, str(p)).collect()
     assert {(r.query_id, r.doc_id) for r in got} == {("q1", "d1"), ("q2", "d1")}
     assert all(r.score is not None and r.run_id is not None for r in got)
+
+
+def test_numeric_query_ids_in_json_file(spark, tmp_path):
+    """A ``.json`` query file (one JSON array) with NUMERIC query ids:
+    read_queries must return string ids, so the run joins the string
+    query_id of TREC qrels and metrics come out non-zero."""
+    import json
+
+    from flexneuart_spark.fixtures import make_corpus
+    from flexneuart_spark.index.builder import build_index
+    from flexneuart_spark.io.trec import read_queries
+    from flexneuart_spark.search.engine import Searcher
+
+    qfile = tmp_path / "queries.json"
+    qfile.write_text(json.dumps([
+        {"query_id": 1, "text": "def return class"},
+        {"query_id": 22, "text": "import numpy"},
+    ], indent=2))  # pretty-printed: a line-mode JSON reader sees only fragments
+    queries = read_queries(spark, str(qfile))
+    assert sorted(queries) == [("1", "def return class"), ("22", "import numpy")]
+
+    idx = build_index(spark, spark.createDataFrame(make_corpus(60, 7)), str(tmp_path / "idx"), num_shards=2)
+    run = Searcher(spark, idx).search(queries, k=5)
+    top = {r.query_id: r.doc_id for r in run.filter("rank = 1").collect()}
+    assert set(top) == {"1", "22"}
+    qrels_path = tmp_path / "qrels.txt"
+    qrels_path.write_text("".join(f"{q} 0 {d} 1\n" for q, d in top.items()))
+    metrics = fx_eval.evaluate(run, read_qrels(spark, str(qrels_path)))
+    assert metrics["map"] == pytest.approx(1.0)
+    assert metrics["mrr"] == pytest.approx(1.0)

@@ -1,21 +1,22 @@
 """Pivoted vs long-form corpus-join equivalence for the neural heads.
 
-``knrm.kernel_features`` / ``drmm.histogram_features`` pivot the V×Q
-kernel/bin table to one array-carrying row per vocab term before the
+``late_interaction.maxsim_scores``, ``knrm.kernel_features`` and
+``drmm.histogram_features`` share ``pivot.pivot_reduce``, which pivots
+the V×Q pair table to one array-carrying row per vocab term before the
 corpus join (so no corpus-scaled exchange is ×Q row-multiplied — the
 blowup that made the pre-pivot MaxSim grow 16.2× on 10× data). Past
-``knrm.PIVOT_MAX_QTERMS`` distinct query terms they fall back to the
-long (doc_id, qterm) grouping. These tests pin that the two plans are
+``pivot.PIVOT_MAX_AGGS`` aggregate columns it falls back to the long
+(doc_id, qterm) grouping. These tests pin that the two plans are
 VALUE-equivalent, on corpora with repeated terms, qtf>1, docs disjoint
 from the query vocabulary, single-term docs and multi-query batches —
-forcing the long form by dropping the threshold to 0.
+forcing the long form by dropping the budget to 0.
 """
 
 from __future__ import annotations
 
 import pytest
 
-from flexneuart_spark.neural import knrm as knrm_mod
+from flexneuart_spark.neural import pivot as pivot_mod
 from flexneuart_spark.neural.drmm import NBINS, histogram_features
 from flexneuart_spark.neural.knrm import N_KERNELS, kernel_features
 from flexneuart_spark.neural.late_interaction import maxsim_scores
@@ -44,6 +45,10 @@ def _corpus(spark):
     return docs, qs
 
 
+def _plan(df) -> str:
+    return df._jdf.queryExecution().optimizedPlan().toString()
+
+
 def _rows(df, cols):
     return {
         (r.query_id, r.doc_id): [getattr(r, c) for c in cols]
@@ -56,14 +61,19 @@ def _rows(df, cols):
     [
         (kernel_features, [f"phi{k}" for k in range(N_KERNELS)]),
         (histogram_features, [f"phi{b}" for b in range(NBINS)]),
+        (maxsim_scores, ["score"]),
     ],
-    ids=["knrm", "drmm"],
+    ids=["knrm", "drmm", "maxsim"],
 )
 def test_pivot_equals_long_form(spark, monkeypatch, fn, cols):
     docs, qs = _corpus(spark)
-    pivot = _rows(fn(docs, qs), cols)
-    monkeypatch.setattr(knrm_mod, "PIVOT_MAX_QTERMS", 0)  # force long form
-    long = _rows(fn(docs, qs), cols)
+    pivot_df = fn(docs, qs)
+    monkeypatch.setattr(pivot_mod, "PIVOT_MAX_AGGS", 0)  # force long form
+    long_df = fn(docs, qs)
+    # the two calls really took the two plans
+    assert "map_from_arrays" in _plan(pivot_df)
+    assert "map_from_arrays" not in _plan(long_df)
+    pivot, long = _rows(pivot_df, cols), _rows(long_df, cols)
     assert set(pivot) == set(long)
     for key in pivot:
         for a, b in zip(pivot[key], long[key]):

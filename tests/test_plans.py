@@ -63,7 +63,7 @@ def test_build_is_single_shuffle(spark, tmp_path_factory):
     from flexneuart_spark.config import MAX_DOC_SIZE
     from flexneuart_spark.index.builder import (
         _POSTINGS_SCHEMA,
-        _shard_postings_kernel,
+        _arrow_postings_kernel,
         _tokens_udf,
         derive_doc_id,
     )
@@ -93,8 +93,8 @@ def test_build_is_single_shuffle(spark, tmp_path_factory):
     fwdp = fwd.persist()
     try:
         fwdp.count()
-        plist = fwdp.select("shard", "ord", "doc_len", "tokens").groupBy("shard").applyInPandas(
-            _shard_postings_kernel, _POSTINGS_SCHEMA
+        plist = fwdp.select("shard", "ord", "doc_len", "tokens").groupBy("shard").applyInArrow(
+            _arrow_postings_kernel, _POSTINGS_SCHEMA
         )
         p2 = _plan(plist)
         # cached partitioning satisfies the groupBy clustering: no exchange
@@ -107,19 +107,40 @@ def test_build_is_single_shuffle(spark, tmp_path_factory):
         fwdp.unpersist()
 
 
-def test_warmed_query_has_no_exchange_before_kernel(spark, tables):
-    """Warmed searcher: postings cached pre-partitioned by shard → the
-    per-query scoring kernel stage needs no exchange over the cache."""
-    from flexneuart_spark.search.engine import Searcher
+def test_warmed_query_has_no_exchange_before_kernel(spark, tables, tmp_path_factory):
+    """Warmed searchers — one index, and two segments — cache the postings
+    pre-partitioned by shard, so a real search()'s scoring kernel reads
+    the cache with no exchange in between; warmed, unwarmed and the
+    monolithic index return the same run."""
+    from flexneuart_spark.search.engine import SegmentedSearcher, Searcher
 
-    s = Searcher(spark, tables).warm()
-    posts = s._posts.filter(F.col("term").isin(["def", "return"]))
-    scored = posts.groupBy("shard").applyInPandas(
-        lambda pdf: pdf[["shard"]].head(1), "shard int"
-    )
-    p = _plan(scored)
-    assert "InMemoryTableScan" in p, p
-    assert "Exchange" not in p.split("InMemoryTableScan")[0], p
+    corpus = make_corpus(150, 42)
+    segs = []
+    for i, part in enumerate((corpus.iloc[:70], corpus.iloc[70:])):
+        d = str(tmp_path_factory.mktemp(f"plan_seg{i}"))
+        build_index(spark, spark.createDataFrame(part), d, num_shards=4)
+        segs.append(d)
+    queries = [("q1", "def return"), ("q2", "import numpy class"), ("q3", "self self value")]
+
+    def run(searcher):
+        return sorted(map(tuple, searcher.search(queries, k=5).collect()))
+
+    mono = run(Searcher(spark, tables))
+    assert mono
+    for cold, warmed in (
+        (Searcher(spark, tables), Searcher(spark, tables).warm()),
+        (SegmentedSearcher(spark, segs), SegmentedSearcher(spark, segs).warm()),
+    ):
+        p = _plan(warmed.search(queries, k=5))
+        kernel_input = p.split("FlatMapGroupsInPandas", 1)[1].split("InMemoryTableScan", 1)
+        assert len(kernel_input) == 2, p  # the kernel reads the postings cache
+        assert "Exchange" not in kernel_input[0], p
+        want = run(cold)
+        assert run(warmed) == want
+        # ids and ranks exact; scores to float-summation order (the
+        # segments' blocks differ from the monolithic index's)
+        assert [r[:2] + r[3:] for r in want] == [r[:2] + r[3:] for r in mono]
+        assert [r[2] for r in want] == pytest.approx([r[2] for r in mono], rel=1e-9)
 
 
 def test_neural_entries_plan_shape(spark):

@@ -46,7 +46,7 @@ def _collect_run(df):
 
 def test_engine_pruned_rank_identity(spark, setup):
     tables, qlist, golden, _, _ = setup
-    run = _collect_run(Searcher(spark, tables).search(qlist, k=K, pruned=True))
+    run = _collect_run(Searcher(spark, tables).search(qlist, k=K))
     for qid, want in golden.items():
         got = run.get(qid, [])
         assert_rank_identical(got, want)
@@ -54,7 +54,7 @@ def test_engine_pruned_rank_identity(spark, setup):
 
 def test_engine_exhaustive_rank_identity(spark, setup):
     tables, qlist, golden, _, _ = setup
-    run = _collect_run(Searcher(spark, tables).search(qlist, k=K, pruned=False))
+    run = _collect_run(Searcher(spark, tables).search(qlist, k=K, kernel="exhaustive"))
     for qid, want in golden.items():
         assert_rank_identical(run.get(qid, []), want)
 
@@ -94,26 +94,22 @@ def test_empty_query_returns_nothing(spark, setup):
         assert qid not in run
 
 
-def test_driver_merge_path_identical(spark, setup):
-    """The opt-in single-job driver-merge path (broadcast doc map) must be
-    row-identical to the distributed join + window plan AND to the oracle
-    golden run."""
+def test_cold_warm_oracle_identity(spark, setup):
+    """A warmed searcher (cached postings + doc map + idf) must be
+    row-identical to a cold one reading parquet, AND rank-identical to
+    the oracle golden run — for every kernel."""
     tables, qlist, golden, _, _ = setup
     cold = Searcher(spark, tables, tokenizer="code")
     warmed = Searcher(spark, tables, tokenizer="code").warm()
-    run_cold = _collect_run(cold.search(qlist, k=K))
-    run_dist = _collect_run(warmed.search(qlist, k=K))
-    run_fast = _collect_run(warmed.search(qlist, k=K, driver_merge=True))
-    assert warmed._docmap_bcast is not None  # broadcast built lazily
-    assert run_fast == run_dist == run_cold
-    for qid, want in golden.items():
-        assert_rank_identical(run_fast.get(qid, []), want)
+    assert warmed._idf_cache is not None
+    for kernel in ("maxscore", "bmw", "exhaustive"):
+        run_warm = _collect_run(warmed.search(qlist, k=K, kernel=kernel))
+        assert run_warm == _collect_run(cold.search(qlist, k=K, kernel=kernel)), kernel
+        for qid, want in golden.items():
+            assert_rank_identical(run_warm.get(qid, []), want)
 
 
-def test_driver_merge_respects_docmap_limit(spark, setup):
-    tables, qlist, golden, _, _ = setup
-    s = Searcher(spark, tables, tokenizer="code").warm(max_docmap_docs=1)
-    run = _collect_run(s.search(qlist, k=K, driver_merge=True))
-    assert s._docmap_bcast is None  # over limit → distributed plan used
-    for qid, want in golden.items():
-        assert_rank_identical(run.get(qid, []), want)
+def test_unknown_kernel_rejected(spark, setup):
+    tables, qlist, _, _, _ = setup
+    with pytest.raises(ValueError, match="unknown kernel"):
+        Searcher(spark, tables).search(qlist, k=K, kernel="wand")
