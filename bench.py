@@ -48,6 +48,7 @@ TMP = "/dev/shm" if os.path.isdir("/dev/shm") else None
 LOW_PAR, HIGH_PAR = 1, 4
 SCALING_DOCS = int(os.environ.get("SPARK_GRAFT_BENCH_SCALING_DOCS", "60000"))
 HEADLINE_REPS = int(os.environ.get("SPARK_GRAFT_BENCH_HEADLINE_REPS", "3"))
+SCALE_CHECK = "BENCH/SCALE_CHECK.json"
 
 HEADLINE = [
     "bm25_topk",
@@ -277,7 +278,12 @@ def measure_query_p50(spark, corpus_path: str) -> tuple[float, float, dict, dict
             "fwd_mb": round(_dir_mb(t.fwd_dir), 1),
             "dictionary_mb": round(_dir_mb(t.dictionary_dir), 1),
         }
-        s = Searcher(spark, idx, adaptive=False).warm()
+        # interactive top-k jobs are a handful of tiny stages; AQE's
+        # per-stage re-planning round trips roughly double their latency
+        # (measured 2x p50 on the bench corpus), so the latency session
+        # runs without it — set here, on the bench's own session
+        spark.conf.set("spark.sql.adaptive.enabled", "false")
+        s = Searcher(spark, idx).warm()
         queries = [
             (r.query_id, r.text)
             for r in make_queries(21, seed=43).itertuples(index=False)
@@ -320,36 +326,6 @@ def measure_query_p50(spark, corpus_path: str) -> tuple[float, float, dict, dict
         shutil.rmtree(idx, ignore_errors=True)
 
 
-def measure_assign_compare(reps: int = 3) -> dict:
-    """Interleaved medians for the IVF/PQ assignment strategies
-    (results pytest-pinned identical): "udf" = Arrow/BLAS narrow map
-    (default — shuffle-free, the huge-N shape), "window" = broadcast
-    join + window (the DuckDB oracle's literal shape). Runs in its OWN
-    session: the p50 searcher's cached in-memory postings otherwise
-    leave the JVM heap-pressured and the comparison measures GC, not
-    the strategies."""
-    import time as _t
-
-    from flexneuart_spark.operators import similarity
-
-    spark = _spark(f"local[{CPUS}]", CPUS)
-    try:
-        emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
-        qids = [0, 1, 2, 3, 4]
-        out: dict[str, list[float]] = {}
-        for rep in range(reps + 1):  # rep 0 warms workers/JIT, then measure
-            for mode in ("udf", "window"):
-                t0 = _t.time()
-                similarity.pq_topk(emb, qids, k=5, assign=mode).count()
-                out.setdefault(f"pq_topk_{mode}", []).append(round(_t.time() - t0, 3))
-                t0 = _t.time()
-                similarity.ivfpq_topk(emb, qids, k=5, assign=mode).count()
-                out.setdefault(f"ivfpq_topk_{mode}", []).append(round(_t.time() - t0, 3))
-        return {k: sorted(v[1:])[len(v[1:]) // 2] for k, v in out.items()}
-    finally:
-        spark.stop()
-
-
 def main() -> None:
     # ---- synthetic bench corpus (deterministic, written once) ----
     from flexneuart_spark.fixtures import make_corpus_scaled
@@ -383,7 +359,6 @@ def main() -> None:
     suite_sec = round(sum(qtimes.values()), 3)
     p50, batch_pq, index_sizes, kernel_compare = measure_query_p50(spark, corpus_path)
     spark.stop()
-    assign_compare = measure_assign_compare()
     shutil.rmtree(corpus_dir, ignore_errors=True)
 
     avg_kb = corpus_mb * 1000.0 / SCALE_DOCS
@@ -414,21 +389,19 @@ def main() -> None:
         "index_sizes_mb": index_sizes,
         "query_batch_sec_per_query": round(batch_pq, 4),
         "kernel_compare": kernel_compare,
-        "assign_compare": assign_compare,
     }
 
     # ---- 10x scale check (scripts/scale_bench.py) ----
     # the sf1 run takes ~1 h standalone (a 1.2 M-doc local[1] build), so
-    # it is measured out-of-band and its committed artifact embedded here
-    # — BENCH_r{N}.json carries both scale factors; measured_at_commit
+    # it is measured out-of-band; the printed line names the committed
+    # artifact by path (embedding it made the line unparseable for its
+    # consumers), and BASELINE.md renders its table. measured_at_commit
     # pins which code produced the numbers
-    if os.path.exists("BENCH/SCALE_CHECK.json"):
-        with open("BENCH/SCALE_CHECK.json") as f:
-            results["scale_check"] = json.load(f)
-
     scale_md = ""
-    if "scale_check" in results:
-        sc = results["scale_check"]
+    if os.path.exists(SCALE_CHECK):
+        results["scale_check"] = SCALE_CHECK
+        with open(SCALE_CHECK) as f:
+            sc = json.load(f)
         rows = "".join(
             f"| {q} | {sc['headline']['base']['measured'][q]} | "
             f"{sc['headline']['scaled']['measured'][q]} | {g} |\n"
@@ -516,21 +489,6 @@ def main() -> None:
                 "across the whole query set), not from a faster kernel.\n"
             )
         f.write(
-            "\nIVF/PQ assignment-strategy comparison (results pytest-pinned"
-            " identical; interleaved medians, warm-up rep dropped):\n\n"
-            "| config | value |\n|---|---|\n"
-            + "".join(f"| {k} | {v} s |\n" for k, v in assign_compare.items())
-            + "\nWhy the Arrow/BLAS path (`assign='udf'`) is the default: it\n"
-            "measures at-par-or-faster across interleaved A/Bs (strictly\n"
-            "faster in low-noise sessions: pq 2.93 vs 4.19 s, ivfpq 4.98 vs\n"
-            "5.32 s medians) AND it is the only shape that survives huge\n"
-            "corpora — nearest-centroid/codeword assignment against driver-sized\n"
-            "tables as one matmul per Arrow batch, instead of shuffling\n"
-            "N·n_cells (or N·m·n_codes) joined rows through a per-id window.\n"
-            "The join+window form stays available as the explicit relational\n"
-            "twin of the DuckDB oracle.\n"
-        )
-        f.write(
             f"\nPer-query seconds (median of {HEADLINE_REPS} interleaved suite"
             " passes; rep 0 of the bm25 entries pays the one-time engine index"
             " build, so the median reads steady state):\n\n"
@@ -583,9 +541,10 @@ def main() -> None:
             "  shuffle + equi-join, edge set localCheckpoint-ed per round so the\n"
             "  detector DAG runs once.\n"
             "- emb_pq_ann: codebooks are m*n_codes subvectors (broadcast-sized\n"
-            "  regardless of corpus size); encode is one broadcast join + per-vec\n"
-            "  argmin; ADC scoring joins 8-bit-scale code labels to a per-query\n"
-            "  LUT and aggregates map-side — storage 8*m bits/vec vs 32*d raw.\n"
+            "  regardless of corpus size); encode is one Arrow-batched matmul +\n"
+            "  argmin per batch (no join, no shuffle); ADC scoring joins\n"
+            "  8-bit-scale code labels to a per-query LUT and aggregates\n"
+            "  map-side — storage 8*m bits/vec vs 32*d raw.\n"
             "- emb_ivfpq_ann: coarse cells prune the scan (probed cells only —\n"
             "  the persisted variant prunes PARTITIONS of the codes table);\n"
             "  residual-PQ LUTs are broadcast-sized; per-vector cost is a code\n"

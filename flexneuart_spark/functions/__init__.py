@@ -1,7 +1,6 @@
 from flexneuart_spark.functions.tokenize import (  # noqa: F401
     code_tokenize,
     code_tokens_col,
-    code_tokenize_pandas,
     sha256_hex_col,
     whitespace_tokenize,
     whitespace_tokens_col,

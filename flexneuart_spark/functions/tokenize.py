@@ -17,11 +17,12 @@ the role of the reference's upstream text processors
   3. lowercase;
   4. whitespace-split, dropping empty tokens.
 
-Three implementations share this spec and are tested for equality:
-a plain-Python one (used by the single-process numpy oracle), a vectorized
-pandas one (used inside Arrow/pandas UDFs — no per-row Python at the Spark
-layer), and a JVM column-expression chain (regexp_replace + split, fully
-inside whole-stage codegen — the fast path for the relational formulation).
+Three implementations share this spec and are tested for equality with
+the plain-Python one (used by query prep and the single-process numpy
+oracle): an Arrow-compute one (the index builder's tokenizer UDF body — no
+per-row Python at the Spark layer), and a JVM column-expression chain
+(regexp_replace + split, fully inside whole-stage codegen — the fast path
+for the relational formulation).
 """
 
 from __future__ import annotations
@@ -31,7 +32,6 @@ import re
 import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 _CAMEL = r"([a-z0-9])([A-Z])"
 _NONALNUM = r"[^a-zA-Z0-9]+"
@@ -72,24 +72,6 @@ def code_tokenize(text: str) -> list[str]:
     return [t for t in s.split() if t]
 
 
-def code_tokenize_pandas(s: pd.Series) -> pd.Series:
-    """Vectorized pandas implementation (Arrow/pandas-UDF body).
-
-    Returns a Series of lists of str. Equal to :func:`code_tokenize`
-    element-wise (tested).
-    """
-    s = s.fillna("")
-    s = s.str.replace(_CAMEL, r"\1 \2", regex=True)
-    s = s.str.replace(_NONALNUM, " ", regex=True)
-    s = s.str.lower()
-    return s.str.split()
-
-
-@F.pandas_udf(T.ArrayType(T.StringType()))
-def code_tokenize_udf(s: pd.Series) -> pd.Series:
-    return code_tokenize_pandas(s)
-
-
 def code_tokens_col(col: Column | str) -> Column:
     """JVM column-expression code tokenizer (whole-stage codegen path).
 
@@ -105,9 +87,9 @@ def code_tokens_col(col: Column | str) -> Column:
 
 def code_tokenize_arrow(s: pd.Series) -> pd.Series:
     """Arrow-compute implementation of the code tokenizer — the same spec
-    as :func:`code_tokenize_pandas` (equality-tested) with every pass in
-    C (RE2 replace, utf8_lower, split): ~2× the pandas-str throughput.
-    Used inside the index builder's tokenizer UDF."""
+    as :func:`code_tokenize` (equality-tested) with every pass in C (RE2
+    replace, utf8_lower, split). Used inside the index builder's
+    tokenizer UDF."""
     import pyarrow as pa
     import pyarrow.compute as pc
 

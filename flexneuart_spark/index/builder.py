@@ -372,7 +372,6 @@ def build_index(
     resume: bool = False,
     only_shards: list[int] | None = None,
     max_doc_size: int = MAX_DOC_SIZE,
-    store_positions: bool = True,
     pretokenized: bool = False,
 ) -> IndexTables:
     """Build (or resume) the index. ``only_shards`` restricts the build to
@@ -388,8 +387,7 @@ def build_index(
     rebuilds from stored forward indexes without re-tokenizing.
 
     The fwd table always stores the full token sequence (positional /
-    parsedText mode — proximity scoring needs no rebuild);
-    ``store_positions`` is accepted for API stability and ignored."""
+    parsedText mode — proximity scoring needs no rebuild)."""
     tables = IndexTables(index_dir)
     build_id = uuid.uuid4().hex[:12]
 
@@ -526,9 +524,11 @@ def build_index(
     return tables
 
 
-# Vocabularies up to this size take the collect→pandas finalize fast path
-# (3 Spark jobs fewer); larger ones use the fully-distributed id assignment.
-_SMALL_VOCAB = 2_000_000
+# Vocabularies up to this size are driver-sized: finalize takes the
+# collect→pandas fast path (3 Spark jobs fewer; larger ones use the
+# fully-distributed id assignment), and a warmed searcher caches the whole
+# term→idf map driver-side.
+SMALL_VOCAB = 2_000_000
 
 
 def _write_control_table(spark: SparkSession, pdf: pd.DataFrame, path: str, schema: str) -> None:
@@ -601,13 +601,13 @@ def _finalize(spark: SparkSession, tables: IndexTables) -> None:
     posts = spark.read.schema(_POSTINGS_SCHEMA).parquet(tables.postings_dir)
     # global df merge: ≤ num_shards rows per term — skew-free by construction
     dic = posts.groupBy("term").agg(F.sum("df_shard").alias("df"))
-    head = dic.limit(_SMALL_VOCAB + 1).toPandas()
+    head = dic.limit(SMALL_VOCAB + 1).toPandas()
     if len(head) == 0:
         spark.createDataFrame([], "term string, term_id long, df long, idf double").coalesce(
             1
         ).write.mode("overwrite").parquet(tables.dictionary_dir)
         return
-    if len(head) <= _SMALL_VOCAB:
+    if len(head) <= SMALL_VOCAB:
         # fast path: sort + dense ids + idf in pandas, one small write
         head = head.sort_values("term", kind="mergesort").reset_index(drop=True)
         head["term_id"] = np.arange(1, len(head) + 1, dtype=np.int64)

@@ -36,7 +36,7 @@ production speed, semantics are identical).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from flexneuart_spark.functions.tokenize import whitespace_tokens_col
@@ -54,6 +54,19 @@ def _ordered_pairs(ids):
                 lambda y: F.struct(F.element_at(ids, i).alias("id_a"), y.alias("id_b")),
             ),
         )
+    )
+
+
+def _bucket_pairs(buckets: DataFrame, max_bucket_size: int | None) -> DataFrame:
+    """The shared tail of the capped candidate generators: keep buckets
+    of ≥ 2 ids, drop the ones past ``max_bucket_size`` (the skew/memory
+    guard — ``None`` opts out), and expand each sorted ``ids`` array into
+    its (id_a < id_b) pairs in-map. One row per (bucket, pair)."""
+    buckets = buckets.filter(F.size("ids") >= 2)
+    if max_bucket_size is not None:
+        buckets = buckets.filter(F.size("ids") <= max_bucket_size)
+    return buckets.select(F.explode(_ordered_pairs(F.col("ids"))).alias("p")).select(
+        F.col("p.id_a"), F.col("p.id_b")
     )
 
 
@@ -245,21 +258,11 @@ def minhash_lsh_candidates(
     one task. A bucket that big is never a useful near-dup signal anyway
     (band collision probability ≈ sim^band_size, so genuine near-dup
     buckets are tiny). ``oversized_buckets`` audits what the cap drops."""
-    sig = minhash_signatures(df, text_col, id_col, n, num_hashes)
-    band = sig.withColumn("band_idx", F.floor(F.col("hash_idx") / band_size).cast("int"))
-    bands = band.groupBy(id_col, "band_idx").agg(
-        F.concat_ws("|", F.sort_array(F.collect_list("minhash"))).alias("band_key")
-    )
     # bucket-grouped pair expansion (no self-join — one shuffle, see
     # jaccard_near_duplicates for the pattern)
-    buckets = bands.groupBy("band_idx", "band_key").agg(
-        F.sort_array(F.collect_list(id_col)).alias("ids")
-    ).filter(F.size("ids") >= 2)
-    if max_bucket_size is not None:
-        buckets = buckets.filter(F.size("ids") <= max_bucket_size)
+    buckets = minhash_band_buckets(df, text_col, id_col, n, num_hashes, band_size)
     return (
-        buckets.select(F.explode(_ordered_pairs(F.col("ids"))).alias("p"))
-        .select(F.col("p.id_a"), F.col("p.id_b"))
+        _bucket_pairs(buckets, max_bucket_size)
         .groupBy("id_a", "id_b")
         .agg(F.count("*").cast("long").alias("n_bands_shared"))
     )
@@ -436,39 +439,7 @@ def simhash_near_duplicates(
     if k < max_hamming + 1:
         raise ValueError("need at least max_hamming+1 blocks for exact recall")
     sig = simhash(df, text_col, id_col, bits)
-    width = bits // k
-    rem = bits - width * k  # first `rem` blocks get one extra bit
-    # block boundaries as literals (bits is small and fixed)
-    bounds = []
-    pos = 1
-    for i in range(k):
-        w = width + (1 if i < rem else 0)
-        bounds.append((pos, w))
-        pos += w
-    blocks = sig.select(
-        F.col(id_col),
-        "simhash",
-        F.explode(
-            F.array(*[
-                F.struct(
-                    F.lit(i).alias("block_idx"),
-                    F.substring("simhash", p, w).alias("block_val"),
-                )
-                for i, (p, w) in enumerate(bounds)
-            ])
-        ).alias("b"),
-    ).select(id_col, "simhash", F.col("b.block_idx"), F.col("b.block_val"))
-    buckets = blocks.groupBy("block_idx", "block_val").agg(
-        F.sort_array(F.collect_list(F.struct(F.col(id_col).alias("id"), F.col("simhash").alias("sh")))).alias("rows")
-    ).filter(F.size("rows") >= 2)
-    if max_bucket_size is not None:
-        buckets = buckets.filter(F.size("rows") <= max_bucket_size)
-    ids = F.transform("rows", lambda r: r["id"])
-    pairs = (
-        buckets.select(F.explode(_ordered_pairs(ids)).alias("p"))
-        .select(F.col("p.id_a"), F.col("p.id_b"))
-        .distinct()
-    )
+    pairs = _bucket_pairs(_simhash_blocks(sig, id_col, bits, k), max_bucket_size).distinct()
     sa = sig.select(F.col(id_col).alias("id_a"), F.col("simhash").alias("sh_a"))
     sb = sig.select(F.col(id_col).alias("id_b"), F.col("simhash").alias("sh_b"))
     # exact Hamming distance over the '0'/'1' strings (JVM expression)
@@ -498,9 +469,16 @@ def simhash_block_buckets(
     ``simhash_near_duplicates`` expands — feed to
     :func:`oversized_buckets` for the cap audit."""
     k = n_blocks if n_blocks is not None else max_hamming + 1
-    sig = simhash(df, text_col, id_col, bits)
+    return _simhash_blocks(simhash(df, text_col, id_col, bits), id_col, bits, k)
+
+
+def _simhash_blocks(sig: DataFrame, id_col: str, bits: int, k: int) -> DataFrame:
+    """(block_idx, block_val, ids) from a (id, simhash) signature frame:
+    the ``bits``-wide signature split into ``k`` contiguous blocks (the
+    first ``bits mod k`` get one extra bit), grouped by block value."""
     width = bits // k
     rem = bits - width * k
+    # block boundaries as literals (bits is small and fixed)
     bounds = []
     pos = 1
     for i in range(k):
@@ -567,30 +545,8 @@ def embedding_lsh_candidates(
     (id_a < id_b) pairs only (no vectors): join vectors back by id so
     the exploded band table stays narrow.
     """
-    v = F.transform(F.col(vec_col), lambda x: x.cast("double"))
-    nbits = n_bands * band_bits
-    bits = F.transform(
-        F.slice(v, 1, nbits), lambda x: F.when(x >= 0, F.lit("1")).otherwise(F.lit("0"))
-    )
-    sig = emb.select(F.col(id_col), bits.alias("bits"))
-    bands = sig.select(
-        F.col(id_col),
-        "bits",
-        F.explode(F.sequence(F.lit(0), F.lit(n_bands - 1))).alias("band_idx"),
-    ).withColumn(
-        "band_key",
-        F.concat_ws("", F.slice("bits", F.col("band_idx") * band_bits + 1, band_bits)),
-    ).select(id_col, "band_idx", "band_key")
-    buckets = bands.groupBy("band_idx", "band_key").agg(
-        F.sort_array(F.collect_list(id_col)).alias("ids")
-    ).filter(F.size("ids") >= 2)
-    if max_bucket_size is not None:
-        buckets = buckets.filter(F.size("ids") <= max_bucket_size)
-    return (
-        buckets.select(F.explode(_ordered_pairs(F.col("ids"))).alias("p"))
-        .select(F.col("p.id_a"), F.col("p.id_b"))
-        .distinct()
-    )
+    buckets = embedding_band_buckets(emb, id_col, vec_col, n_bands, band_bits)
+    return _bucket_pairs(buckets, max_bucket_size).distinct()
 
 
 def embedding_band_buckets(

@@ -21,8 +21,8 @@ Spark plan:
 - ``ivf_topk`` — IVF-style coarse quantization: centroids are the
   ``n_cells`` vectors with the smallest md5(id) (deterministic, valid for
   string ids); every vector is assigned to its nearest centroid
-  (broadcast centroid join); queries probe their ``nprobe`` nearest
-  cells. Exact within the probed cells.
+  (Arrow-batched BLAS map, centroids in the UDF closure); queries probe
+  their ``nprobe`` nearest cells. Exact within the probed cells.
 - ``pq_train`` / ``pq_encode`` / ``pq_topk`` — product quantization
   (Jégou et al. 2011): per-subspace codebooks, 8·m bits per vector,
   asymmetric-distance (ADC) scoring through per-query LUTs.
@@ -39,6 +39,7 @@ import pandas as pd
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegerType, StructField, StructType
 
 
 def _as_double(vec_col: str):
@@ -225,21 +226,20 @@ def ivf_centroids(
 
 
 def _probe_cells_udf(cents_rows: list, nprobe: int = 1):
-    """Arrow-batched nearest-cells assignment: the centroids (n_cells
-    rows — driver-sized by contract) ship in the UDF closure as one
-    numpy matrix; each batch is ONE BLAS matmul. This replaces the
-    crossJoin + corpus-wide row_number window, whose N·n_cells-row
-    shuffle partitioned by id was the dominant data movement of every
-    IVF-family operator at scale — and at a realistic cell count
-    (IVF wants ~√N cells) the matmul also beats any per-row expression
-    form on CPU. Ordering matches the window's (cos desc, cell asc)
-    tie rule: centroid rows are pre-sorted by cell and a STABLE argsort
-    keeps the lower cell on exact ties. The per-row |v| factor is
-    dropped (constant across cells — identical ordering). BLAS sums in
-    a different order than the SQL twin's sequential fold, so two cells
-    whose cosines agree to ~1e-14 could in principle rank either way —
-    the rp_ann boundary-mass argument: negligible for real data, and
-    the oracle entries pin it on the test corpora."""
+    """Arrow-batched nearest-cells assignment — the ONE nearest-cell
+    ranking of the IVF family: the centroids (n_cells rows —
+    driver-sized by contract) ship in the UDF closure as one numpy
+    matrix; each batch is ONE BLAS matmul. A narrow map: no crossJoin,
+    no corpus-wide row_number window over N·n_cells rows, and at a
+    realistic cell count (IVF wants ~√N cells) the matmul also beats any
+    per-row expression form on CPU. Ordering is the DuckDB oracle's
+    (cos desc, cell asc) tie rule: centroid rows are pre-sorted by cell
+    and a STABLE argsort keeps the lower cell on exact ties. The per-row
+    |v| factor is dropped (constant across cells — identical ordering).
+    BLAS sums in a different order than the SQL twin's sequential fold,
+    so two cells whose cosines agree to ~1e-14 could in principle rank
+    either way — the rp_ann boundary-mass argument: negligible for real
+    data, and the oracle entries pin it on the test corpora."""
     from pyspark.sql.functions import pandas_udf
 
     rows = sorted(cents_rows, key=lambda r: r.cell)
@@ -260,24 +260,10 @@ def _probe_cells_udf(cents_rows: list, nprobe: int = 1):
     return _probe
 
 
-DEFAULT_ASSIGN = "udf"  # interleaved A/B at sf0.1: udf (Arrow/BLAS) beats window — and it is the shuffle-free huge-N path
-
-
-def _assign_cells_window(e: DataFrame, cents: DataFrame, id_col: str, nprobe: int) -> DataFrame:
-    """Join+window nearest-cells form — the DuckDB oracle's literal
-    shape. Shuffles N·n_cells rows partitioned by id; kept as the
-    explicit relational twin of the oracle and for environments without
-    Python workers — the default is the shuffle-free Arrow path, which
-    also measured faster (interleaved medians at sf0.1)."""
-    scored = e.crossJoin(F.broadcast(cents)).withColumn(
-        "cos", _dot("v", "cv") / (F.col("nrm") * F.col("cn"))
-    )
-    w = Window.partitionBy(id_col).orderBy(F.desc("cos"), F.asc("cell"))
-    return (
-        scored.withColumn("r", F.row_number().over(w))
-        .filter(F.col("r") <= nprobe)
-        .select(id_col, "cell", "r")
-    )
+def _empty_frame(df: DataFrame, fields: list) -> DataFrame:
+    """A 0-row frame with the given schema fields — the result of an
+    assignment over empty input (no centroid/codebook rows to rank)."""
+    return df.sparkSession.createDataFrame([], StructType(fields))
 
 
 def ivf_train(
@@ -286,40 +272,26 @@ def ivf_train(
     n_iter: int = 2,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    assign: str = DEFAULT_ASSIGN,
 ) -> DataFrame:
     """Lloyd k-means training for the IVF coarse quantizer: init = the
     md5-hash-picked vectors (:func:`ivf_centroids`), then ``n_iter``
-    rounds of assign (broadcast centroids, cosine argmax) + recompute
-    (per-cell per-position mean via posexplode/groupBy — one shuffle per
-    round, map-side combined). Centroid coordinates are rounded to 6
-    decimals each round, which makes the result independent of partial-
-    aggregation order (double sums of group-sized inputs agree to ~1e-12,
-    far inside the rounding) — so the training has an exact SQL twin.
-    Cells that lose all members drop out (standard Lloyd behaviour).
-    ``assign``: "udf" (:func:`_probe_cells_udf`, the shuffle-free
-    Arrow/BLAS path — measured faster AND the only shape that holds at
-    ≫10⁷ vectors or realistic ~√N cell counts) or "window"
-    (join+window, the oracle's literal shape). Returns (cell, cv, cn)."""
-    e = emb.select(F.col(id_col), _as_double(vec_col).alias("v")).withColumn("nrm", _norm("v"))
+    rounds of assign (:func:`_probe_cells_udf`, cosine argmax) +
+    recompute (per-cell per-position mean via posexplode/groupBy — one
+    shuffle per round, map-side combined). Centroid coordinates are
+    rounded to 6 decimals each round, which makes the result independent
+    of partial-aggregation order (double sums of group-sized inputs agree
+    to ~1e-12, far inside the rounding) — so the training has an exact
+    SQL twin. Cells that lose all members drop out (standard Lloyd
+    behaviour). Empty input returns the empty initial model. Returns
+    (cell, cv, cn)."""
+    e = emb.select(F.col(id_col), _as_double(vec_col).alias("v"))
     cents = ivf_centroids(emb, n_cells, id_col, vec_col)
     for _ in range(n_iter):
-        # empty centroid table (degenerate/empty input): the window form
-        # below lazily yields an empty frame; the UDF closure can't stack
-        # a 0-row matrix, so route the degenerate case there
-        if assign == "udf" and (cent_rows := cents.collect()):
-            probe = _probe_cells_udf(cent_rows, nprobe=1)
-            assigned = e.select(id_col, "v", F.element_at(probe("v"), 1).alias("cell"))
-        else:
-            scored = e.crossJoin(F.broadcast(cents)).withColumn(
-                "cos", _dot("v", "cv") / (F.col("nrm") * F.col("cn"))
-            )
-            w = Window.partitionBy(id_col).orderBy(F.desc("cos"), F.asc("cell"))
-            assigned = (
-                scored.withColumn("r", F.row_number().over(w))
-                .filter(F.col("r") == 1)
-                .select(id_col, "v", "cell")
-            )
+        cent_rows = cents.collect()
+        if not cent_rows:
+            return cents  # empty input: nothing to assign
+        probe = _probe_cells_udf(cent_rows, nprobe=1)
+        assigned = e.select(id_col, "v", F.element_at(probe("v"), 1).alias("cell"))
         means = (
             assigned.select("cell", F.posexplode("v").alias("pos", "val"))
             .groupBy("cell", "pos")
@@ -346,42 +318,30 @@ def ivf_assign(
     vec_col: str = "embedding",
     nprobe: int = 1,
     centroids: DataFrame | None = None,
-    assign: str = DEFAULT_ASSIGN,
 ) -> DataFrame:
     """Rank each vector's cells by cosine against the centroids
-    (broadcast — n_cells rows; hash-picked by default, or pass trained
-    ones from :func:`ivf_train`). Returns (id, cell, r) for r ≤ nprobe;
-    r=1 is the storage assignment, r ≤ nprobe>1 is the query probe set.
-
-    ``assign="udf"`` (default) is a NARROW Arrow-batched map
-    (:func:`_probe_cells_udf`, one BLAS matmul per batch) — no
-    crossJoin, no window shuffle of N·n_cells rows, and measured faster
-    in interleaved medians at sf0.1; ``assign="window"`` is the
-    join+window form (the DuckDB oracle's literal shape). Both rank
-    identically (cos desc, cell asc) — equality is pytest-pinned."""
-    e = emb.select(F.col(id_col), _as_double(vec_col).alias("v")).withColumn("nrm", _norm("v"))
+    (hash-picked by default, or pass trained ones from
+    :func:`ivf_train`). Returns (id, cell, r) for r ≤ nprobe; r=1 is the
+    storage assignment, r ≤ nprobe>1 is the query probe set. A NARROW
+    Arrow-batched map (:func:`_probe_cells_udf`, one BLAS matmul per
+    batch) ranking (cos desc, cell asc) like the DuckDB oracle."""
+    e = emb.select(F.col(id_col), _as_double(vec_col).alias("v"))
     cents = centroids if centroids is not None else ivf_centroids(emb, n_cells, id_col, vec_col)
-    if assign == "udf":
-        cent_rows = cents.collect()
-        if not cent_rows:
-            # empty centroid table from empty INPUT is the legit empty
-            # result (lazy window form below); an explicitly-passed
-            # empty model over real data is an upstream bug (wrong or
-            # empty index path) and must fail loudly, not emit a
-            # silently empty assignment
-            if centroids is not None and not emb.isEmpty():
-                raise ValueError("ivf_assign: empty centroids for non-empty input")
-        else:
-            probe = _probe_cells_udf(cent_rows, nprobe=nprobe)
-            return (
-                e.select(F.col(id_col), F.posexplode(probe("v")).alias("pos", "cell"))
-                .select(
-                    id_col,
-                    "cell",
-                    (F.col("pos") + F.lit(1)).cast("int").alias("r"),
-                )
-            )
-    return _assign_cells_window(e, cents, id_col, nprobe)
+    cent_rows = cents.collect()
+    if not cent_rows:
+        # empty centroids from empty INPUT is the legit empty result; an
+        # explicitly-passed empty model over real data is an upstream bug
+        # (wrong or empty index path) and must fail loudly, not emit a
+        # silently empty assignment
+        if centroids is not None and not emb.isEmpty():
+            raise ValueError("ivf_assign: empty centroids for non-empty input")
+        return _empty_frame(
+            emb, [e.schema[id_col], cents.schema["cell"], StructField("r", IntegerType())]
+        )
+    probe = _probe_cells_udf(cent_rows, nprobe=nprobe)
+    return e.select(F.col(id_col), F.posexplode(probe("v")).alias("pos", "cell")).select(
+        id_col, "cell", (F.col("pos") + F.lit(1)).cast("int").alias("r")
+    )
 
 
 def ivf_topk(
@@ -393,16 +353,13 @@ def ivf_topk(
     vec_col: str = "embedding",
     nprobe: int = 1,
     centroids: DataFrame | None = None,
-    assign: str = DEFAULT_ASSIGN,
 ) -> DataFrame:
     """IVF ANN: database vectors live in their nearest cell (r=1); each
     query probes its ``nprobe`` nearest cells and runs exact cosine inside
     them. Cells partition the corpus, so the probe join yields each
     candidate once — no dedup needed. Pass ``centroids`` from
     :func:`ivf_train` for the trained quantizer."""
-    a = ivf_assign(
-        emb, n_cells, id_col, vec_col, nprobe=max(1, nprobe), centroids=centroids, assign=assign
-    )
+    a = ivf_assign(emb, n_cells, id_col, vec_col, nprobe=max(1, nprobe), centroids=centroids)
     e = (
         emb.join(a.filter(F.col("r") == 1).drop("r"), id_col)
         .select(F.col(id_col), "cell", _as_double(vec_col).alias("v"))
@@ -447,30 +404,21 @@ def _pq_dims(emb: DataFrame, m: int, vec_col: str) -> int:
     return d // m
 
 
-def _pq_d2(sv: str, cw: str):
-    """Rounded squared L2 between subvector and codeword. The expanded
-    x·x − 2·x·c + c·c form is used IDENTICALLY in the SQL twin, and the
-    6dp rounding turns float-order near-ties into exact ties broken by
-    code asc — the ivf_train determinism discipline."""
-    return F.round(
-        _dot(sv, sv) - F.lit(2.0) * _dot(sv, cw) + _dot(cw, cw), 6
-    )
-
-
 def _nearest_code_udf(cb_rows: list):
-    """Arrow-batched nearest-codeword assignment: the codebook
-    (m·n_codes rows — driver-sized by contract) ships in the UDF
-    closure as per-subspace numpy matrices; each batch is ONE BLAS
-    matmul per subspace. This replaces the (id, sub)-window whose
-    N·m·n_codes-row shuffle dominated encode/train at scale — and
-    unlike a literal-expression LUT (higher-order functions are
-    interpreted, not codegen'd), it keeps the per-row cost vectorized.
-    d2 is the same expanded + 6dp-rounded form as :func:`_pq_d2`; ties
-    break by code asc (codebook rows sorted by code, argmin keeps the
-    first) — matching the join+window form the DuckDB oracle spells
-    out. Rounding happens at 6dp, far above BLAS-vs-sequential
-    summation ulps (the ivf_train argument), so results agree with the
-    SQL twin exactly."""
+    """Arrow-batched nearest-codeword assignment — the ONE
+    nearest-codeword ranking of the PQ family: the codebook (m·n_codes
+    rows — driver-sized by contract) ships in the UDF closure as
+    per-subspace numpy matrices; each batch is ONE BLAS matmul per
+    subspace. A narrow map: no codebook join and no (id, sub)-window
+    over N·m·n_codes rows, and unlike a literal-expression LUT
+    (higher-order functions are interpreted, not codegen'd) it keeps the
+    per-row cost vectorized. d2 is the expanded x·x − 2·x·c + c·c form
+    the SQL twin spells out IDENTICALLY, rounded to 6dp, which turns
+    float-order near-ties into exact ties broken by code asc (codebook
+    rows sorted by code, argmin keeps the first) — the ivf_train
+    determinism discipline. Rounding happens at 6dp, far above
+    BLAS-vs-sequential summation ulps, so results agree with the SQL
+    twin exactly."""
     from pyspark.sql.functions import pandas_udf
 
     by_sub: dict[int, list] = {}
@@ -505,16 +453,6 @@ def _nearest_code_udf(cb_rows: list):
     return _assign
 
 
-def _assign_codes_window(subs: DataFrame, cb: DataFrame, id_col: str) -> DataFrame:
-    """Join+window nearest-codeword form — the DuckDB oracle's literal
-    shape (broadcast codebook join, (id, sub)-window). Shuffles
-    N·m·n_codes rows — kept as the explicit relational twin; the
-    Arrow path is the measured-faster default."""
-    scored = subs.join(F.broadcast(cb), "sub").withColumn("d2", _pq_d2("sv", "cw"))
-    w = Window.partitionBy(id_col, "sub").orderBy(F.asc("d2"), F.asc("code"))
-    return scored.withColumn("r", F.row_number().over(w)).filter(F.col("r") == 1)
-
-
 def pq_train(
     emb: DataFrame,
     m: int = 4,
@@ -522,25 +460,21 @@ def pq_train(
     n_iter: int = 1,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    assign: str = DEFAULT_ASSIGN,
 ) -> DataFrame:
     """Train PQ codebooks (Jégou et al. 2011): split each vector into
     ``m`` subvectors; per subspace, k-means with ``n_codes`` codewords.
     Init = the md5-hash-picked vectors' subvectors (the
     :func:`ivf_centroids` seed trick, same rows for every subspace), then
-    ``n_iter`` Lloyd rounds (assign by rounded squared-L2, recompute
-    per-(sub, code, pos) means rounded to 6dp → exact SQL twin, like
-    :func:`ivf_train`; a codeword with zero assignments keeps its
-    previous value, so the codebook always stays m·n_codes rows).
-    Returns (sub, code, cw).
+    ``n_iter`` Lloyd rounds (assign by rounded squared-L2 through
+    :func:`_nearest_code_udf`, recompute per-(sub, code, pos) means
+    rounded to 6dp → exact SQL twin, like :func:`ivf_train`; a codeword
+    with zero assignments keeps its previous value, so the codebook
+    always stays m·n_codes rows). Empty input returns the empty initial
+    codebook. Returns (sub, code, cw).
 
     Scale posture: the codebook is m·n_codes·(d/m) floats — driver/
-    broadcast-sized regardless of corpus size. ``assign="udf"``
-    (default; :func:`_nearest_code_udf`, Arrow/BLAS) removes the
-    N·m·n_codes-row assignment shuffle and measured faster in
-    interleaved medians; ``assign="window"`` is the join +
-    (id, sub)-window form — the oracle's shape. Both break ties
-    identically (d2 asc, code asc) on 6dp-rounded distances."""
+    broadcast-sized regardless of corpus size, and the assignment is a
+    narrow Arrow/BLAS map with no N·m·n_codes-row shuffle."""
     dsub = _pq_dims(emb, m, vec_col)
     e = emb.select(F.col(id_col), _as_double(vec_col).alias("v"))
     # md5-pick seeds (the ivf_centroids trick: bounded top-n, exact SQL
@@ -560,12 +494,11 @@ def pq_train(
         F.col(id_col), F.posexplode(F.array(*_sub_slices("v", m, dsub))).alias("sub", "sv")
     )
     for _ in range(n_iter):
-        # empty codebook (degenerate/empty input) → lazy empty window form
-        if assign == "udf" and (cb_rows := cb.collect()):
-            assign_udf = _nearest_code_udf(cb_rows)
-            assigned = subs.select(id_col, "sub", "sv", assign_udf("sub", "sv").alias("code"))
-        else:
-            assigned = _assign_codes_window(subs, cb, id_col)
+        cb_rows = cb.collect()
+        if not cb_rows:
+            return cb  # empty input: nothing to assign
+        assign_udf = _nearest_code_udf(cb_rows)
+        assigned = subs.select(id_col, "sub", "sv", assign_udf("sub", "sv").alias("code"))
         means = (
             assigned.select("sub", "code", F.posexplode("sv").alias("pos", "val"))
             .groupBy("sub", "code", "pos")
@@ -593,33 +526,28 @@ def pq_encode(
     m: int = 4,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    assign: str = DEFAULT_ASSIGN,
 ) -> DataFrame:
     """Encode every vector as ``m`` uint8-sized code ids — 8·m bits per
     vector vs 32·d for raw floats (64-dim float32 → 4 bytes: 64×
     compression at m=4). Returns (vec_id, sub, code): nearest codeword
-    per subspace by rounded squared-L2, ties → code asc.
-    ``assign="udf"`` (default) = narrow Arrow-batched map
-    (:func:`_nearest_code_udf`, one BLAS matmul per batch — no join, no
-    shuffle); ``assign="window"`` = broadcast join + (id, sub)-window
-    (the oracle's shape)."""
+    per subspace by rounded squared-L2, ties → code asc — a narrow
+    Arrow-batched map (:func:`_nearest_code_udf`, one BLAS matmul per
+    batch — no join, no shuffle)."""
     dsub = _pq_dims(emb, m, vec_col)
     subs = emb.select(
         F.col(id_col),
         F.posexplode(F.array(*_sub_slices(vec_col, m, dsub))).alias("sub", "raw_sv"),
     ).withColumn("sv", F.transform("raw_sv", lambda x: x.cast("double")))
-    if assign == "udf":
-        cb_rows = codebooks.collect()
-        if not cb_rows:
-            # codebooks are always caller-supplied here: empty model over
-            # real data = upstream bug (wrong/empty index path) — raise
-            # rather than emit a silently empty encoded index
-            if not emb.isEmpty():
-                raise ValueError("pq_encode: empty codebooks for non-empty input")
-        else:
-            assign_udf = _nearest_code_udf(cb_rows)
-            return subs.select(id_col, "sub", assign_udf("sub", "sv").alias("code"))
-    return _assign_codes_window(subs, codebooks, id_col).select(id_col, "sub", "code")
+    cb_rows = codebooks.collect()
+    if not cb_rows:
+        # codebooks are always caller-supplied here: empty model over
+        # real data = upstream bug (wrong/empty index path) — raise
+        # rather than emit a silently empty encoded index
+        if not emb.isEmpty():
+            raise ValueError("pq_encode: empty codebooks for non-empty input")
+        return _empty_frame(emb, [subs.schema[id_col], subs.schema["sub"], codebooks.schema["code"]])
+    assign_udf = _nearest_code_udf(cb_rows)
+    return subs.select(id_col, "sub", assign_udf("sub", "sv").alias("code"))
 
 
 def pq_topk(
@@ -632,7 +560,6 @@ def pq_topk(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     codebooks: DataFrame | None = None,
-    assign: str = DEFAULT_ASSIGN,
 ) -> DataFrame:
     """PQ ANN with asymmetric distance (ADC): database vectors are
     scored through their reconstructions (concatenated codewords), the
@@ -640,13 +567,9 @@ def pq_topk(
     accumulated per subspace from a per-query lookup table (the classic
     ADC LUT: m·n_codes partial dot products per query, broadcast-sized).
     Returns (query_vec_id, vec_id, cos_r, rank) — the family shape."""
-    cb = (
-        codebooks
-        if codebooks is not None
-        else pq_train(emb, m, n_codes, n_iter, id_col, vec_col, assign=assign)
-    )
+    cb = codebooks if codebooks is not None else pq_train(emb, m, n_codes, n_iter, id_col, vec_col)
     dsub = _pq_dims(emb, m, vec_col)
-    codes = pq_encode(emb, cb, m, id_col, vec_col, assign=assign)
+    codes = pq_encode(emb, cb, m, id_col, vec_col)
     qe = emb.filter(F.col(id_col).isin(query_ids)).select(
         F.col(id_col).alias("query_vec_id"), _as_double(vec_col).alias("qv")
     ).withColumn("qn", _norm("qv"))
@@ -685,15 +608,12 @@ def ivfpq_residuals(
     centroids: DataFrame,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    assign: str = DEFAULT_ASSIGN,
 ) -> DataFrame:
     """Assign every vector to its nearest coarse cell (r=1) and subtract
     that centroid: the residual is what the PQ codebooks quantize
     (Jégou et al. 2011 §V, IVFADC). Returns (id, cell, rv). The
     subtraction is exact IEEE (`zip_with` x−y), so it twins in SQL."""
-    a1 = ivf_assign(
-        emb, id_col=id_col, vec_col=vec_col, nprobe=1, centroids=centroids, assign=assign
-    )
+    a1 = ivf_assign(emb, id_col=id_col, vec_col=vec_col, nprobe=1, centroids=centroids)
     e = emb.select(F.col(id_col), _as_double(vec_col).alias("v"))
     return (
         e.join(a1.drop("r"), id_col)
@@ -782,7 +702,6 @@ def ivfpq_topk(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     centroids: DataFrame | None = None,
-    assign: str = DEFAULT_ASSIGN,
 ) -> DataFrame:
     """IVFADC ANN (Jégou et al. 2011 §III-C/V): coarse-quantize into
     ``n_cells`` inverted lists, PQ-encode the RESIDUAL x − c(x) with
@@ -813,19 +732,17 @@ def ivfpq_topk(
     # cache here would leak for the session lifetime (the persisted
     # serving path is ivfpq_build/ivfpq_search); the residual lineage is
     # a narrow scan + broadcast join, cheap to recompute
-    resid = ivfpq_residuals(emb, cents, id_col, vec_col, assign=assign)
-    cb = pq_train(resid, m, n_codes, n_iter, id_col, "rv", assign=assign)
-    codes = pq_encode(resid, cb, m, id_col, "rv", assign=assign).join(
-        resid.select(id_col, "cell"), id_col
-    )
+    resid = ivfpq_residuals(emb, cents, id_col, vec_col)
+    cb = pq_train(resid, m, n_codes, n_iter, id_col, "rv")
+    codes = pq_encode(resid, cb, m, id_col, "rv").join(resid.select(id_col, "cell"), id_col)
     qe = (
         emb.filter(F.col(id_col).isin(query_ids))
         .select(F.col(id_col).alias("query_vec_id"), _as_double(vec_col).alias("qv"))
         .withColumn("qn", _norm("qv"))
     )
     probes = ivf_assign(
-        emb.filter(F.col(id_col).isin(query_ids)), id_col=id_col, vec_col=vec_col,
-        nprobe=max(1, nprobe), centroids=cents, assign=assign,
+        emb.filter(F.col(id_col).isin(query_ids)),
+        id_col=id_col, vec_col=vec_col, nprobe=max(1, nprobe), centroids=cents,
     ).select(F.col(id_col).alias("query_vec_id"), "cell")
     return _adc_rank(codes, cents, cb, qe, probes, m, dsub, k, id_col, exclude_self=True)
 
@@ -840,7 +757,6 @@ def ivfpq_build(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     centroids: DataFrame | None = None,
-    assign: str = DEFAULT_ASSIGN,
 ) -> dict:
     """Persist an IVFADC index: encode once, query many. Layout:
 
@@ -859,11 +775,11 @@ def ivfpq_build(
         centroids if centroids is not None else ivf_centroids(emb, n_cells, id_col, vec_col)
     )
     cents.write.mode("overwrite").parquet(f"{path}/centroids")
-    resid = ivfpq_residuals(emb, cents, id_col, vec_col, assign=assign).persist()
+    resid = ivfpq_residuals(emb, cents, id_col, vec_col).persist()
     try:
-        cb = pq_train(resid, m, n_codes, n_iter, id_col, "rv", assign=assign)
+        cb = pq_train(resid, m, n_codes, n_iter, id_col, "rv")
         cb.write.mode("overwrite").parquet(f"{path}/codebooks")
-        codes = pq_encode(resid, cb, m, id_col, "rv", assign=assign).join(
+        codes = pq_encode(resid, cb, m, id_col, "rv").join(
             resid.select(id_col, "cell"), id_col
         )
         codes.write.mode("overwrite").partitionBy("cell").parquet(f"{path}/codes")
@@ -885,8 +801,9 @@ def ivfpq_search(
     vec_col: str = "embedding",
 ) -> DataFrame:
     """Query a persisted IVFADC index (:func:`ivfpq_build`) with a frame
-    of raw query vectors (id_col, vec_col). Probing filters the codes
-    scan to the queries' cells BEFORE the read (partition pruning on the
+    of raw query vectors (id_col, vec_col). Queries probe their
+    ``nprobe`` nearest cells through :func:`ivf_assign` (the probe
+    :func:`ivfpq_topk` uses), which filters the codes scan to the queries' cells BEFORE the read (partition pruning on the
     ``cell`` directory key), then scores through the same broadcast LUTs
     as :func:`ivfpq_topk`. Self-matches are kept: external queries are
     not corpus rows (callers with in-corpus queries filter afterwards)."""
@@ -901,17 +818,12 @@ def ivfpq_search(
         queries.select(F.col(id_col).alias("query_vec_id"), _as_double(vec_col).alias("qv"))
         .withColumn("qn", _norm("qv"))
     )
-    qscored = qe.crossJoin(F.broadcast(cents)).withColumn(
-        "qcos", _dot("qv", "cv") / (F.col("qn") * F.col("cn"))
-    )
-    w = Window.partitionBy("query_vec_id").orderBy(F.desc("qcos"), F.asc("cell"))
     # materialize the query-sized probe set ONCE: probe_cells derives
     # locally (no extra job) and the three downstream uses don't re-run
     # the queries×centroids assignment
     probes = _materialize_small(
-        qscored.withColumn("r", F.row_number().over(w))
-        .filter(F.col("r") <= nprobe)
-        .select("query_vec_id", "cell")
+        ivf_assign(queries, id_col=id_col, vec_col=vec_col, nprobe=nprobe, centroids=cents)
+        .select(F.col(id_col).alias("query_vec_id"), "cell")
     )
     probe_cells = sorted({r.cell for r in probes.collect()})
     codes = codes.filter(F.col("cell").isin(probe_cells))  # partition pruning

@@ -195,7 +195,6 @@ def _engine_index(spark: SparkSession, sf_dir: str) -> IndexTables:
         _INDEX_CACHE[sf_dir] = build_index(
             spark, docs, idx, num_shards=None,  # auto_num_shards sizing rule
             tokenizer="whitespace", text_col="content",
-            store_positions=True,  # also serves the close-pair proximity entries
         )
     return _INDEX_CACHE[sf_dir]
 

@@ -47,7 +47,7 @@ from pyspark.sql import functions as F
 
 from flexneuart_spark.config import BM25_B, BM25_K1
 from flexneuart_spark.functions.tokenize import TOKENIZERS
-from flexneuart_spark.index.builder import IndexTables, bm25_idf
+from flexneuart_spark.index.builder import SMALL_VOCAB, IndexTables, bm25_idf
 from flexneuart_spark.search.scoring import TermPostings, bmw_topk, exhaustive_topk, maxscore_topk
 
 # result-identical top-k kernels (equivalence-tested); maxscore is the default
@@ -179,14 +179,14 @@ class SegmentedSearcher:
         idf = bm25_idf(self.n_docs, np.fromiter(df.values(), dtype=np.float64, count=len(df)))
         return dict(zip(df, idf.tolist()))
 
-    def warm(self, max_dict_terms: int = 2_000_000) -> "SegmentedSearcher":
+    def warm(self) -> "SegmentedSearcher":
         """Pin the doc map AND the postings in executor memory and, when
-        the segments' dictionaries hold at most ``max_dict_terms`` rows,
-        cache term→idf driver-side — repeated searches then skip the
-        per-query metadata job and the parquet listing/scan (the
-        reference holds its whole index + idf cache in memory for the
-        batch too, TFIDFSimilarity.java:48-58; Lucene relies on the OS
-        page cache). Re-warming releases the previous caches (safe after
+        the segments' dictionaries hold at most ``SMALL_VOCAB`` rows (the
+        builder's driver-side finalize bound), cache term→idf
+        driver-side — repeated searches then skip the per-query metadata
+        job and the parquet listing/scan (the reference holds its whole
+        index + idf cache in memory for the batch too,
+        TFIDFSimilarity.java:48-58; Lucene relies on the OS page cache). Re-warming releases the previous caches (safe after
         the index was rebuilt)."""
         for cached in (self._docmap, self._posts):
             if cached is not None:
@@ -202,8 +202,8 @@ class SegmentedSearcher:
         npart = min(16, self.spark.sparkContext.defaultParallelism)
         self._posts = self._read_postings().repartition(npart, "shard").persist()
         self._posts.count()
-        head = self._read_term_df().limit(max_dict_terms + 1).collect()
-        self._idf_cache = self._global_idf(head) if len(head) <= max_dict_terms else None
+        head = self._read_term_df().limit(SMALL_VOCAB + 1).collect()
+        self._idf_cache = self._global_idf(head) if len(head) <= SMALL_VOCAB else None
         return self
 
     def _prep(self, queries: list[tuple[str, str]]) -> tuple[dict[str, dict[str, int]], dict[str, float]]:
@@ -254,16 +254,6 @@ class Searcher(SegmentedSearcher):
         k1: float = BM25_K1,
         b: float = BM25_B,
         tokenizer: str = "code",
-        adaptive: bool | None = None,
     ):
-        if adaptive is not None:
-            # interactive top-k jobs are a handful of tiny stages; AQE's
-            # per-stage re-planning round trips roughly double their
-            # latency (measured 2x p50 on the bench corpus) — pass
-            # adaptive=False for latency-sensitive interactive use. This is
-            # a SESSION-WIDE setting and is deliberately opt-in (None =
-            # leave the session untouched) so that library-internal
-            # Searcher construction never flips the caller's AQE.
-            spark.conf.set("spark.sql.adaptive.enabled", str(bool(adaptive)).lower())
         super().__init__(spark, [index], k1, b, tokenizer)
         self.tables = self.segments[0]

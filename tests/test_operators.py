@@ -593,41 +593,29 @@ def test_ivfpq_build_search_matches_inline(spark, emb, tmp_path):
     assert got_top5 == want
 
 
-def test_assign_modes_identical(spark, emb):
-    """The Arrow/BLAS assignment path ("udf", default) and the
-    join+window path ("window", the DuckDB oracle's literal shape) must
-    return identical results for the whole IVF/PQ family."""
-    qids = [0, 1, 2, 3, 4]
-    for fn, kwargs in [
-        (similarity.pq_topk, dict(k=5, m=4, n_codes=16, n_iter=1)),
-        (similarity.ivfpq_topk, dict(k=5, n_cells=4, nprobe=2)),
-        (similarity.ivf_topk, dict(k=5, n_cells=4, nprobe=2)),
-    ]:
-        a = sorted(tuple(r) for r in fn(emb, qids, assign="window", **kwargs).collect())
-        b = sorted(tuple(r) for r in fn(emb, qids, assign="udf", **kwargs).collect())
-        assert a == b, fn.__name__
-
-
 def test_ann_udf_path_empty_input_is_lazy_empty(spark):
     """An empty embeddings frame (the fuzz class the index builder was
-    hardened against) must yield empty results on the default Arrow/BLAS
+    hardened against) must yield empty results on the Arrow/BLAS
     assignment path, not crash at plan-build time stacking a 0-row
     centroid/codebook matrix."""
     empty = spark.createDataFrame([], "vec_id long, embedding array<double>")
-    assert similarity.ivf_train(empty, n_cells=4, n_iter=2, assign="udf").count() == 0
-    assert similarity.ivf_assign(empty, n_cells=4, assign="udf").count() == 0
-    cb = similarity.pq_train(empty, m=2, n_codes=4, n_iter=2, assign="udf")
+    assert similarity.ivf_train(empty, n_cells=4, n_iter=2).count() == 0
+    assert similarity.ivf_assign(empty, n_cells=4).count() == 0
+    cb = similarity.pq_train(empty, m=2, n_codes=4, n_iter=2)
     assert cb.count() == 0
-    assert similarity.pq_encode(empty, cb, m=2, assign="udf").count() == 0
+    assert similarity.pq_encode(empty, cb, m=2).count() == 0
+    assert similarity.ivf_topk(empty, [0], k=5, n_cells=4, nprobe=2).count() == 0
+    assert similarity.pq_topk(empty, [0], k=5, m=2, n_codes=4).count() == 0
+    assert similarity.ivfpq_topk(empty, [0], k=5, n_cells=4, nprobe=2, m=2, n_codes=4).count() == 0
     # ...but an EMPTY MODEL over real data is an upstream bug (wrong or
     # empty index path) and must fail loudly, not silently encode nothing
     one = spark.createDataFrame([(0, [0.1, 0.2])], "vec_id long, embedding array<double>")
     empty_cb = spark.createDataFrame([], "sub int, code long, cw array<double>")
     with pytest.raises(ValueError, match="empty codebooks"):
-        similarity.pq_encode(one, empty_cb, m=2, assign="udf")
+        similarity.pq_encode(one, empty_cb, m=2)
     empty_cents = spark.createDataFrame([], "cell long, cv array<double>, cn double")
     with pytest.raises(ValueError, match="empty centroids"):
-        similarity.ivf_assign(one, centroids=empty_cents, assign="udf")
+        similarity.ivf_assign(one, centroids=empty_cents)
 
 
 def test_ivfpq_search_external_queries(spark, emb, tmp_path):

@@ -48,9 +48,7 @@ def naive_close_pair_score(q_toks, d_toks, idf, avgdl, qw, dw, ordered, k1=BM25_
 def setup(spark, tmp_path_factory):
     corpus = make_corpus(n_docs=250, seed=42)
     idx = str(tmp_path_factory.mktemp("prox_idx"))
-    tables = build_index(
-        spark, spark.createDataFrame(corpus), idx, num_shards=4, store_positions=True
-    )
+    tables = build_index(spark, spark.createDataFrame(corpus), idx, num_shards=4)
     docs = [
         (f"{r.repo}:{r.path}@{r.commit}", code_tokenize(r.content))
         for r in corpus.itertuples(index=False)

@@ -46,7 +46,7 @@ def test_sdm_combines_components(spark, tmp_path_factory):
 
     corpus = make_corpus(n_docs=150, seed=42)
     idx = str(tmp_path_factory.mktemp("sdm_idx"))
-    t = build_index(spark, spark.createDataFrame(corpus), idx, num_shards=4, store_positions=True)
+    t = build_index(spark, spark.createDataFrame(corpus), idx, num_shards=4)
     queries = [(r.query_id, r.text) for r in make_queries(6, seed=45).itertuples(index=False)]
     run = sdm_topk(spark, t, queries, k=5)
     per_q = {}

@@ -1,5 +1,5 @@
 """Tokenizer golden tests (pattern of reference tests/test_parse.py:21-33)
-+ three-implementation equality (plain-Python / pandas / JVM columns)."""
++ three-implementation equality (plain-Python / Arrow-compute / JVM columns)."""
 
 from __future__ import annotations
 
@@ -8,7 +8,6 @@ from pyspark.sql import functions as F
 
 from flexneuart_spark.functions.tokenize import (
     code_tokenize,
-    code_tokenize_pandas,
     code_tokens_col,
     whitespace_tokenize,
     whitespace_tokens_col,
@@ -50,12 +49,6 @@ def test_code_golden():
         assert code_tokenize(s) == want, s
 
 
-def test_pandas_matches_python():
-    got = code_tokenize_pandas(pd.Series(SAMPLES)).tolist()
-    want = [code_tokenize(s) for s in SAMPLES]
-    assert got == want
-
-
 def test_jvm_matches_python(spark):
     df = spark.createDataFrame(pd.DataFrame({"s": SAMPLES}))
     got_code = [r.t for r in df.select(code_tokens_col("s").alias("t")).collect()]
@@ -72,11 +65,11 @@ def test_sha256_invariant(spark):
     assert got == [hashlib.sha256(s.encode()).hexdigest() for s in SAMPLES]
 
 
-def test_code_tokenize_arrow_equals_pandas():
+def test_code_tokenize_arrow_equals_python():
     import pandas as pd
 
     from flexneuart_spark.fixtures import make_corpus
-    from flexneuart_spark.functions.tokenize import code_tokenize_arrow, code_tokenize_pandas
+    from flexneuart_spark.functions.tokenize import code_tokenize_arrow
 
     s = pd.concat(
         [
@@ -86,5 +79,4 @@ def test_code_tokenize_arrow_equals_pandas():
         ignore_index=True,
     )
     a = code_tokenize_arrow(s)
-    p = code_tokenize_pandas(s)
-    assert [list(x) for x in a] == [list(x) for x in p]
+    assert [list(x) for x in a] == [code_tokenize(x) for x in s]
