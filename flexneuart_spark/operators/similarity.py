@@ -20,9 +20,10 @@ Spark plan:
   brute-force pytest instead of a DuckDB oracle.
 - ``ivf_topk`` — IVF-style coarse quantization: centroids are the
   ``n_cells`` vectors with the smallest md5(id) (deterministic, valid for
-  string ids); every vector is assigned to its nearest centroid
-  (Arrow-batched BLAS map, centroids in the UDF closure); queries probe
-  their ``nprobe`` nearest cells. Exact within the probed cells.
+  string ids); every vector gets its nearest centroid from a narrow
+  Arrow-batched BLAS map (centroids in the UDF closure — no join back to
+  the corpus); queries probe their ``nprobe`` nearest cells through the
+  same map. Exact within the probed cells.
 - ``pq_train`` / ``pq_encode`` / ``pq_topk`` — product quantization
   (Jégou et al. 2011): per-subspace codebooks, 8·m bits per vector,
   asymmetric-distance (ADC) scoring through per-query LUTs.
@@ -30,6 +31,10 @@ Spark plan:
   composition: PQ over the residual x − c(x) inside coarse cells; the
   persisted form stores a cell-partitioned codes table (probe-time
   partition pruning) — the billion-vector layout.
+
+The top-k operators share one rank tail (per query: cos_r desc, id asc,
+rank ≤ k) and return the family shape (query_vec_id, vec_id, cos_r,
+rank).
 """
 
 from __future__ import annotations
@@ -65,6 +70,42 @@ def _materialize_small(df: DataFrame) -> DataFrame:
     return df.sparkSession.createDataFrame(df.collect(), df.schema)
 
 
+def _vectors(emb: DataFrame, id_col: str, vec_col: str, *keep: str) -> DataFrame:
+    """(id, *keep, v, nrm): the vector cast to double and its L2 norm."""
+    e = emb.select(F.col(id_col), *keep, _as_double(vec_col).alias("v"))
+    return e.withColumn("nrm", _norm("v"))
+
+
+def _as_queries(e: DataFrame, id_col: str, *keep) -> DataFrame:
+    """The query side of a :func:`_vectors` frame: (query_vec_id, *keep, qv, qn)."""
+    return e.select(
+        F.col(id_col).alias("query_vec_id"), *keep, F.col("v").alias("qv"), F.col("nrm").alias("qn")
+    )
+
+
+def _rank_topk(scored: DataFrame, k: int, id_col: str) -> DataFrame:
+    """The family's rank tail: per query, (cos_r desc, id asc) → rank ≤ k.
+    Returns (query_vec_id, vec_id, cos_r, rank)."""
+    w = Window.partitionBy("query_vec_id").orderBy(F.desc("cos_r"), F.asc(id_col))
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select("query_vec_id", F.col(id_col).alias("vec_id"), "cos_r", "rank")
+    )
+
+
+def _exact_topk(e: DataFrame, q: DataFrame, key: str | None, k: int, id_col: str) -> DataFrame:
+    """Exact cosine top-k of the broadcast query side ``q`` (query_vec_id,
+    key, qv, qn) over the database vectors ``e`` (id, key, v, nrm) that
+    share its bucket ``key`` (None: every vector — the brute-force scan).
+    Self-matches are dropped."""
+    pairs = e.crossJoin(F.broadcast(q)) if key is None else e.join(F.broadcast(q), key)
+    scored = pairs.filter(F.col(id_col) != F.col("query_vec_id")).withColumn(
+        "cos_r", F.round(_dot("v", "qv") / (F.col("nrm") * F.col("qn")), 6)
+    )
+    return _rank_topk(scored, k, id_col)
+
+
 def cosine_topk(
     emb: DataFrame,
     query_ids: list,
@@ -74,21 +115,9 @@ def cosine_topk(
 ) -> DataFrame:
     """Exact brute-force cosine top-k neighbours for the given query ids
     (self excluded). Returns (query_vec_id, vec_id, cos_r, rank)."""
-    e = emb.select(F.col(id_col), _as_double(vec_col).alias("v")).withColumn("nrm", _norm("v"))
-    q = e.filter(F.col(id_col).isin(query_ids)).select(
-        F.col(id_col).alias("query_vec_id"), F.col("v").alias("qv"), F.col("nrm").alias("qn")
-    )
-    scored = (
-        e.crossJoin(F.broadcast(q))
-        .filter(F.col(id_col) != F.col("query_vec_id"))
-        .withColumn("cos_r", F.round(_dot("v", "qv") / (F.col("nrm") * F.col("qn")), 6))
-    )
-    w = Window.partitionBy("query_vec_id").orderBy(F.desc("cos_r"), F.asc(id_col))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_vec_id", F.col(id_col).alias("vec_id"), "cos_r", "rank")
-    )
+    e = _vectors(emb, id_col, vec_col)
+    q = _as_queries(e.filter(F.col(id_col).isin(query_ids)), id_col)
+    return _exact_topk(e, q, None, k, id_col)
 
 
 def lsh_buckets(emb: DataFrame, nbits: int = 8, id_col: str = "vec_id", vec_col: str = "embedding") -> DataFrame:
@@ -117,34 +146,16 @@ def lsh_ann_topk(
     recall boost: nbits+1 buckets searched instead of 2× the hash count;
     Lv et al., VLDB 2007). Database vectors live in exactly one bucket,
     so probes never produce duplicate candidates."""
-    b = lsh_buckets(emb, nbits, id_col, vec_col)
-    e = b.select(F.col(id_col), "bucket", _as_double(vec_col).alias("v")).withColumn("nrm", _norm("v"))
-    q = e.filter(F.col(id_col).isin(query_ids)).select(
-        F.col(id_col).alias("query_vec_id"), F.col("bucket"), F.col("v").alias("qv"), F.col("nrm").alias("qn")
-    )
+    e = _vectors(lsh_buckets(emb, nbits, id_col, vec_col), id_col, vec_col, "bucket")
+    q = _as_queries(e.filter(F.col(id_col).isin(query_ids)), id_col, "bucket")
     if multi_probe:
-        flipped = F.concat(
-            F.substring("bucket", 1, F.col("j") - F.lit(1)),
-            F.when(F.substring("bucket", F.col("j"), 1) == "1", F.lit("0")).otherwise(F.lit("1")),
-            F.substring("bucket", F.col("j") + F.lit(1), F.lit(nbits)),
-        )
-        probes = q.select(
-            "query_vec_id", "qv", "qn",
-            F.explode(F.sequence(F.lit(1), F.lit(nbits))).alias("j"),
-            "bucket",
-        ).select("query_vec_id", "qv", "qn", flipped.alias("bucket"))
-        q = q.unionByName(probes)
-    scored = (
-        e.join(F.broadcast(q), "bucket")
-        .filter(F.col(id_col) != F.col("query_vec_id"))
-        .withColumn("cos_r", F.round(_dot("v", "qv") / (F.col("nrm") * F.col("qn")), 6))
-    )
-    w = Window.partitionBy("query_vec_id").orderBy(F.desc("cos_r"), F.asc(id_col))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_vec_id", F.col(id_col).alias("vec_id"), "cos_r", "rank")
-    )
+        flips = F.transform(F.sequence(F.lit(1), F.lit(nbits)), lambda j: F.concat(
+            F.substring("bucket", F.lit(1), j - 1),
+            F.when(F.substring("bucket", j, F.lit(1)) == "1", F.lit("0")).otherwise(F.lit("1")),
+            F.substring("bucket", j + 1, F.lit(nbits)),
+        ))
+        q = q.withColumn("bucket", F.explode(F.concat(F.array("bucket"), flips)))
+    return _exact_topk(e, q, "bucket", k, id_col)
 
 
 def rp_signature(
@@ -187,24 +198,9 @@ def rp_ann_topk(
 ) -> DataFrame:
     """Approximate top-k: exact cosine within the query's SRP-LSH bucket
     (random-projection signs — the production-recall scale path)."""
-    b = rp_signature(emb, nbits, seed, id_col, vec_col)
-    e = b.select(F.col(id_col), "bucket", _as_double(vec_col).alias("v")).withColumn(
-        "nrm", _norm("v")
-    )
-    q = e.filter(F.col(id_col).isin(query_ids)).select(
-        F.col(id_col).alias("query_vec_id"), F.col("bucket"), F.col("v").alias("qv"), F.col("nrm").alias("qn")
-    )
-    scored = (
-        e.join(F.broadcast(q), "bucket")
-        .filter(F.col(id_col) != F.col("query_vec_id"))
-        .withColumn("cos_r", F.round(_dot("v", "qv") / (F.col("nrm") * F.col("qn")), 6))
-    )
-    w = Window.partitionBy("query_vec_id").orderBy(F.desc("cos_r"), F.asc(id_col))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_vec_id", F.col(id_col).alias("vec_id"), "cos_r", "rank")
-    )
+    e = _vectors(rp_signature(emb, nbits, seed, id_col, vec_col), id_col, vec_col, "bucket")
+    q = _as_queries(e.filter(F.col(id_col).isin(query_ids)), id_col, "bucket")
+    return _exact_topk(e, q, "bucket", k, id_col)
 
 
 def ivf_centroids(
@@ -215,17 +211,38 @@ def ivf_centroids(
     an exact SQL twin). Executes as TakeOrderedAndProject — a bounded
     top-n, not a global sort. Returns (cell, cv, cn) where ``cell`` is the
     centroid's own id."""
-    e = emb.select(F.col(id_col), _as_double(vec_col).alias("v")).withColumn("nrm", _norm("v"))
-    hk = F.md5(F.col(id_col).cast("string"))
-    return (
-        e.withColumn("hk", hk)
-        .orderBy("hk", id_col)
-        .limit(n_cells)
-        .select(F.col(id_col).alias("cell"), F.col("v").alias("cv"), F.col("nrm").alias("cn"))
+    return _md5_pick(_vectors(emb, id_col, vec_col), n_cells, id_col).select(
+        F.col(id_col).alias("cell"), F.col("v").alias("cv"), F.col("nrm").alias("cn")
     )
 
 
-def _probe_cells_udf(cents_rows: list, nprobe: int = 1):
+def _md5_pick(e: DataFrame, n: int, id_col: str) -> DataFrame:
+    """The ``n`` rows with the smallest md5(id), ties by id — a bounded
+    top-n (TakeOrderedAndProject) with an exact SQL twin."""
+    return e.orderBy(F.md5(F.col(id_col).cast("string")), id_col).limit(n)
+
+
+def _rounded_means(df: DataFrame, keys: list, vcol: str, out: str) -> DataFrame:
+    """The Lloyd recompute step: per ``keys`` group, the coordinate-wise
+    mean of ``vcol`` (posexplode/groupBy — one shuffle, map-side
+    combined), each coordinate rounded to 6 decimals. The rounding makes
+    the result independent of partial-aggregation order (double sums of
+    group-sized inputs agree to ~1e-12, far inside it), so the training
+    has an exact SQL twin. Returns (*keys, out)."""
+    return (
+        df.select(*keys, F.posexplode(vcol).alias("pos", "val"))
+        .groupBy(*keys, "pos")
+        .agg(F.round(F.avg("val"), 6).alias("mval"))
+        .groupBy(*keys)
+        .agg(
+            F.transform(
+                F.sort_array(F.collect_list(F.struct("pos", "mval"))), lambda s: s["mval"]
+            ).alias(out)
+        )
+    )
+
+
+def _probe_cells_udf(cents_rows: list, nprobe: int):
     """Arrow-batched nearest-cells assignment — the ONE nearest-cell
     ranking of the IVF family: the centroids (n_cells rows —
     driver-sized by contract) ship in the UDF closure as one numpy
@@ -266,6 +283,37 @@ def _empty_frame(df: DataFrame, fields: list) -> DataFrame:
     return df.sparkSession.createDataFrame([], StructType(fields))
 
 
+def _probed(e: DataFrame, cents: DataFrame, nprobe: int, model_given: bool, rows=None) -> DataFrame:
+    """``e`` (column ``v``) plus (pos, cell): one row per each vector's
+    ``nprobe`` nearest cells, best first, from one narrow map
+    (:func:`_probe_cells_udf`). At ``nprobe=1`` that is each vector's
+    storage cell, with no join back to the corpus; the stable argsort
+    makes it the first probe cell at every ``nprobe``. The generator
+    wraps the UDF call itself: a filter inferred on a plain UDF output
+    column (isnotnull of a join key) is pushed below the projection and
+    runs the UDF twice. Empty input gives a 0-row frame; an explicitly
+    passed (``model_given``) empty model over real data is an upstream
+    bug (wrong or empty index path), so it raises rather than emit a
+    silently empty assignment. ``rows``: the already collected ``cents``
+    (each collect is a Spark job)."""
+    cent_rows = cents.collect() if rows is None else rows
+    if cent_rows:
+        probe = _probe_cells_udf(cent_rows, nprobe)
+        return e.select("*", F.posexplode(probe("v")).alias("pos", "cell"))
+    if model_given and not e.isEmpty():
+        raise ValueError("empty centroids for non-empty input")
+    pos = StructField("pos", IntegerType(), False)
+    return _empty_frame(e, [*e.schema.fields, pos, cents.schema["cell"]])
+
+
+def _coarse_model(emb: DataFrame, centroids, n_cells: int, id_col: str, vec_col: str) -> DataFrame:
+    """The given centroids, or the md5-picked :func:`ivf_centroids`,
+    materialized once so no consumer re-runs the corpus-wide pick."""
+    return _materialize_small(
+        centroids if centroids is not None else ivf_centroids(emb, n_cells, id_col, vec_col)
+    )
+
+
 def ivf_train(
     emb: DataFrame,
     n_cells: int = 8,
@@ -275,39 +323,16 @@ def ivf_train(
 ) -> DataFrame:
     """Lloyd k-means training for the IVF coarse quantizer: init = the
     md5-hash-picked vectors (:func:`ivf_centroids`), then ``n_iter``
-    rounds of assign (:func:`_probe_cells_udf`, cosine argmax) +
-    recompute (per-cell per-position mean via posexplode/groupBy — one
-    shuffle per round, map-side combined). Centroid coordinates are
-    rounded to 6 decimals each round, which makes the result independent
-    of partial-aggregation order (double sums of group-sized inputs agree
-    to ~1e-12, far inside the rounding) — so the training has an exact
-    SQL twin. Cells that lose all members drop out (standard Lloyd
-    behaviour). Empty input returns the empty initial model. Returns
+    rounds of assign (:func:`_probed`, cosine argmax) + recompute
+    (:func:`_rounded_means`, per-cell means rounded to 6dp — an exact SQL
+    twin). Cells that lose all members drop out (standard Lloyd
+    behaviour). Empty input returns an empty model. Returns
     (cell, cv, cn)."""
     e = emb.select(F.col(id_col), _as_double(vec_col).alias("v"))
     cents = ivf_centroids(emb, n_cells, id_col, vec_col)
     for _ in range(n_iter):
-        cent_rows = cents.collect()
-        if not cent_rows:
-            return cents  # empty input: nothing to assign
-        probe = _probe_cells_udf(cent_rows, nprobe=1)
-        assigned = e.select(id_col, "v", F.element_at(probe("v"), 1).alias("cell"))
-        means = (
-            assigned.select("cell", F.posexplode("v").alias("pos", "val"))
-            .groupBy("cell", "pos")
-            .agg(F.round(F.avg("val"), 6).alias("mval"))
-            .groupBy("cell")
-            .agg(
-                F.transform(
-                    F.sort_array(F.collect_list(F.struct("pos", "mval"))), lambda s: s["mval"]
-                ).alias("cv")
-            )
-        )
-        cents = _materialize_small(
-            means.withColumn(
-                "cn", F.sqrt(F.aggregate(F.col("cv"), F.lit(0.0), lambda a, x: a + x * x))
-            )
-        )
+        means = _rounded_means(_probed(e, cents, 1, False), ["cell"], "v", "cv")
+        cents = _materialize_small(means.withColumn("cn", _norm("cv")))
     return cents
 
 
@@ -327,19 +352,7 @@ def ivf_assign(
     batch) ranking (cos desc, cell asc) like the DuckDB oracle."""
     e = emb.select(F.col(id_col), _as_double(vec_col).alias("v"))
     cents = centroids if centroids is not None else ivf_centroids(emb, n_cells, id_col, vec_col)
-    cent_rows = cents.collect()
-    if not cent_rows:
-        # empty centroids from empty INPUT is the legit empty result; an
-        # explicitly-passed empty model over real data is an upstream bug
-        # (wrong or empty index path) and must fail loudly, not emit a
-        # silently empty assignment
-        if centroids is not None and not emb.isEmpty():
-            raise ValueError("ivf_assign: empty centroids for non-empty input")
-        return _empty_frame(
-            emb, [e.schema[id_col], cents.schema["cell"], StructField("r", IntegerType())]
-        )
-    probe = _probe_cells_udf(cent_rows, nprobe=nprobe)
-    return e.select(F.col(id_col), F.posexplode(probe("v")).alias("pos", "cell")).select(
+    return _probed(e, cents, nprobe, model_given=centroids is not None).select(
         id_col, "cell", (F.col("pos") + F.lit(1)).cast("int").alias("r")
     )
 
@@ -354,44 +367,28 @@ def ivf_topk(
     nprobe: int = 1,
     centroids: DataFrame | None = None,
 ) -> DataFrame:
-    """IVF ANN: database vectors live in their nearest cell (r=1); each
-    query probes its ``nprobe`` nearest cells and runs exact cosine inside
+    """IVF ANN: database vectors live in their nearest cell; each query
+    probes its ``nprobe`` nearest cells and runs exact cosine inside
     them. Cells partition the corpus, so the probe join yields each
-    candidate once — no dedup needed. Pass ``centroids`` from
-    :func:`ivf_train` for the trained quantizer."""
-    a = ivf_assign(emb, n_cells, id_col, vec_col, nprobe=max(1, nprobe), centroids=centroids)
-    e = (
-        emb.join(a.filter(F.col("r") == 1).drop("r"), id_col)
-        .select(F.col(id_col), "cell", _as_double(vec_col).alias("v"))
-        .withColumn("nrm", _norm("v"))
-    )
-    qv = emb.filter(F.col(id_col).isin(query_ids)).select(
-        F.col(id_col).alias("query_vec_id"), _as_double(vec_col).alias("qv")
-    ).withColumn("qn", _norm("qv"))
-    probes = (
-        a.filter(F.col(id_col).isin(query_ids))
-        .select(F.col(id_col).alias("query_vec_id"), "cell")
-    )
-    q = probes.join(qv, "query_vec_id")
-    scored = (
-        e.join(F.broadcast(q), "cell")
-        .filter(F.col(id_col) != F.col("query_vec_id"))
-        .withColumn("cos_r", F.round(_dot("v", "qv") / (F.col("nrm") * F.col("qn")), 6))
-    )
-    w = Window.partitionBy("query_vec_id").orderBy(F.desc("cos_r"), F.asc(id_col))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_vec_id", F.col(id_col).alias("vec_id"), "cos_r", "rank")
-    )
+    candidate once — no dedup needed. Both sides get their cells from one
+    narrow map over their own rows, so the corpus is never joined back
+    to an assignment. Pass ``centroids`` from :func:`ivf_train` for the
+    trained quantizer."""
+    cents = centroids if centroids is not None else ivf_centroids(emb, n_cells, id_col, vec_col)
+    rows, given = cents.collect(), centroids is not None
+    e = _vectors(emb, id_col, vec_col)
+    db = _probed(e, cents, 1, given, rows)  # each vector's storage cell
+    q = _probed(e.filter(F.col(id_col).isin(query_ids)), cents, max(1, nprobe), given, rows)
+    return _exact_topk(db, _as_queries(q, id_col, "cell"), "cell", k, id_col)
 
 
 # ---------------------------------------------------------------------------
 # Product Quantization (PQ) — the embedding COMPRESSION scale path
 # ---------------------------------------------------------------------------
 
-def _sub_slices(vcol: str, m: int, dsub: int):
-    return [F.slice(F.col(vcol), s * dsub + 1, dsub) for s in range(m)]
+def _subvectors(vcol: str, m: int, dsub: int):
+    """One row per subspace: posexplode of the ``m`` slices of ``vcol``."""
+    return F.posexplode(F.array(*[F.slice(F.col(vcol), s * dsub + 1, dsub) for s in range(m)]))
 
 
 def _pq_dims(emb: DataFrame, m: int, vec_col: str) -> int:
@@ -477,39 +474,19 @@ def pq_train(
     narrow Arrow/BLAS map with no N·m·n_codes-row shuffle."""
     dsub = _pq_dims(emb, m, vec_col)
     e = emb.select(F.col(id_col), _as_double(vec_col).alias("v"))
-    # md5-pick seeds (the ivf_centroids trick: bounded top-n, exact SQL
-    # twin); code labels are the seed vectors' own ids — arbitrary but
-    # stable labels, densifiable with the dictionary range-partition
-    # trick if a uint8 storage layout is wanted
-    seeds = (
-        e.withColumn("hk", F.md5(F.col(id_col).cast("string")))
-        .orderBy("hk", id_col)
-        .limit(n_codes)
-        .select(F.col(id_col).alias("code"), "v")
-    )
-    cb = seeds.select(
-        "code", F.posexplode(F.array(*_sub_slices("v", m, dsub))).alias("sub", "cw")
-    ).select("sub", "code", "cw")
-    subs = e.select(
-        F.col(id_col), F.posexplode(F.array(*_sub_slices("v", m, dsub))).alias("sub", "sv")
-    )
+    # code labels are the seed vectors' own ids — arbitrary but stable,
+    # densifiable (dictionary range-partition trick) for a uint8 layout
+    seeds = _md5_pick(e, n_codes, id_col).select(F.col(id_col).alias("code"), "v")
+    cb = seeds.select(_subvectors("v", m, dsub).alias("sub", "cw"), "code")
+    cb = cb.select("sub", "code", "cw")
+    subs = e.select(F.col(id_col), _subvectors("v", m, dsub).alias("sub", "sv"))
     for _ in range(n_iter):
         cb_rows = cb.collect()
         if not cb_rows:
             return cb  # empty input: nothing to assign
         assign_udf = _nearest_code_udf(cb_rows)
         assigned = subs.select(id_col, "sub", "sv", assign_udf("sub", "sv").alias("code"))
-        means = (
-            assigned.select("sub", "code", F.posexplode("sv").alias("pos", "val"))
-            .groupBy("sub", "code", "pos")
-            .agg(F.round(F.avg("val"), 6).alias("mval"))
-            .groupBy("sub", "code")
-            .agg(
-                F.transform(
-                    F.sort_array(F.collect_list(F.struct("pos", "mval"))), lambda s: s["mval"]
-                ).alias("new_cw")
-            )
-        )
+        means = _rounded_means(assigned, ["sub", "code"], "sv", "new_cw")
         # Classic Lloyd convention: a codeword with no assignments keeps
         # its previous value (left join + coalesce) so the codebook never
         # silently shrinks below n_codes.
@@ -533,11 +510,16 @@ def pq_encode(
     per subspace by rounded squared-L2, ties → code asc — a narrow
     Arrow-batched map (:func:`_nearest_code_udf`, one BLAS matmul per
     batch — no join, no shuffle)."""
+    return _pq_codes(emb, codebooks, m, vec_col, [id_col])
+
+
+def _pq_codes(emb: DataFrame, codebooks: DataFrame, m: int, vec_col: str, keep: list) -> DataFrame:
+    """:func:`pq_encode` carrying the ``keep`` columns through the map:
+    (*keep, sub, code)."""
     dsub = _pq_dims(emb, m, vec_col)
-    subs = emb.select(
-        F.col(id_col),
-        F.posexplode(F.array(*_sub_slices(vec_col, m, dsub))).alias("sub", "raw_sv"),
-    ).withColumn("sv", F.transform("raw_sv", lambda x: x.cast("double")))
+    subs = emb.select(*keep, _subvectors(vec_col, m, dsub).alias("sub", "raw_sv")).withColumn(
+        "sv", F.transform("raw_sv", lambda x: x.cast("double"))
+    )
     cb_rows = codebooks.collect()
     if not cb_rows:
         # codebooks are always caller-supplied here: empty model over
@@ -545,9 +527,20 @@ def pq_encode(
         # rather than emit a silently empty encoded index
         if not emb.isEmpty():
             raise ValueError("pq_encode: empty codebooks for non-empty input")
-        return _empty_frame(emb, [subs.schema[id_col], subs.schema["sub"], codebooks.schema["code"]])
+        fields = [subs.schema[c] for c in (*keep, "sub")]
+        return _empty_frame(emb, [*fields, codebooks.schema["code"]])
     assign_udf = _nearest_code_udf(cb_rows)
-    return subs.select(id_col, "sub", assign_udf("sub", "sv").alias("code"))
+    return subs.select(*keep, "sub", assign_udf("sub", "sv").alias("code"))
+
+
+def _codeword_lut(df: DataFrame, keys: list, vcol: str, cb: DataFrame, m: int, dsub: int, dot: str):
+    """An ADC lookup table (broadcast-sized: |df|·m·n_codes rows): per
+    row of ``df`` and codeword, the dot of the row's ``vcol`` subvector
+    with the codeword, and |cw|². Returns (*keys, sub, code, dot, cwn2)."""
+    subs = df.select(*keys, _subvectors(vcol, m, dsub).alias("sub", "x"))
+    return subs.join(F.broadcast(cb), "sub").select(
+        *keys, "sub", "code", _dot("x", "cw").alias(dot), _dot("cw", "cw").alias("cwn2")
+    )
 
 
 def pq_topk(
@@ -570,20 +563,8 @@ def pq_topk(
     cb = codebooks if codebooks is not None else pq_train(emb, m, n_codes, n_iter, id_col, vec_col)
     dsub = _pq_dims(emb, m, vec_col)
     codes = pq_encode(emb, cb, m, id_col, vec_col)
-    qe = emb.filter(F.col(id_col).isin(query_ids)).select(
-        F.col(id_col).alias("query_vec_id"), _as_double(vec_col).alias("qv")
-    ).withColumn("qn", _norm("qv"))
-    qsubs = qe.select(
-        "query_vec_id", "qn", F.posexplode(F.array(*_sub_slices("qv", m, dsub))).alias("sub", "qsv")
-    )
-    lut = qsubs.join(F.broadcast(cb), "sub").select(
-        "query_vec_id",
-        "qn",
-        "sub",
-        "code",
-        _dot("qsv", "cw").alias("part"),
-        _dot("cw", "cw").alias("cwn2"),
-    )
+    qe = _as_queries(_vectors(emb.filter(F.col(id_col).isin(query_ids)), id_col, vec_col), id_col)
+    lut = _codeword_lut(qe, ["query_vec_id", "qn"], "qv", cb, m, dsub, "part")
     scored = (
         codes.join(F.broadcast(lut), ["sub", "code"])
         .groupBy("query_vec_id", "qn", F.col(id_col).alias("vec_id"))
@@ -591,12 +572,7 @@ def pq_topk(
         .filter(F.col("vec_id") != F.col("query_vec_id"))
         .withColumn("cos_r", F.round(F.col("num") / (F.col("qn") * F.sqrt("rn2")), 6))
     )
-    w = Window.partitionBy("query_vec_id").orderBy(F.desc("cos_r"), F.asc("vec_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_vec_id", "vec_id", "cos_r", "rank")
-    )
+    return _rank_topk(scored, k, "vec_id")
 
 
 # ---------------------------------------------------------------------------
@@ -609,17 +585,24 @@ def ivfpq_residuals(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """Assign every vector to its nearest coarse cell (r=1) and subtract
-    that centroid: the residual is what the PQ codebooks quantize
-    (Jégou et al. 2011 §V, IVFADC). Returns (id, cell, rv). The
+    """Assign every vector to its nearest coarse cell (:func:`_probed`)
+    and subtract that centroid: the residual is what the PQ codebooks
+    quantize (Jégou et al. 2011 §V, IVFADC). Returns (id, cell, rv). The
     subtraction is exact IEEE (`zip_with` x−y), so it twins in SQL."""
-    a1 = ivf_assign(emb, id_col=id_col, vec_col=vec_col, nprobe=1, centroids=centroids)
     e = emb.select(F.col(id_col), _as_double(vec_col).alias("v"))
     return (
-        e.join(a1.drop("r"), id_col)
+        _probed(e, centroids, 1, True)
         .join(F.broadcast(centroids.select("cell", "cv")), "cell")
         .select(id_col, "cell", F.zip_with("v", "cv", lambda x, y: x - y).alias("rv"))
     )
+
+
+def _residual_pq(resid: DataFrame, m: int, n_codes: int, n_iter: int, id_col: str):
+    """Train PQ codebooks on the residuals (:func:`ivfpq_residuals`) and
+    encode them, carrying each row's cell through the encode map. Returns
+    (codebooks, codes) with codes = (id, cell, sub, code)."""
+    cb = pq_train(resid, m, n_codes, n_iter, id_col, "rv")
+    return cb, _pq_codes(resid, cb, m, "rv", [id_col, "cell"])
 
 
 def _adc_rank(
@@ -636,31 +619,18 @@ def _adc_rank(
 ) -> DataFrame:
     """Shared IVFADC scoring tail (used by :func:`ivfpq_topk` and
     :func:`ivfpq_search` — ONE copy of the reconstruction-cosine
-    formula). Inputs: ``codes`` (id, sub, code, cell) — the corpus-sized
+    formula). Inputs: ``codes`` (id, cell, sub, code) — the corpus-sized
     table; ``probes`` (query_vec_id, cell); ``qe`` (query_vec_id, qv,
     qn). Builds the broadcast-sized LUTs (ccw: n_cells·m·n_codes; qlut:
-    |queries|·m·n_codes; qdotc: |queries|·nprobe) and ranks
-
-        cos(q, x̂) = (q·c + Σ_sub q_sub·cw) /
-                    (|q| · sqrt(|c|² + 2·Σ c_sub·cw + Σ|cw|²))
-    """
-    csubs = cents.select(
-        "cell", "cn", F.posexplode(F.array(*_sub_slices("cv", m, dsub))).alias("sub", "csv")
-    )
-    ccw = csubs.join(F.broadcast(cb), "sub").select(
-        "cell", "sub", "code", _dot("csv", "cw").alias("cdotcw"), _dot("cw", "cw").alias("cwn2")
-    )
+    |queries|·m·n_codes; qdotc: |queries|·nprobe) and ranks by cos(q, x̂)
+    as spelled out in :func:`ivfpq_topk`."""
+    ccw = _codeword_lut(cents, ["cell"], "cv", cb, m, dsub, "cdotcw")
     qdotc = (
         probes.join(qe, "query_vec_id")
         .join(F.broadcast(cents), "cell")
         .select("query_vec_id", "cell", _dot("qv", "cv").alias("qc"), "qn", "cn")
     )
-    qsubs = qe.select(
-        "query_vec_id", F.posexplode(F.array(*_sub_slices("qv", m, dsub))).alias("sub", "qsv")
-    )
-    qlut = qsubs.join(F.broadcast(cb), "sub").select(
-        "query_vec_id", "sub", "code", _dot("qsv", "cw").alias("qpart")
-    )
+    qlut = _codeword_lut(qe, ["query_vec_id"], "qv", cb, m, dsub, "qpart").drop("cwn2")
     persub = (
         codes.join(F.broadcast(probes), "cell")
         .join(F.broadcast(qlut), ["query_vec_id", "sub", "code"])
@@ -682,12 +652,7 @@ def _adc_rank(
             6,
         ),
     )
-    w = Window.partitionBy("query_vec_id").orderBy(F.desc("cos_r"), F.asc("vec_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_vec_id", "vec_id", "cos_r", "rank")
-    )
+    return _rank_topk(scored, k, "vec_id")
 
 
 def ivfpq_topk(
@@ -722,27 +687,17 @@ def ivfpq_topk(
     stay exactly SQL-twinnable). Returns the family shape
     (query_vec_id, vec_id, cos_r, rank)."""
     dsub = _pq_dims(emb, m, vec_col)
-    # materialize the n_cells centroid rows once — every consumer below
-    # (storage assign, probes, qdotc, ccw) would otherwise re-run the
-    # corpus-wide TakeOrderedAndProject pick
-    cents = _materialize_small(
-        centroids if centroids is not None else ivf_centroids(emb, n_cells, id_col, vec_col)
-    )
+    cents = _coarse_model(emb, centroids, n_cells, id_col, vec_col)
     # NOT persisted: callers hold the returned lazy frame, so an eager
     # cache here would leak for the session lifetime (the persisted
     # serving path is ivfpq_build/ivfpq_search); the residual lineage is
-    # a narrow scan + broadcast join, cheap to recompute
+    # a narrow map + broadcast join, cheap to recompute
     resid = ivfpq_residuals(emb, cents, id_col, vec_col)
-    cb = pq_train(resid, m, n_codes, n_iter, id_col, "rv")
-    codes = pq_encode(resid, cb, m, id_col, "rv").join(resid.select(id_col, "cell"), id_col)
-    qe = (
-        emb.filter(F.col(id_col).isin(query_ids))
-        .select(F.col(id_col).alias("query_vec_id"), _as_double(vec_col).alias("qv"))
-        .withColumn("qn", _norm("qv"))
-    )
+    cb, codes = _residual_pq(resid, m, n_codes, n_iter, id_col)
+    qvecs = emb.filter(F.col(id_col).isin(query_ids))
+    qe = _as_queries(_vectors(qvecs, id_col, vec_col), id_col)
     probes = ivf_assign(
-        emb.filter(F.col(id_col).isin(query_ids)),
-        id_col=id_col, vec_col=vec_col, nprobe=max(1, nprobe), centroids=cents,
+        qvecs, id_col=id_col, vec_col=vec_col, nprobe=max(1, nprobe), centroids=cents
     ).select(F.col(id_col).alias("query_vec_id"), "cell")
     return _adc_rank(codes, cents, cb, qe, probes, m, dsub, k, id_col, exclude_self=True)
 
@@ -771,23 +726,17 @@ def ivfpq_build(
     (~64× smaller at d=64/m=4) and queries never touch the raw corpus.
     Returns the params dict (also written to ``{path}/meta.json``-style
     parquet for self-description)."""
-    cents = _materialize_small(
-        centroids if centroids is not None else ivf_centroids(emb, n_cells, id_col, vec_col)
-    )
+    cents = _coarse_model(emb, centroids, n_cells, id_col, vec_col)
     cents.write.mode("overwrite").parquet(f"{path}/centroids")
     resid = ivfpq_residuals(emb, cents, id_col, vec_col).persist()
     try:
-        cb = pq_train(resid, m, n_codes, n_iter, id_col, "rv")
+        cb, codes = _residual_pq(resid, m, n_codes, n_iter, id_col)
         cb.write.mode("overwrite").parquet(f"{path}/codebooks")
-        codes = pq_encode(resid, cb, m, id_col, "rv").join(
-            resid.select(id_col, "cell"), id_col
-        )
         codes.write.mode("overwrite").partitionBy("cell").parquet(f"{path}/codes")
     finally:
         resid.unpersist()
     meta = {"n_cells": n_cells, "m": m, "n_codes": n_codes, "id_col": id_col}
-    spark = emb.sparkSession
-    spark.createDataFrame([meta]).coalesce(1).write.mode("overwrite").parquet(f"{path}/meta")
+    emb.sparkSession.createDataFrame([meta]).coalesce(1).write.mode("overwrite").parquet(f"{path}/meta")
     return meta
 
 
@@ -803,10 +752,11 @@ def ivfpq_search(
     """Query a persisted IVFADC index (:func:`ivfpq_build`) with a frame
     of raw query vectors (id_col, vec_col). Queries probe their
     ``nprobe`` nearest cells through :func:`ivf_assign` (the probe
-    :func:`ivfpq_topk` uses), which filters the codes scan to the queries' cells BEFORE the read (partition pruning on the
-    ``cell`` directory key), then scores through the same broadcast LUTs
-    as :func:`ivfpq_topk`. Self-matches are kept: external queries are
-    not corpus rows (callers with in-corpus queries filter afterwards)."""
+    :func:`ivfpq_topk` uses), which filters the codes scan to the
+    queries' cells BEFORE the read (partition pruning on the ``cell``
+    directory key), then scores through the same broadcast LUTs as
+    :func:`ivfpq_topk`. Self-matches are kept: external queries are not
+    corpus rows (callers with in-corpus queries filter afterwards)."""
     meta = spark.read.parquet(f"{path}/meta").first().asDict()
     m = int(meta["m"])
     cents = _materialize_small(spark.read.parquet(f"{path}/centroids"))
@@ -814,10 +764,7 @@ def ivfpq_search(
     codes = spark.read.parquet(f"{path}/codes")
     dsub = _pq_dims(queries, m, vec_col)
 
-    qe = (
-        queries.select(F.col(id_col).alias("query_vec_id"), _as_double(vec_col).alias("qv"))
-        .withColumn("qn", _norm("qv"))
-    )
+    qe = _as_queries(_vectors(queries, id_col, vec_col), id_col)
     # materialize the query-sized probe set ONCE: probe_cells derives
     # locally (no extra job) and the three downstream uses don't re-run
     # the queries×centroids assignment

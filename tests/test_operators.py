@@ -593,6 +593,26 @@ def test_ivfpq_build_search_matches_inline(spark, emb, tmp_path):
     assert got_top5 == want
 
 
+def test_ivf_plans_never_join_corpus_by_id(spark, emb):
+    """The nearest cell is a column of one narrow map over the corpus, so
+    no IVF plan joins the corpus back to its own assignment by id (at
+    corpus scale that join is corpus-sized on both sides)."""
+    import re
+
+    cents = similarity.ivf_centroids(emb, n_cells=4)
+    plans = {
+        "ivf_topk": similarity.ivf_topk(emb, [0, 1, 2], k=5, n_cells=8, nprobe=2),
+        "ivfpq_residuals": similarity.ivfpq_residuals(emb, cents),
+        "ivfpq_topk": similarity.ivfpq_topk(emb, [0, 1, 2], k=5, n_cells=4, nprobe=2),
+    }
+    for name, df in plans.items():
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "Join" in plan, name
+        for left, right in re.findall(r"Join \[([^\]]*)\], \[([^\]]*)\]", plan):
+            keys = [k.strip().split("#")[0] for k in (left + "," + right).split(",")]
+            assert "vec_id" not in keys, f"{name} joins on the id column: {left} = {right}"
+
+
 def test_ann_udf_path_empty_input_is_lazy_empty(spark):
     """An empty embeddings frame (the fuzz class the index builder was
     hardened against) must yield empty results on the Arrow/BLAS
@@ -616,6 +636,12 @@ def test_ann_udf_path_empty_input_is_lazy_empty(spark):
     empty_cents = spark.createDataFrame([], "cell long, cv array<double>, cn double")
     with pytest.raises(ValueError, match="empty centroids"):
         similarity.ivf_assign(one, centroids=empty_cents)
+    # the nearest-cell map keeps the same rules for every IVF caller
+    assert similarity.ivfpq_residuals(empty, empty_cents).count() == 0
+    with pytest.raises(ValueError, match="empty centroids"):
+        similarity.ivf_topk(one, [0], centroids=empty_cents)
+    with pytest.raises(ValueError, match="empty centroids"):
+        similarity.ivfpq_topk(one, [0], m=2, n_codes=4, centroids=empty_cents)
 
 
 def test_ivfpq_search_external_queries(spark, emb, tmp_path):
