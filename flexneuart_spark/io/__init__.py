@@ -1,4 +1,5 @@
 from flexneuart_spark.io.trec import (  # noqa: F401
+    rank_run,
     read_qrels,
     read_queries,
     read_run,

@@ -78,15 +78,21 @@ def read_run(spark: SparkSession, path: str) -> DataFrame:
     )
 
 
+def rank_run(scored: DataFrame, k: int | None = None, score: str = "score") -> DataFrame:
+    """The one run tail: (query_id, doc_id, <score>, rank) ranked per
+    query under the reference tie rule — ``score`` desc, then doc_id
+    desc (runs.py:61-72) — keeping rank ≤ ``k`` when ``k`` is given."""
+    w = Window.partitionBy("query_id").orderBy(F.desc(score), F.desc("doc_id"))
+    ranked = scored.withColumn("rank", F.row_number().over(w))
+    if k is not None:
+        ranked = ranked.filter(F.col("rank") <= k)
+    return ranked.select("query_id", "doc_id", score, "rank")
+
+
 def run_df_from_search(run: DataFrame, run_id: str = DEFAULT_RUN_ID) -> DataFrame:
     """Normalize a (query_id, doc_id, score[, rank]) frame into TREC shape:
     re-sort by the tie rule, re-enumerate ranks (runs.py:61-72,88-92)."""
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.desc("doc_id"))
-    return (
-        run.select("query_id", "doc_id", "score")
-        .withColumn("rank", F.row_number().over(w))
-        .withColumn("run_id", F.lit(run_id))
-    )
+    return rank_run(run.select("query_id", "doc_id", "score")).withColumn("run_id", F.lit(run_id))
 
 
 def write_run(run: DataFrame, path: str, run_id: str = DEFAULT_RUN_ID) -> None:

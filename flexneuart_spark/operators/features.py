@@ -19,6 +19,12 @@ Feature registry (each ``fn(docs_tok, q_tok, **params)``):
 - ``model1``     — C7 (pass ``tran=<translation DataFrame>``)
 - ``cosine``     — C5 (``FeatExtrTFIDFSimilarity`` with similType=cosine)
 - ``close_pair`` — C3 (``FeatExtrBM25ClosePairSimilarity``)
+- ``sdm``        — C4 (``FeatExtrSDMSimilarity``)
+
+``close_pair`` and ``sdm`` score with index search's close-pair core
+(``search/proximity.close_pair_frame``; the reference's extractor reuses
+its similarity's ``compute`` too), over ``docs_tok``'s idf and avgdl.
+Rankers end in the shared run tail (``io/trec.rank_run``).
 
 The descriptor-driven experiment runner over this registry (the
 ``run_one_experiment.sh`` workflow) lives in ``flexneuart_spark/exper.py``.
@@ -28,10 +34,11 @@ from __future__ import annotations
 
 from collections.abc import Callable
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from flexneuart_spark.config import BM25_B, BM25_K1
+from flexneuart_spark.io.trec import rank_run
 
 
 def _feat_bm25(docs_tok: DataFrame, q_tok: DataFrame, k1: float = BM25_K1, b: float = BM25_B) -> DataFrame:
@@ -102,114 +109,39 @@ def _feat_cosine(docs_tok: DataFrame, q_tok: DataFrame) -> DataFrame:
     )
 
 
-def _close_pair_frame(
+def _close_pair(
     docs_tok: DataFrame,
     q_tok: DataFrame,
     modes: list[tuple[str, bool]],
-    query_window: int = 4,
-    doc_window: int = 8,
-    k1: float = BM25_K1,
-    b: float = BM25_B,
+    query_window: int,
+    doc_window: int,
+    k1: float,
+    b: float,
 ) -> DataFrame:
-    """Close-pair proximity scores for candidate (query, doc) pairs —
-    one output column per ``(name, ordered)`` mode, every mode computed
-    in the SAME Arrow-batched pandas pass (SDM needs ordered AND
-    unordered; the doc's token-id conversion is shared).
-
-    Candidacy is per query: a nonzero score needs a close pair of two
-    DISTINCT query terms both present in the doc (``query_pairs`` skips
-    a == b), so (query, doc) pairs sharing ≥2 distinct terms — found by
-    an exploded-term equi-join against the broadcast query terms — are
-    the exact superset. The old form gated docs on the UNION of all
-    queries' vocab and then cross-joined every passing doc with every
-    query, shipping each doc through the Python kernel Q× (scores 0 for
-    the queries it shares nothing with, filtered afterwards).
-
-    The query-vocabulary idf slice is driver-small (queries are a
-    bounded set) and ships by closure."""
+    """The one close-pair core (``search/proximity.close_pair_frame``)
+    over the ``docs_tok`` universe's own statistics: idf of every query
+    term it holds (the builder's :func:`bm25_idf`) and its mean length."""
     import numpy as np
-    import pandas as pd
 
-    from flexneuart_spark.search.proximity import close_pair_score
+    from flexneuart_spark.index.builder import bm25_idf
+    from flexneuart_spark.search.proximity import close_pair_frame
 
-    spark = q_tok.sparkSession
-    empty_schema = "query_id string, doc_id string, " + ", ".join(
-        f"{name} double" for name, _ in modes
-    )
     stats = docs_tok.select(F.size("tokens").alias("dl")).agg(
         F.count("*").alias("n"), F.avg("dl").alias("avgdl")
     ).collect()[0]
-    n_docs, avgdl = int(stats.n), float(stats.avgdl or 1.0)
-    qvocab = [
-        r.term
-        for r in q_tok.select(F.explode(F.array_distinct("tokens")).alias("term"))
-        .distinct()
-        .collect()
-    ]
-    if not qvocab:
-        return spark.createDataFrame([], empty_schema)
-    dfreq = {
-        r.term: r.df
-        for r in docs_tok.select("doc_id", F.explode(F.array_distinct("tokens")).alias("term"))
-        .where(F.col("term").isin(qvocab))
+    qterms = q_tok.select(F.explode("tokens").alias("term")).distinct()
+    dfreq = (
+        docs_tok.select(F.explode(F.array_distinct("tokens")).alias("term"))
+        .join(F.broadcast(qterms), "term")
         .groupBy("term")
         .agg(F.count("*").alias("df"))
         .collect()
-    }
-    terms = sorted(t for t in qvocab if t in dfreq)
-    if not terms:
-        return spark.createDataFrame([], empty_schema)
-    term_to_id = {t: i for i, t in enumerate(terms)}
-    idf_by_id = np.array(
-        [float(np.log(1.0 + (n_docs - dfreq[t] + 0.5) / (dfreq[t] + 0.5))) for t in terms]
     )
-    d_terms = docs_tok.select(
-        "doc_id", F.explode(F.array_distinct("tokens")).alias("term")
-    ).where(F.col("term").isin(terms))
-    q_terms = q_tok.select(
-        "query_id", F.explode(F.array_distinct("tokens")).alias("term")
-    ).where(F.col("term").isin(terms))
-    cand = (
-        d_terms.join(F.broadcast(q_terms), "term")
-        .groupBy("query_id", "doc_id")
-        .agg(F.count("*").alias("n_match"))
-        .where(F.col("n_match") >= 2)
+    idf = bm25_idf(int(stats.n), np.array([r.df for r in dfreq], dtype=np.float64))
+    return close_pair_frame(
+        docs_tok, q_tok, modes, dict(zip([r.term for r in dfreq], idf.tolist())),
+        float(stats.avgdl or 1.0), query_window, doc_window, k1, b,
     )
-    qpairs = (
-        cand.select("query_id", "doc_id")
-        .join(docs_tok, "doc_id")
-        .join(
-            F.broadcast(q_tok.select("query_id", F.col("tokens").alias("q_tokens"))),
-            "query_id",
-        )
-    )
-    qw_, dw_, K1, B, AVGDL, modes_ = query_window, doc_window, k1, b, avgdl, list(modes)
-
-    def _score(it):
-        for pdf in it:
-            cols = {name: [] for name, _ in modes_}
-            for qt, dt in zip(pdf["q_tokens"], pdf["tokens"]):
-                qi = np.array([term_to_id.get(t, -1) for t in qt], dtype=np.int64)
-                di = np.array([term_to_id.get(t, -1) for t in dt], dtype=np.int64)
-                for name, ordd in modes_:
-                    cols[name].append(
-                        close_pair_score(
-                            qi, di, len(dt), idf_by_id, AVGDL,
-                            query_window=qw_, doc_window=dw_, ordered=ordd, k1=K1, b=B,
-                        )
-                    )
-            yield pd.DataFrame(
-                {"query_id": pdf["query_id"], "doc_id": pdf["doc_id"], **cols}
-            )
-
-    out = qpairs.select("query_id", "doc_id", "q_tokens", "tokens").mapInPandas(
-        _score, empty_schema
-    )
-    keep = None
-    for name, _ in modes:
-        cond = F.col(name) != 0.0
-        keep = cond if keep is None else (keep | cond)
-    return out.filter(keep)
 
 
 def _feat_close_pair(
@@ -222,11 +154,8 @@ def _feat_close_pair(
     b: float = BM25_B,
 ) -> DataFrame:
     """C3 close-pair proximity as a feature
-    (``FeatExtrBM25ClosePairSimilarity``): see :func:`_close_pair_frame`."""
-    return _close_pair_frame(
-        docs_tok, q_tok, [("score", ordered)],
-        query_window=query_window, doc_window=doc_window, k1=k1, b=b,
-    )
+    (``FeatExtrBM25ClosePairSimilarity``): see :func:`_close_pair`."""
+    return _close_pair(docs_tok, q_tok, [("score", ordered)], query_window, doc_window, k1, b)
 
 
 def _feat_maxsim(docs_tok: DataFrame, q_tok: DataFrame) -> DataFrame:
@@ -312,10 +241,7 @@ def _feat_sdm(
         "query_id", "doc_id", F.col("score").alias("s_uni")
     )
     # ordered + unordered in ONE candidate scan / pandas pass
-    prox = _close_pair_frame(
-        docs_tok, q_tok, [("s_ord", True), ("s_unord", False)],
-        query_window=query_window, doc_window=window, k1=k1, b=b,
-    )
+    prox = _close_pair(docs_tok, q_tok, [("s_ord", True), ("s_unord", False)], query_window, window, k1, b)
     return (
         uni.join(prox, ["query_id", "doc_id"], "full")
         .fillna({"s_uni": 0.0, "s_ord": 0.0, "s_unord": 0.0})
@@ -397,13 +323,7 @@ def linear_rerank(features: DataFrame, weights: dict[str, float], k: int = 10) -
     for name, w in weights.items():
         term = F.lit(float(w)) * F.col(name)
         score = term if score is None else score + term
-    scored = features.withColumn("score", score)
-    win = Window.partitionBy("query_id").orderBy(F.desc("score"), F.desc("doc_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(win).cast("int"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "doc_id", "score", "rank")
-    )
+    return rank_run(features.withColumn("score", score), k)
 
 
 def ensemble_rerank(features: DataFrame, ensemble, feature_names: list[str], k: int = 10) -> DataFrame:
@@ -438,10 +358,4 @@ def ensemble_rerank(features: DataFrame, ensemble, feature_names: list[str], k: 
 
     # variadic signature → register explicitly (type hints don't support *args)
     score_udf = F.pandas_udf(_score, DoubleType())
-    scored = features.withColumn("score", score_udf(*[F.col(n) for n in feature_names]))
-    win = Window.partitionBy("query_id").orderBy(F.desc("score"), F.desc("doc_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(win).cast("int"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "doc_id", "score", "rank")
-    )
+    return rank_run(features.withColumn("score", score_udf(*[F.col(n) for n in feature_names])), k)

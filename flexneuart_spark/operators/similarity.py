@@ -42,7 +42,7 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import IntegerType, StructField, StructType
 
@@ -184,7 +184,7 @@ def rp_signature(
         bits = (mat @ proj) >= 0.0
         return pd.Series(["".join("1" if b else "0" for b in row) for row in bits])
 
-    return emb.select(F.col(id_col), F.col(vec_col), _sig(F.col(vec_col)).alias("bucket"))
+    return emb.select(F.col(id_col), F.col(vec_col), _once(_sig(F.col(vec_col))).alias("bucket"))
 
 
 def rp_ann_topk(
@@ -277,6 +277,14 @@ def _probe_cells_udf(cents_rows: list, nprobe: int):
     return _probe
 
 
+def _once(udf_out: Column) -> Column:
+    """A scalar UDF's output as a one-element generator, so the UDF runs
+    once per row: a filter inferred on a plain UDF output column
+    (isnotnull of a join key) is pushed below the projection and runs the
+    UDF a second time, while a generator's output stays above it."""
+    return F.explode(F.array(udf_out))
+
+
 def _empty_frame(df: DataFrame, fields: list) -> DataFrame:
     """A 0-row frame with the given schema fields — the result of an
     assignment over empty input (no centroid/codebook rows to rank)."""
@@ -289,11 +297,10 @@ def _probed(e: DataFrame, cents: DataFrame, nprobe: int, model_given: bool, rows
     (:func:`_probe_cells_udf`). At ``nprobe=1`` that is each vector's
     storage cell, with no join back to the corpus; the stable argsort
     makes it the first probe cell at every ``nprobe``. The generator
-    wraps the UDF call itself: a filter inferred on a plain UDF output
-    column (isnotnull of a join key) is pushed below the projection and
-    runs the UDF twice. Empty input gives a 0-row frame; an explicitly
-    passed (``model_given``) empty model over real data is an upstream
-    bug (wrong or empty index path), so it raises rather than emit a
+    wraps the UDF call itself, so the UDF runs once (:func:`_once`).
+    Empty input gives a 0-row frame; an explicitly passed
+    (``model_given``) empty model over real data is an upstream bug
+    (wrong or empty index path), so it raises rather than emit a
     silently empty assignment. ``rows``: the already collected ``cents``
     (each collect is a Spark job)."""
     cent_rows = cents.collect() if rows is None else rows
@@ -530,7 +537,7 @@ def _pq_codes(emb: DataFrame, codebooks: DataFrame, m: int, vec_col: str, keep: 
         fields = [subs.schema[c] for c in (*keep, "sub")]
         return _empty_frame(emb, [*fields, codebooks.schema["code"]])
     assign_udf = _nearest_code_udf(cb_rows)
-    return subs.select(*keep, "sub", assign_udf("sub", "sv").alias("code"))
+    return subs.select(*keep, "sub", _once(assign_udf("sub", "sv")).alias("code"))
 
 
 def _codeword_lut(df: DataFrame, keys: list, vcol: str, cb: DataFrame, m: int, dsub: int, dot: str):

@@ -26,6 +26,7 @@ from pyspark.sql import functions as F
 from flexneuart_spark.config import BM25_B, BM25_K1
 from flexneuart_spark.functions.tokenize import whitespace_tokens_col
 from flexneuart_spark.index.builder import IndexTables, build_index
+from flexneuart_spark.io.trec import rank_run
 from flexneuart_spark.search.engine import Searcher
 
 K = 10
@@ -170,13 +171,7 @@ def _bm25_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _rounded_topk(scored: DataFrame, score_col: str = "score", k: int = K) -> DataFrame:
-    w = Window.partitionBy("query_id").orderBy(F.desc("score_r"), F.desc("doc_id"))
-    return (
-        scored.withColumn("score_r", F.round(F.col(score_col), 4))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "doc_id", "score_r", "rank")
-    )
+    return rank_run(scored.withColumn("score_r", F.round(F.col(score_col), 4)), k, "score_r")
 
 
 # ---------------------------------------------------------------------------

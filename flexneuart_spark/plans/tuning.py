@@ -11,8 +11,10 @@ points in a single job instead of |grid| retrieval runs.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from flexneuart_spark.io.trec import rank_run
 
 K1_GRID = [round(0.4 + 0.2 * i, 1) for i in range(7)]  # gen_bm25_tune_json_desc.py:60-76
 B_GRID = [0.3, 0.5, 0.75, 0.9]
@@ -61,9 +63,7 @@ def bm25_grid_eval(
                 .groupBy("query_id", "doc_id")
                 .agg(F.sum("partial").alias("score"))
             )
-            w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.desc("doc_id"))
-            topk = scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
-            j = topk.join(qrels.filter(F.col("grade") > 0), ["query_id", "doc_id"], "left")
+            j = rank_run(scored, k).join(qrels.filter(F.col("grade") > 0), ["query_id", "doc_id"], "left")
             per_q = j.groupBy("query_id").agg(
                 (F.sum(F.when(F.col("grade") > 0, 1).otherwise(0)) / F.lit(float(k))).alias("p")
             )

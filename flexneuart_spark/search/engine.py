@@ -42,12 +42,13 @@ from functools import reduce
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from flexneuart_spark.config import BM25_B, BM25_K1
 from flexneuart_spark.functions.tokenize import TOKENIZERS
 from flexneuart_spark.index.builder import SMALL_VOCAB, IndexTables, bm25_idf
+from flexneuart_spark.io.trec import rank_run
 from flexneuart_spark.search.scoring import TermPostings, bmw_topk, exhaustive_topk, maxscore_topk
 
 # result-identical top-k kernels (equivalence-tested); maxscore is the default
@@ -108,12 +109,7 @@ def _search_frames(
 
     scored = posts.groupBy("seg", "shard").applyInPandas(score_shard, _SCORED_SCHEMA)
     labeled = fwd_ids.join(F.broadcast(scored), ["seg", "shard", "ord"], "inner")
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.desc("doc_id"))
-    return (
-        labeled.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "doc_id", "score", "rank")
-    )
+    return rank_run(labeled, k)
 
 
 class SegmentedSearcher:

@@ -15,9 +15,13 @@ Boytsov & Belova, TREC 2011):
   normalization with the doc's token length; normalized by Σ idf over the
   query's unique in-dictionary words.
 
-The forward index always stores the token sequence (the reference's
-parsedText/mWordIdSeq mode, ``ForwardIndex.java:102-108``), so proximity
-scoring needs no special build flag.
+One core, :func:`close_pair_frame`, runs :func:`close_pair_score` (the
+reference's ``compute``) for every caller, given the caller's idf and
+avgdl: :func:`proximity_topk` (index dictionary idf, corpus-stats avgdl,
+forward-table tokens — stored by every build, the reference's
+parsedText mode, ``ForwardIndex.java:102-108``), :func:`sdm_topk`
+through it, and the ``close_pair``/``sdm`` features
+(``operators/features.py``, statistics over their ``docs_tok``).
 
 The kernel is numpy-vectorized: for each gap g < window, pair keys are
 formed by shifting the id array — no per-position Python.
@@ -27,10 +31,12 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from flexneuart_spark.config import BM25_B, BM25_K1
+from flexneuart_spark.functions.tokenize import TOKENIZERS
+from flexneuart_spark.io.trec import rank_run
 
 
 def query_pairs(
@@ -53,26 +59,18 @@ def doc_pair_counts(
 ) -> dict[int, int]:
     """Counts of close pairs over the doc id sequence, keyed
     a*vocab_size+b. Vectorized over gaps."""
-    counts: dict[int, int] = {}
-    n = len(d_ids)
-    V = vocab_size
-    for g in range(1, doc_window):
-        if g >= n:
-            break
-        a = d_ids[:-g]
-        b = d_ids[g:]
+    keys = []
+    for g in range(1, min(doc_window, len(d_ids))):
+        a, b = d_ids[:-g], d_ids[g:]
         mask = (a >= 0) & (b >= 0) & (a != b)
-        if not mask.any():
-            continue
-        aa, bb = a[mask], b[mask]
+        a, b = a[mask], b[mask]
         if not ordered:
-            lo = np.minimum(aa, bb)
-            hi = np.maximum(aa, bb)
-            aa, bb = lo, hi
-        keys, qtys = np.unique(aa.astype(np.int64) * V + bb.astype(np.int64), return_counts=True)
-        for kkey, qq in zip(keys.tolist(), qtys.tolist()):
-            counts[kkey] = counts.get(kkey, 0) + qq
-    return counts
+            a, b = np.minimum(a, b), np.maximum(a, b)
+        keys.append(a.astype(np.int64) * vocab_size + b.astype(np.int64))
+    if not keys:
+        return {}
+    uniq, counts = np.unique(np.concatenate(keys), return_counts=True)
+    return dict(zip(uniq.tolist(), counts.tolist()))
 
 
 def close_pair_score(
@@ -103,6 +101,75 @@ def close_pair_score(
     uniq = {int(x) for x in q_ids if x >= 0}
     norm_idf = sum(idf_by_id[w] for w in uniq)
     return score / norm_idf if norm_idf > 0 else 0.0
+
+
+def close_pair_frame(
+    docs_tok: DataFrame,
+    q_tok: DataFrame,
+    modes: list[tuple[str, bool]],
+    idf: dict[str, float],
+    avgdl: float,
+    query_window: int = 4,
+    doc_window: int = 8,
+    k1: float = BM25_K1,
+    b: float = BM25_B,
+) -> DataFrame:
+    """Close-pair scores of ``q_tok`` (query_id, tokens) against
+    ``docs_tok`` (doc_id, tokens): (query_id, doc_id, <name> double ...)
+    for every pair nonzero in some ``(name, ordered)`` mode, all modes in
+    ONE Arrow pass. ``idf``: term → idf of the query terms the doc
+    universe holds (the rest are OOV); ``avgdl``: its mean length.
+
+    A nonzero score needs two DISTINCT live query terms in the doc, so
+    two exact gates pick candidates: docs holding ≥2 live terms (a narrow
+    filter — only those docs are shuffled), then per query the docs
+    sharing ≥2 terms with it (equi-join on the broadcast query terms).
+    Each candidate doc carries its query ids into the kernel, so its
+    token→id conversion runs once. Query id sequences and the idf slice
+    are driver-small and ship by closure."""
+    spark = q_tok.sparkSession
+    schema = "query_id string, doc_id string, " + ", ".join(f"{name} double" for name, _ in modes)
+    terms = sorted(idf)
+    if not terms:
+        return spark.createDataFrame([], schema)
+    term_to_id = {t: i for i, t in enumerate(terms)}
+    idf_by_id = np.array([idf[t] for t in terms], dtype=np.float64)
+    q_ids = {
+        r.query_id: np.array([term_to_id.get(t, -1) for t in r.tokens], dtype=np.int64)
+        for r in q_tok.select("query_id", "tokens").collect()
+    }
+    live = F.array_intersect(F.array_distinct("tokens"), F.array(*[F.lit(t) for t in terms]))
+    docs = docs_tok.where(F.size(live) >= 2).select("doc_id", "tokens")
+    q_terms = q_tok.select("query_id", F.explode(F.array_distinct("tokens")).alias("term"))
+    cand = (
+        docs.select("doc_id", F.explode(live).alias("term"))
+        .join(F.broadcast(q_terms.where(F.col("term").isin(terms))), "term")
+        .groupBy("query_id", "doc_id")
+        .agg(F.count("*").alias("n_match"))
+        .where(F.col("n_match") >= 2)
+        .groupBy("doc_id")
+        .agg(F.collect_list("query_id").alias("qids"))
+    )
+    qw, dw, K1, B, modes_ = query_window, doc_window, k1, b, list(modes)
+
+    def _score(batches):
+        for pdf in batches:
+            out = {"query_id": [], "doc_id": [], **{name: [] for name, _ in modes_}}
+            for did, qids, dt in zip(pdf["doc_id"], pdf["qids"], pdf["tokens"]):
+                di = np.array([term_to_id.get(t, -1) for t in dt], dtype=np.int64)
+                for qid in qids:
+                    s = [
+                        close_pair_score(q_ids[qid], di, len(dt), idf_by_id, avgdl, qw, dw, o, K1, B)
+                        for _, o in modes_
+                    ]
+                    if any(s):
+                        out["query_id"].append(qid)
+                        out["doc_id"].append(did)
+                        for (name, _), v in zip(modes_, s):
+                            out[name].append(v)
+            yield pd.DataFrame(out)
+
+    return cand.join(docs, "doc_id").select("doc_id", "qids", "tokens").mapInPandas(_score, schema)
 
 
 def sdm_topk(
@@ -149,12 +216,7 @@ def sdm_topk(
             + F.lit(w_unordered) * F.col("s_unord"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.desc("doc_id"))
-    return (
-        j.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "doc_id", "score", "rank")
-    )
+    return rank_run(j, k)
 
 
 def proximity_topk(
@@ -169,69 +231,22 @@ def proximity_topk(
     k1: float = BM25_K1,
     b: float = BM25_B,
 ) -> DataFrame:
-    """Distributed close-pair top-k over a positional index.
-
-    Candidates = docs containing ≥2 distinct query terms (a pair needs
-    two); their token sequences are scored shard-parallel
-    (applyInPandas), then globally merged under the tie rule."""
-    from flexneuart_spark.functions.tokenize import code_tokenize, whitespace_tokenize
-
-    tok = code_tokenize if tokenizer == "code" else whitespace_tokenize
-    n_docs, _total, avgdl = tables.stats(spark)
-
-    qtoks = {qid: tok(text) for qid, text in queries if tok(text)}
-    vocab = sorted({t for toks in qtoks.values() for t in toks})
-    if not vocab:
-        return spark.createDataFrame([], "query_id string, doc_id string, score double, rank int")
-    dic = (
-        tables.dictionary(spark).filter(F.col("term").isin(vocab)).select("term", "idf").collect()
+    """Close-pair top-k over an index: :func:`close_pair_frame` with the
+    index dictionary's idf, the corpus-stats avgdl and the forward
+    table's token sequences, ranked under the tie rule. ``tokenizer``
+    names the index's tokenizer (``functions/tokenize.TOKENIZERS``) —
+    queries must be tokenized the way the index was."""
+    if tokenizer not in TOKENIZERS:
+        raise ValueError(f"unknown tokenizer {tokenizer!r}; expected one of {sorted(TOKENIZERS)}")
+    tok = TOKENIZERS[tokenizer]
+    qtoks = [(qid, tok(text)) for qid, text in queries]
+    vocab = sorted({t for _, toks in qtoks for t in toks})
+    dic = tables.dictionary(spark).filter(F.col("term").isin(vocab)).select("term", "idf")
+    idf = {r.term: r.idf for r in dic.collect()} if vocab else {}
+    _n_docs, _total, avgdl = tables.stats(spark)
+    scored = close_pair_frame(
+        tables.fwd(spark).select("doc_id", "tokens"),
+        spark.createDataFrame(qtoks, "query_id string, tokens array<string>"),
+        [("score", ordered)], idf, avgdl, query_window, doc_window, k1, b,
     )
-    term_to_id = {r.term: i for i, r in enumerate(sorted(dic, key=lambda r: r.term))}
-    idf_by_id = np.array([r.idf for r in sorted(dic, key=lambda r: r.term)], dtype=np.float64)
-    q_idseqs = {
-        qid: np.array([term_to_id.get(t, -1) for t in toks], dtype=np.int64)
-        for qid, toks in qtoks.items()
-    }
-    q_idseqs = {qid: s for qid, s in q_idseqs.items() if (s >= 0).sum() >= 2}
-    if not q_idseqs:
-        return spark.createDataFrame([], "query_id string, doc_id string, score double, rank int")
-
-    live = [t for t in vocab if t in term_to_id]
-    # the fwd table always stores the token sequence (positional mode);
-    # candidate docs: ≥2 distinct query terms present
-    fwd = tables.fwd(spark)
-    cand = (
-        fwd.select("shard", "doc_id", "doc_len", "tokens")
-        .withColumn(
-            "n_match",
-            F.size(F.array_intersect(F.array_distinct("tokens"), F.array(*[F.lit(t) for t in live]))),
-        )
-        .filter(F.col("n_match") >= 2)
-        .drop("n_match")
-    )
-
-    qw, dw, ordd, K1, B = query_window, doc_window, ordered, k1, b
-
-    def score_part(pdf: pd.DataFrame) -> pd.DataFrame:
-        out_q, out_d, out_s = [], [], []
-        for row in pdf.itertuples(index=False):
-            d_ids = np.array([term_to_id.get(t, -1) for t in row.tokens], dtype=np.int64)
-            for qid, q_ids in q_idseqs.items():
-                s = close_pair_score(
-                    q_ids, d_ids, int(row.doc_len), idf_by_id, avgdl, qw, dw, ordd, K1, B
-                )
-                if s > 0:
-                    out_q.append(qid)
-                    out_d.append(row.doc_id)
-                    out_s.append(s)
-        return pd.DataFrame({"query_id": out_q, "doc_id": out_d, "score": out_s})
-
-    scored = cand.groupBy("shard").applyInPandas(
-        lambda pdf: score_part(pdf), "query_id string, doc_id string, score double"
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.desc("doc_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "doc_id", "score", "rank")
-    )
+    return rank_run(scored, k)

@@ -16,10 +16,11 @@
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from flexneuart_spark.config import BM25_B, BM25_K1
+from flexneuart_spark.io.trec import rank_run
 
 
 def run_provider(run: DataFrame, query_id: str, k: int = 10) -> DataFrame:
@@ -49,8 +50,7 @@ def rerank_tail_adjust(run: DataFrame, reranked: DataFrame, top_r: int) -> DataF
         .select("query_id", "doc_id", "new_score")
     )
     out = head.select("query_id", "doc_id", "new_score").unionByName(adj)
-    w = Window.partitionBy("query_id").orderBy(F.desc("new_score"), F.desc("doc_id"))
-    return out.withColumn("rank", F.row_number().over(w)).withColumnRenamed("new_score", "score")
+    return rank_run(out, score="new_score").withColumnRenamed("new_score", "score")
 
 
 def bm25_rerank(

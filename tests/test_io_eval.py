@@ -182,3 +182,24 @@ def test_numeric_query_ids_in_json_file(spark, tmp_path):
     metrics = fx_eval.evaluate(run, read_qrels(spark, str(qrels_path)))
     assert metrics["map"] == pytest.approx(1.0)
     assert metrics["mrr"] == pytest.approx(1.0)
+
+
+def test_rank_run_tie_rule_and_cut(spark, run):
+    """The one run tail: rank per query by score desc, doc_id desc on
+    ties; rank is an int; ``k`` keeps rank ≤ k, ``k=None`` keeps all."""
+    from pyspark.sql.types import IntegerType
+
+    from flexneuart_spark.io.trec import rank_run
+
+    full = rank_run(run)
+    assert full.columns == ["query_id", "doc_id", "score", "rank"]
+    assert full.schema["rank"].dataType == IntegerType()
+    got = sorted((r.query_id, r.rank, r.doc_id) for r in full.collect())
+    assert got == [("q1", 1, "d3"), ("q1", 2, "d2"), ("q1", 3, "d1"), ("q2", 1, "d1")]
+    assert all(isinstance(r.rank, int) for r in full.collect())
+    cut = sorted((r.query_id, r.rank, r.doc_id) for r in rank_run(run, k=2).collect())
+    assert cut == [("q1", 1, "d3"), ("q1", 2, "d2"), ("q2", 1, "d1")]
+    # a named score column: ranked by it (all tied → doc_id desc), name kept
+    alt = rank_run(run.withColumn("s2", F.lit(1.0)), k=1, score="s2")
+    assert alt.columns == ["query_id", "doc_id", "s2", "rank"]
+    assert sorted((r.query_id, r.doc_id) for r in alt.collect()) == [("q1", "d3"), ("q2", "d1")]

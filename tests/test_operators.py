@@ -613,6 +613,24 @@ def test_ivf_plans_never_join_corpus_by_id(spark, emb):
             assert "vec_id" not in keys, f"{name} joins on the id column: {left} = {right}"
 
 
+def test_ann_encodes_run_their_udf_once(spark, emb):
+    """A scalar UDF whose output is a join key (the PQ code, the SRP
+    bucket) runs once per encode: Spark's inferred isnotnull filter on
+    that key must not push below the projection and evaluate the UDF a
+    second time. Counted in the final (post-AQE) plan only; rp_ann_topk
+    signs the corpus and, separately, its query rows."""
+    cases = {
+        "pq_topk": (similarity.pq_topk(emb, [0, 1, 2], k=5), "_assign", 1),
+        "ivfpq_topk": (similarity.ivfpq_topk(emb, [0, 1, 2], k=5), "_assign", 1),
+        "rp_ann_topk": (similarity.rp_ann_topk(emb, [0, 1, 2], k=5), "_sig", 2),
+    }
+    for name, (df, udf, want) in cases.items():
+        df.collect()
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        final = plan.split("== Initial Plan ==")[0]
+        assert final.count(f"ArrowEvalPython [{udf}") == want, (name, final)
+
+
 def test_ann_udf_path_empty_input_is_lazy_empty(spark):
     """An empty embeddings frame (the fuzz class the index builder was
     hardened against) must yield empty results on the Arrow/BLAS

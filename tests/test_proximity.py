@@ -92,3 +92,76 @@ def test_default_build_is_positional(spark, setup, tmp_path_factory):
     t = build_index(spark, spark.createDataFrame(corpus), idx, num_shards=2)
     run = proximity_topk(spark, t, [("q", "def return")], k=5).collect()
     assert len(run) > 0
+
+
+@pytest.mark.parametrize("ordered", [True, False])
+def test_index_path_equals_feature_path(spark, setup, ordered):
+    """One close-pair core: proximity_topk over an index equals the
+    close_pair feature over that index's forward tokens, ranked with the
+    shared run tail — same ids and ranks, scores within rel 1e-12."""
+    from flexneuart_spark.io.trec import rank_run
+    from flexneuart_spark.operators.features import extract_features
+
+    tables, _, _ = setup
+    queries = [(r.query_id, r.text) for r in make_queries(10, seed=45).itertuples(index=False)]
+    run = proximity_topk(spark, tables, queries, k=10, ordered=ordered)
+    q_tok = spark.createDataFrame(
+        [(qid, code_tokenize(text)) for qid, text in queries], "query_id string, tokens array<string>"
+    )
+    feats = extract_features(
+        tables.fwd(spark).select("doc_id", "tokens"),
+        q_tok,
+        [{"name": "score", "feature": "close_pair", "ordered": ordered}],
+    )
+    got = sorted((r.query_id, r.rank, r.doc_id, r.score) for r in run.collect())
+    want = sorted((r.query_id, r.rank, r.doc_id, r.score) for r in rank_run(feats, 10).collect())
+    assert len(got) == len(want) > 0
+    for g, w in zip(got, want):
+        assert g[:3] == w[:3], (g, w)
+        assert g[3] == pytest.approx(w[3], rel=1e-12)
+
+
+def test_proximity_tokenizes_queries_like_the_index(spark, tmp_path):
+    """On a Krovetz-built index the query "joins tables" looks up the
+    stems join/table: scores equal the naive oracle over Krovetz tokens."""
+    from flexneuart_spark.functions.tokenize import krovetz_tokenize
+
+    texts = {
+        "d1": "The tables join quickly when joins use tables",
+        "d2": "a table joined to another table by joins",
+        "d3": "nothing relevant in this one at all",
+        "d4": "joins of tables and more tables join",
+    }
+    corpus = spark.createDataFrame(list(texts.items()), "doc_id string, content string")
+    tables = build_index(spark, corpus, str(tmp_path / "kidx"), num_shards=2, tokenizer="krovetz")
+    queries = [("q1", "joins tables"), ("q2", "Tables joined quickly")]
+    docs = {did: krovetz_tokenize(text) for did, text in texts.items()}
+    oracle = Bm25Oracle(list(docs.items()))
+    idf = {t: oracle.idf(t) for t in oracle.df}
+    for ordered in (True, False):
+        run = proximity_topk(spark, tables, queries, k=10, ordered=ordered, tokenizer="krovetz")
+        got = {(r.query_id, r.doc_id): r.score for r in run.collect()}
+        want = {}
+        for qid, text in queries:
+            for did, d_toks in docs.items():
+                s = naive_close_pair_score(
+                    krovetz_tokenize(text), d_toks, idf, oracle.avg_doc_len, 4, 8, ordered
+                )
+                if s > 0:
+                    want[(qid, did)] = s
+        assert want and set(got) == set(want), (ordered, got, want)
+        for key, s in want.items():
+            assert got[key] == pytest.approx(s, rel=1e-9)
+
+
+def test_proximity_rejects_unknown_tokenizer(spark, setup):
+    """An unknown tokenizer name raises before any Spark job runs."""
+    tables, _, _ = setup
+    sc = spark.sparkContext
+    sc.setJobGroup("prox_unknown_tokenizer", "unknown tokenizer")
+    try:
+        with pytest.raises(ValueError, match="unknown tokenizer"):
+            proximity_topk(spark, tables, [("q", "def return")], tokenizer="no_such_tokenizer")
+        assert list(sc.statusTracker().getJobIdsForGroup("prox_unknown_tokenizer")) == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
