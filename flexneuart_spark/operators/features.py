@@ -235,26 +235,16 @@ def _feat_sdm(
     (``FeatExtrSDMSimilarity.java:33-49`` / ``SDMSimilarityAnserini``,
     defaults λT=0.5, λO=0.2, λU=0.3, window=8): weighted combination of
     the unigram BM25 and the ordered/unordered close-pair components —
-    the feature twin of ``search/proximity.sdm_topk``. Missing
-    components contribute 0 (full outer join)."""
+    the feature twin of ``search/proximity.sdm_topk``, combined by the
+    same ``sdm_combine`` (missing components contribute 0)."""
+    from flexneuart_spark.search.proximity import sdm_combine
+
     uni = _feat_bm25(docs_tok, q_tok, k1=k1, b=b).select(
         "query_id", "doc_id", F.col("score").alias("s_uni")
     )
     # ordered + unordered in ONE candidate scan / pandas pass
     prox = _close_pair(docs_tok, q_tok, [("s_ord", True), ("s_unord", False)], query_window, window, k1, b)
-    return (
-        uni.join(prox, ["query_id", "doc_id"], "full")
-        .fillna({"s_uni": 0.0, "s_ord": 0.0, "s_unord": 0.0})
-        .select(
-            "query_id",
-            "doc_id",
-            (
-                F.lit(lambda_t) * F.col("s_uni")
-                + F.lit(lambda_o) * F.col("s_ord")
-                + F.lit(lambda_u) * F.col("s_unord")
-            ).alias("score"),
-        )
-    )
+    return sdm_combine([uni, prox], {"s_uni": lambda_t, "s_ord": lambda_o, "s_unord": lambda_u})
 
 
 def _feat_retr_score(

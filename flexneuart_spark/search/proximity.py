@@ -29,6 +29,9 @@ formed by shifting the id array — no per-position Python.
 
 from __future__ import annotations
 
+import operator
+from functools import reduce
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
@@ -59,18 +62,26 @@ def doc_pair_counts(
 ) -> dict[int, int]:
     """Counts of close pairs over the doc id sequence, keyed
     a*vocab_size+b. Vectorized over gaps."""
-    keys = []
-    for g in range(1, min(doc_window, len(d_ids))):
-        a, b = d_ids[:-g], d_ids[g:]
+    counts: dict[int, int] = {}
+    n = len(d_ids)
+    V = vocab_size
+    for g in range(1, doc_window):
+        if g >= n:
+            break
+        a = d_ids[:-g]
+        b = d_ids[g:]
         mask = (a >= 0) & (b >= 0) & (a != b)
-        a, b = a[mask], b[mask]
+        if not mask.any():
+            continue
+        aa, bb = a[mask], b[mask]
         if not ordered:
-            a, b = np.minimum(a, b), np.maximum(a, b)
-        keys.append(a.astype(np.int64) * vocab_size + b.astype(np.int64))
-    if not keys:
-        return {}
-    uniq, counts = np.unique(np.concatenate(keys), return_counts=True)
-    return dict(zip(uniq.tolist(), counts.tolist()))
+            lo = np.minimum(aa, bb)
+            hi = np.maximum(aa, bb)
+            aa, bb = lo, hi
+        keys, qtys = np.unique(aa.astype(np.int64) * V + bb.astype(np.int64), return_counts=True)
+        for kkey, qq in zip(keys.tolist(), qtys.tolist()):
+            counts[kkey] = counts.get(kkey, 0) + qq
+    return counts
 
 
 def close_pair_score(
@@ -109,10 +120,10 @@ def close_pair_frame(
     modes: list[tuple[str, bool]],
     idf: dict[str, float],
     avgdl: float,
-    query_window: int = 4,
-    doc_window: int = 8,
-    k1: float = BM25_K1,
-    b: float = BM25_B,
+    query_window: int,
+    doc_window: int,
+    k1: float,
+    b: float,
 ) -> DataFrame:
     """Close-pair scores of ``q_tok`` (query_id, tokens) against
     ``docs_tok`` (doc_id, tokens): (query_id, doc_id, <name> double ...)
@@ -121,12 +132,13 @@ def close_pair_frame(
     universe holds (the rest are OOV); ``avgdl``: its mean length.
 
     A nonzero score needs two DISTINCT live query terms in the doc, so
-    two exact gates pick candidates: docs holding ≥2 live terms (a narrow
-    filter — only those docs are shuffled), then per query the docs
-    sharing ≥2 terms with it (equi-join on the broadcast query terms).
-    Each candidate doc carries its query ids into the kernel, so its
-    token→id conversion runs once. Query id sequences and the idf slice
-    are driver-small and ship by closure."""
+    the candidates are the (query, doc) pairs sharing ≥2 terms (equi-join
+    of the docs' live terms on the broadcast query terms), and only docs
+    holding ≥2 live terms are read back for their tokens. Both gates test
+    membership with one hash set, so their cost per doc does not grow
+    with the query vocabulary. Each candidate doc carries its query ids
+    into the kernel, so its token→id conversion runs once. Query id
+    sequences and the idf slice are driver-small and ship by closure."""
     spark = q_tok.sparkSession
     schema = "query_id string, doc_id string, " + ", ".join(f"{name} double" for name, _ in modes)
     terms = sorted(idf)
@@ -138,18 +150,22 @@ def close_pair_frame(
         r.query_id: np.array([term_to_id.get(t, -1) for t in r.tokens], dtype=np.int64)
         for r in q_tok.select("query_id", "tokens").collect()
     }
-    live = F.array_intersect(F.array_distinct("tokens"), F.array(*[F.lit(t) for t in terms]))
-    docs = docs_tok.where(F.size(live) >= 2).select("doc_id", "tokens")
-    q_terms = q_tok.select("query_id", F.explode(F.array_distinct("tokens")).alias("term"))
+
+    def _terms(df, key):
+        t = df.select(key, F.explode(F.array_distinct("tokens")).alias("term"))
+        return t.where(F.col("term").isin(terms))
+
     cand = (
-        docs.select("doc_id", F.explode(live).alias("term"))
-        .join(F.broadcast(q_terms.where(F.col("term").isin(terms))), "term")
+        _terms(docs_tok, "doc_id")
+        .join(F.broadcast(_terms(q_tok, "query_id")), "term")
         .groupBy("query_id", "doc_id")
         .agg(F.count("*").alias("n_match"))
         .where(F.col("n_match") >= 2)
         .groupBy("doc_id")
         .agg(F.collect_list("query_id").alias("qids"))
     )
+    live = F.filter(F.array_distinct("tokens"), lambda t: t.isin(terms))
+    docs = docs_tok.where(F.size(live) >= 2).select("doc_id", "tokens")
     qw, dw, K1, B, modes_ = query_window, doc_window, k1, b, list(modes)
 
     def _score(batches):
@@ -189,7 +205,7 @@ def sdm_topk(
     ``simil_func/SDMSimilarityAnserini.java`` shape): weighted combination
     of the unigram BM25 score and the ordered/unordered close-pair scores.
     Each component reuses its individually-oracle-tested implementation;
-    missing components contribute 0 (outer join).
+    missing components contribute 0 (:func:`sdm_combine`).
 
     ``component_k`` bounds each component's candidate depth (default
     10k-or-100, the usual rerank-pool shape); pass a value ≥ corpus size
@@ -197,26 +213,26 @@ def sdm_topk(
     from flexneuart_spark.search.engine import Searcher
 
     ck = component_k if component_k is not None else max(k * 10, 100)
-    uni = Searcher(spark, tables, tokenizer=tokenizer).search(queries, k=ck)
-    o = proximity_topk(spark, tables, queries, k=ck, query_window=query_window,
-                       doc_window=doc_window, ordered=True, tokenizer=tokenizer)
-    u = proximity_topk(spark, tables, queries, k=ck, query_window=query_window,
-                       doc_window=doc_window, ordered=False, tokenizer=tokenizer)
-    uni = uni.select("query_id", "doc_id", F.col("score").alias("s_uni"))
-    o = o.select("query_id", "doc_id", F.col("score").alias("s_ord"))
-    u = u.select("query_id", "doc_id", F.col("score").alias("s_unord"))
-    j = (
-        uni.join(o, ["query_id", "doc_id"], "full")
-        .join(u, ["query_id", "doc_id"], "full")
-        .fillna({"s_uni": 0.0, "s_ord": 0.0, "s_unord": 0.0})
-        .withColumn(
-            "score",
-            F.lit(w_unigram) * F.col("s_uni")
-            + F.lit(w_ordered) * F.col("s_ord")
-            + F.lit(w_unordered) * F.col("s_unord"),
-        )
-    )
-    return rank_run(j, k)
+    runs = {
+        "s_uni": Searcher(spark, tables, tokenizer=tokenizer).search(queries, k=ck),
+        "s_ord": proximity_topk(spark, tables, queries, k=ck, query_window=query_window,
+                                doc_window=doc_window, ordered=True, tokenizer=tokenizer),
+        "s_unord": proximity_topk(spark, tables, queries, k=ck, query_window=query_window,
+                                  doc_window=doc_window, ordered=False, tokenizer=tokenizer),
+    }
+    parts = [r.select("query_id", "doc_id", F.col("score").alias(c)) for c, r in runs.items()]
+    weights = {"s_uni": w_unigram, "s_ord": w_ordered, "s_unord": w_unordered}
+    return rank_run(sdm_combine(parts, weights), k)
+
+
+def sdm_combine(parts: list[DataFrame], weights: dict[str, float]) -> DataFrame:
+    """(query_id, doc_id, score): Σ weight · component over the full outer
+    join of the (query_id, doc_id, <component> ...) frames ``parts``; a
+    component missing for a pair counts 0. Shared by :func:`sdm_topk` and
+    the ``sdm`` feature."""
+    j = reduce(lambda left, right: left.join(right, ["query_id", "doc_id"], "full"), parts)
+    score = reduce(operator.add, [F.lit(w) * F.col(c) for c, w in weights.items()])
+    return j.fillna({c: 0.0 for c in weights}).select("query_id", "doc_id", score.alias("score"))
 
 
 def proximity_topk(
