@@ -194,8 +194,8 @@ def _p50_stage_split(spark, s, query, k: int = 10, reps: int = 5) -> dict:
       max single shard (the parallel-stage critical path);
     - total_s: the full ``df.count()``;
     - residual_scan_merge_s: total − plan − sched floor − kernel critical
-      path = cache scan + Arrow ser/de + broadcast join + window merge +
-      scheduler queueing beyond the empty-job floor.
+      path = cache scan + Arrow ser/de + in-task doc-id labelling +
+      window merge + scheduler queueing beyond the empty-job floor.
     """
     from pyspark.sql import functions as F
 
@@ -369,7 +369,7 @@ def baseline_md(r: dict, scaling_mb: float, sc: dict | None) -> str:
             f"| plan_optimize | {ss['plan_optimize_s']} | catalyst analyze+optimize (queryExecution, no job) |\n"
             f"| sched_floor | {ss['sched_floor_s']} | EMPTY {ss['sched_tasks']}-task job (the scoring stage's task count) — pure task-scheduling round trip |\n"
             f"| kernel critical path | {ss['kernel_cpu_max_shard_s']} | slowest single shard's numpy MaxScore compute (total across {ss['kernel_shards']} shards: {ss['kernel_cpu_total_s']}) |\n"
-            f"| residual scan+merge | {ss['residual_scan_merge_s']} | cache scan, Arrow ser/de, broadcast join + window merge, queueing above the floor |\n"
+            f"| residual scan+merge | {ss['residual_scan_merge_s']} | cache scan, Arrow ser/de, in-task doc-id labelling + window merge, queueing above the floor |\n"
             f"| **total** | {ss['total_s']} | full df.count() |\n"
         )
     md += (

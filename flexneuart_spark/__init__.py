@@ -7,3 +7,9 @@ design, not a port — see SURVEY.md for the semantic parity map.
 """
 
 __version__ = "0.1.0"
+
+from flexneuart_spark._pyworker import install as _install_pyworker
+
+# every engine UDF imports this package, so each Python worker that runs
+# one stops rescanning its import caches on every task (_pyworker.py)
+_install_pyworker()

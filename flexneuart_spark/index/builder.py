@@ -400,11 +400,8 @@ def build_index(
     docs = docs.withColumn("shard", F.pmod(F.xxhash64(F.col("doc_id")), F.lit(num_shards)).cast("int"))
 
     done: set[int] = set()
-    if resume:
-        try:
-            done = {int(r.shard) for r in tables.lineage(spark).select("shard").distinct().collect()}
-        except Exception:
-            done = set()
+    if resume and _path_exists(spark, tables.lineage_dir):
+        done = {int(r.shard) for r in tables.lineage(spark).select("shard").distinct().collect()}
     todo = [s for s in range(num_shards) if s not in done]
     if only_shards is not None:
         todo = [s for s in todo if s in only_shards]
@@ -508,10 +505,11 @@ def build_index(
     # replace-by-shard semantics: a rebuilt shard's old lineage row must
     # not survive (stats are derived from lineage — no double counting).
     # The table is tiny (one row per shard) so collect+rewrite is safe.
-    try:
-        old = tables.lineage(spark).filter(~F.col("shard").isin(todo)).toPandas()
-    except Exception:
-        old = None
+    old = (
+        tables.lineage(spark).filter(~F.col("shard").isin(todo)).toPandas()
+        if _path_exists(spark, tables.lineage_dir)
+        else None
+    )
     new = lineage.toPandas()
     fwdp.unpersist()
     merged = pd.concat([old, new], ignore_index=True) if old is not None and len(old) else new
@@ -522,6 +520,14 @@ def build_index(
 
     _finalize(spark, tables)
     return tables
+
+
+def _path_exists(spark: SparkSession, path: str) -> bool:
+    """``path`` exists, asked of the Hadoop FileSystem of its scheme (a
+    read error on an existing table then propagates instead of looking
+    like an absent one)."""
+    jpath = spark.sparkContext._jvm.org.apache.hadoop.fs.Path(path)
+    return jpath.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration()).exists(jpath)
 
 
 # Vocabularies up to this size are driver-sized: finalize takes the

@@ -20,19 +20,26 @@ Physical plan:
      into idf with the builder's finalize formula — no shuffle, and only
      the query slice of the dictionary is ever collected (10^12-file
      posture, SURVEY.md §7.4);
-  2. ``postings.filter(term IN query_vocab)`` — partition keys + parquet
-     row-group stats (postings are written sorted by term within shard)
-     prune the scan to the query's posting rows only;
-  3. ``groupBy(seg, shard).applyInPandas`` → numpy MaxScore/block-max
-     kernel with a bounded heap per (shard, query) → ≤ k rows per
-     seg·shard·query;
-  4. label ordinals with doc_ids: broadcast-join the tiny result against
-     the doc map (seg, shard, ord, doc_id);
-  5. global top-k merge: window by query, (score desc, doc_id desc).
+  2. ``postings.filter(term IN query_vocab OR term IS NULL)`` over the
+     postings unioned with one doc-id row per (seg, shard) — partition
+     keys + parquet row-group stats (postings are written sorted by term
+     within shard) prune the scan to the query's posting rows, plus each
+     shard's doc-id row (null ``term``; its ``doc_ids`` array holds the
+     shard's doc ids ordered by ``ord``);
+  3. ``groupBy(seg, shard).applyInArrow`` → numpy MaxScore/block-max
+     kernel with a bounded heap per (shard, query), labelled in the same
+     task by a pyarrow ``take`` of the kernel's ordinals on that array →
+     ≤ k (query_id, doc_id, score) rows per seg·shard·query. The lookup
+     relies on the builder's dense per-shard ordinals (``row_number − 1``
+     over (shard, doc_id), ``index/builder.py``): ``ord`` is the array
+     position;
+  4. global top-k merge: ``rank_run``'s window by query, (score desc,
+     doc_id desc) — the only exchange after the kernel.
 
-``warm()`` caches the doc map and the postings (with their ``seg``
-column) hash-partitioned by shard, so the per-query groupBy needs no
-exchange — the kernel runs as one scan-and-score stage over the cache.
+``warm()`` caches that union — postings and doc-id rows, with their
+``seg`` column — hash-partitioned by shard, so the per-query groupBy
+needs no exchange: a warmed query is one scan-label-and-score stage over
+the one cache, then the merge.
 """
 
 from __future__ import annotations
@@ -41,7 +48,8 @@ from collections import Counter
 from functools import reduce
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -54,14 +62,13 @@ from flexneuart_spark.search.scoring import TermPostings, bmw_topk, exhaustive_t
 # result-identical top-k kernels (equivalence-tested); maxscore is the default
 _KERNELS = {"maxscore": maxscore_topk, "bmw": bmw_topk, "exhaustive": exhaustive_topk}
 
-_SCORED_SCHEMA = "seg int, shard int, query_id string, ord long, score double"
+_BLOCK_COLS = ("block_off", "block_n", "block_max_doc", "block_max_tf", "block_min_dl")
 _EMPTY_RUN_SCHEMA = "query_id string, doc_id string, score double, rank int"
 
 
 def _search_frames(
     spark: SparkSession,
     posts: DataFrame,
-    fwd_ids: DataFrame,
     idf: dict[str, float],
     avgdl: float,
     qtf: dict[str, dict[str, int]],
@@ -70,9 +77,10 @@ def _search_frames(
     b: float,
     kernel,
 ) -> DataFrame:
-    """Core search over generic frames. ``posts`` must carry
-    (seg, shard, term, payload, block_*); ``fwd_ids`` (seg, shard, ord,
-    doc_id). ``kernel`` is one of the result-identical scoring kernels
+    """Core search over generic frames. ``posts`` must carry (seg, shard,
+    term, payload, block_*, doc_ids): posting rows plus one null-``term``
+    row per (seg, shard) whose ``doc_ids`` is the shard's doc ids ordered
+    by ``ord``. ``kernel`` is one of the result-identical scoring kernels
     in ``_KERNELS``."""
     qweights = {
         qid: {t: c * idf[t] * (k1 + 1.0) for t, c in d.items() if t in idf}
@@ -82,34 +90,36 @@ def _search_frames(
     if not qweights:
         return spark.createDataFrame([], _EMPTY_RUN_SCHEMA)
 
-    def score_shard(pdf: pd.DataFrame) -> pd.DataFrame:
-        seg = int(pdf["seg"].iloc[0])
-        shard = int(pdf["shard"].iloc[0])
-        by_term = {row.term: row for row in pdf.itertuples(index=False)}
+    def score_shard(tbl: pa.Table) -> pa.Table:
+        tbl = tbl.combine_chunks()
+        doc_ids = tbl.filter(pc.is_null(tbl.column("term"))).column("doc_ids")[0].values
+        posts = tbl.filter(pc.is_valid(tbl.column("term")))
+        terms, payloads = posts.column("term").to_pylist(), posts.column("payload").to_pylist()
+        blocks = [posts.column(c) for c in _BLOCK_COLS]
+        by_term = {t: (payloads[i], *(c[i].values.to_numpy() for c in blocks)) for i, t in enumerate(terms)}
         out_q, out_o, out_s = [], [], []
         for qid, wts in qweights.items():
-            entries = [
-                TermPostings(
-                    r.payload, r.block_off, r.block_n,
-                    r.block_max_doc, r.block_max_tf, r.block_min_dl,
-                    w,
-                )
-                for t, w in wts.items()
-                if (r := by_term.get(t)) is not None
-            ]
+            entries = [TermPostings(*r, w) for t, w in wts.items() if (r := by_term.get(t)) is not None]
             if not entries:
                 continue
             ords, scores = kernel(entries, k, avgdl, k1, b)
             out_q.extend([qid] * len(ords))
-            out_o.extend(ords.tolist())
-            out_s.extend(scores.tolist())
-        return pd.DataFrame(
-            {"seg": seg, "shard": shard, "query_id": out_q, "ord": out_o, "score": out_s}
+            out_o.append(ords)
+            out_s.append(scores)
+        ords = np.concatenate(out_o) if out_o else np.empty(0, np.int64)
+        return pa.table(
+            {
+                "query_id": pa.array(out_q, pa.string()),
+                "doc_id": doc_ids.take(pa.array(ords, pa.int64())),
+                "score": pa.array(np.concatenate(out_s) if out_s else [], pa.float64()),
+            }
         )
 
-    scored = posts.groupBy("seg", "shard").applyInPandas(score_shard, _SCORED_SCHEMA)
-    labeled = fwd_ids.join(F.broadcast(scored), ["seg", "shard", "ord"], "inner")
-    return rank_run(labeled, k)
+    cols = ["seg", "shard", "term", "payload", *_BLOCK_COLS, "doc_ids"]
+    scored = posts.select(*cols).groupBy("seg", "shard").applyInArrow(
+        score_shard, "query_id string, doc_id string, score double"
+    )
+    return rank_run(scored, k)
 
 
 class SegmentedSearcher:
@@ -127,6 +137,8 @@ class SegmentedSearcher:
     ):
         if not segments:
             raise ValueError("no segments")
+        if tokenizer not in TOKENIZERS:
+            raise ValueError(f"unknown tokenizer {tokenizer!r}; expected one of {sorted(TOKENIZERS)}")
         self.spark = spark
         self.segments = sorted(
             (IndexTables(s) if isinstance(s, str) else s for s in segments),
@@ -146,7 +158,6 @@ class SegmentedSearcher:
         self.total_tokens = sum(int(r.total_tokens) for r in rows)
         self.avgdl = (self.total_tokens / self.n_docs) if self.n_docs else 1.0
         self._posts: DataFrame | None = None
-        self._docmap: DataFrame | None = None
         self._idf_cache: dict[str, float] | None = None
 
     def _union(self, read) -> DataFrame:
@@ -157,10 +168,17 @@ class SegmentedSearcher:
         )
 
     def _read_postings(self) -> DataFrame:
-        return self._union(lambda t: t.postings(self.spark))
+        """Every segment's postings plus, per (seg, shard), one row with a
+        null ``term`` whose ``doc_ids`` holds the shard's doc ids ordered
+        by ``ord`` — the array the kernel labels its ordinals from."""
 
-    def _read_docmap(self) -> DataFrame:
-        return self._union(lambda t: t.docmap(self.spark).select("shard", "ord", "doc_id"))
+        def read(t: IndexTables) -> DataFrame:
+            ids = t.fwd(self.spark).groupBy("shard").agg(
+                F.sort_array(F.collect_list(F.struct("ord", "doc_id"))).getField("doc_id").alias("doc_ids")
+            )
+            return t.postings(self.spark).unionByName(ids, allowMissingColumns=True)
+
+        return self._union(read)
 
     def _read_term_df(self) -> DataFrame:
         """Every segment's (term, df) dictionary rows, in ONE multi-path read."""
@@ -176,22 +194,21 @@ class SegmentedSearcher:
         return dict(zip(df, idf.tolist()))
 
     def warm(self) -> "SegmentedSearcher":
-        """Pin the doc map AND the postings in executor memory and, when
-        the segments' dictionaries hold at most ``SMALL_VOCAB`` rows (the
+        """Pin the postings AND each (seg, shard)'s doc-id row (see
+        ``_read_postings``) in executor memory as one cache and, when the
+        segments' dictionaries hold at most ``SMALL_VOCAB`` rows (the
         builder's driver-side finalize bound), cache term→idf
         driver-side — repeated searches then skip the per-query metadata
         job and the parquet listing/scan (the reference holds its whole
         index + idf cache in memory for the batch too,
-        TFIDFSimilarity.java:48-58; Lucene relies on the OS page cache). Re-warming releases the previous caches (safe after
-        the index was rebuilt)."""
-        for cached in (self._docmap, self._posts):
-            if cached is not None:
-                cached.unpersist()
-        self._docmap = self._read_docmap().persist()
-        self._docmap.count()
-        # cache the postings ALREADY hash-partitioned by shard: the
-        # per-query groupBy(seg, shard) then needs no exchange — the whole
-        # search kernel runs as one scan-and-score stage over the cache.
+        TFIDFSimilarity.java:48-58; Lucene relies on the OS page cache).
+        Re-warming releases the previous cache (safe after the index was
+        rebuilt)."""
+        if self._posts is not None:
+            self._posts.unpersist()
+        # cache the union ALREADY hash-partitioned by shard: the per-query
+        # groupBy(seg, shard) then needs no exchange — scoring and doc-id
+        # labelling run as one scan-and-score stage over the cache.
         # fewer, bigger cache partitions = fewer task round trips per
         # query (the p50 floor is task scheduling, not compute); 16 still
         # saturates the batch path, whose kernel loops all queries per task
@@ -233,9 +250,8 @@ class SegmentedSearcher:
         if not idf:
             return self.spark.createDataFrame([], _EMPTY_RUN_SCHEMA)
         posts = self._posts if self._posts is not None else self._read_postings()
-        docmap = self._docmap if self._docmap is not None else self._read_docmap()
         return _search_frames(
-            self.spark, posts.filter(F.col("term").isin(sorted(idf))), docmap,
+            self.spark, posts.filter(F.col("term").isin(sorted(idf)) | F.col("term").isNull()),
             idf, self.avgdl, qtf, k, self.k1, self.b, _KERNELS[kernel],
         )
 

@@ -38,14 +38,25 @@ def test_postings_scan_prunes_columns(spark, tables):
     assert "payload" not in scan_line.split("ReadSchema")[-1]
 
 
-def test_query_side_broadcasts(spark, tables):
+def test_warmed_query_labels_in_kernel_task(spark, tables):
+    """A warmed search() labels doc ids inside the kernel task: its plan
+    has no broadcast join and reads exactly one cache (postings plus the
+    per-shard doc-id rows), and a single query runs 2 jobs — the kernel's
+    shuffle-map stage and the merge."""
     from flexneuart_spark.search.engine import Searcher
 
-    run = Searcher(spark, tables).search([("q", "def return")], k=5)
+    searcher = Searcher(spark, tables).warm()
+    run = searcher.search([("q", "def return")], k=5)
     plan = _plan(run)
-    # the tiny per-shard top-k result is broadcast to label doc_ids;
-    # the big forward index is never shuffled
-    assert "BroadcastHashJoin" in plan or "BroadcastExchange" in plan
+    assert "BroadcastExchange" not in plan and "BroadcastHashJoin" not in plan, plan
+    assert plan.count("InMemoryTableScan") == 1, plan
+    sc = spark.sparkContext
+    sc.setJobGroup("warmed_single_query", "warmed single query")
+    try:
+        assert run.collect()
+        assert len(sc.statusTracker().getJobIdsForGroup("warmed_single_query")) == 2
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
 
 
 def test_shard_partition_pruning(spark, tables):
@@ -132,7 +143,7 @@ def test_warmed_query_has_no_exchange_before_kernel(spark, tables, tmp_path_fact
         (SegmentedSearcher(spark, segs), SegmentedSearcher(spark, segs).warm()),
     ):
         p = _plan(warmed.search(queries, k=5))
-        kernel_input = p.split("FlatMapGroupsInPandas", 1)[1].split("InMemoryTableScan", 1)
+        kernel_input = p.split("FlatMapGroupsInArrow", 1)[1].split("InMemoryTableScan", 1)
         assert len(kernel_input) == 2, p  # the kernel reads the postings cache
         assert "Exchange" not in kernel_input[0], p
         want = run(cold)

@@ -165,3 +165,22 @@ def test_proximity_rejects_unknown_tokenizer(spark, setup):
         assert list(sc.statusTracker().getJobIdsForGroup("prox_unknown_tokenizer")) == []
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
+
+
+def test_searchers_reject_unknown_tokenizer(spark, setup):
+    """``Searcher`` — and ``sdm_topk``, which builds one first — raise
+    ValueError for an unknown tokenizer name before any Spark job runs."""
+    from flexneuart_spark.search.engine import Searcher
+    from flexneuart_spark.search.proximity import sdm_topk
+
+    tables, _, _ = setup
+    sc = spark.sparkContext
+    sc.setJobGroup("searcher_unknown_tokenizer", "unknown tokenizer")
+    try:
+        with pytest.raises(ValueError, match="unknown tokenizer"):
+            Searcher(spark, tables, tokenizer="no_such_tokenizer")
+        with pytest.raises(ValueError, match="unknown tokenizer"):
+            sdm_topk(spark, tables, [("q", "def return")], tokenizer="no_such_tokenizer")
+        assert list(sc.statusTracker().getJobIdsForGroup("searcher_unknown_tokenizer")) == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)

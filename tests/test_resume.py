@@ -4,6 +4,8 @@ one-shot build — no double-counted df/avgdl, identical golden run."""
 
 from __future__ import annotations
 
+from pathlib import Path
+
 import pytest
 
 from flexneuart_spark.fixtures import make_corpus, make_queries
@@ -65,3 +67,15 @@ def test_interrupted_index_is_partial_but_consistent(spark, corpora, tmp_path_fa
     assert 0 < n_docs < 250
     shards = {r.shard for r in t.fwd(spark).select("shard").distinct().collect()}
     assert shards == {0, 1}
+
+
+def test_resume_over_corrupt_lineage_raises(spark, corpora, tmp_path_factory):
+    """A lineage table that exists but cannot be read fails the resume
+    loudly instead of looking absent (which would rebuild every shard)."""
+    idx = str(tmp_path_factory.mktemp("corrupt_lineage"))
+    tables = build_index(spark, corpora, idx, num_shards=NSHARDS, only_shards=[0, 1])
+    lineage = Path(tables.lineage_dir)
+    for f in lineage.glob("*.parquet"):
+        f.write_bytes(b"not a parquet file")
+    with pytest.raises(Exception, match="(?i)parquet"):
+        build_index(spark, corpora, idx, num_shards=NSHARDS, resume=True)
