@@ -301,10 +301,8 @@ def run_experiment(
     qrels: DataFrame,
     out_dir: str,
     tran: DataFrame | None = None,
-    tokenizer: str = "code",
     seed: int = 42,
     base_dir: str | None = None,
-    field_tokenizers: dict[str, str] | None = None,
 ) -> dict:
     """One experiment, the ``run_one_experiment.sh`` stage order.
 
@@ -320,8 +318,8 @@ def run_experiment(
     multi-field collections: each extractor then reads the field its
     ``indexFieldName`` names (SingleFieldFeatExtractor semantics),
     candidates retrieve from ``candFieldName`` (descriptor key, default
-    ``"text"``), and ``field_tokenizers={field: tokenizer}`` overrides
-    the query tokenizer per field (e.g. a krovetz-stemmed field).
+    ``"text"``). Each field's queries are tokenized with the tokenizer
+    its own index records (e.g. a krovetz-stemmed field).
     ``qrels``: (query_id, doc_id, grade).
 
     Returns ``{"run": fused test run, "baseline_run": BM25-only run,
@@ -329,7 +327,7 @@ def run_experiment(
     "model_path": ...}``; the fused run + model land under
     ``out_dir/<experSubdir>``.
     """
-    from flexneuart_spark.index.builder import IndexTables
+    from flexneuart_spark.index.builder import IndexTables, merged_stats
     from flexneuart_spark.io.ranklib import (
         load_ranklib_ensemble,
         load_ranklib_linear,
@@ -396,13 +394,8 @@ def run_experiment(
         cand_field = "text"
         tables_by_field = {cand_field: index if isinstance(index, IndexTables) else IndexTables(index)}
     tables = tables_by_field[cand_field]
-    tok_by_field = {
-        f: TOKENIZERS[(field_tokenizers or {}).get(f, tokenizer)] for f in tables_by_field
-    }
-    # the candidate provider must tokenize queries the way the candidate
-    # FIELD's index was built, not with the global default
-    cand_tok = (field_tokenizers or {}).get(cand_field, tokenizer)
-    searcher = Searcher(spark, tables, k1=k1, b=b, tokenizer=cand_tok)
+    tok_by_field = {f: TOKENIZERS[merged_stats(spark, [t])[2]] for f, t in tables_by_field.items()}
+    searcher = Searcher(spark, tables, k1=k1, b=b)
     docs_by_field = {f: t.fwd(spark).select("doc_id", "tokens") for f, t in tables_by_field.items()}
 
     names = [c["name"] for c in extr_config]

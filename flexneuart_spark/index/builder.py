@@ -33,7 +33,8 @@ Architecture (designed for 10^12-file corpora on a 1000-executor cluster):
   global dictionary term→(term_id, df, idf) — the "merge partition-local
   indexes into a global index" step; the only shuffle is (shard, term) →
   term with ≤ num_shards rows per term — plus corpus stats
-  (docQty/totalWordQty/avgDocLen, ``ForwardIndex.java:350-353``).
+  (docQty/totalWordQty/avgDocLen, ``ForwardIndex.java:350-353``) and the
+  tokenizer's name, which every reader tokenizes queries with.
 - **Lineage / checkpoint-resume**: one lineage row per completed shard
   (counts, checksum, duration). A resumed build skips completed shards,
   rewrites only missing ones (dynamic partition overwrite → idempotent),
@@ -58,9 +59,10 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from flexneuart_spark.config import DEFAULT_NUM_SHARDS, MAX_DOC_SIZE
-from flexneuart_spark.functions.tokenize import code_tokenize_arrow
+from flexneuart_spark.functions.tokenize import TOKENIZERS, code_tokenize_arrow
 from flexneuart_spark.index.codec import encode_postings_batch
 
 _POSTINGS_SCHEMA = T.StructType(
@@ -101,24 +103,6 @@ def _tokens_udf(tokenizer: str):
     return tok
 
 
-def _arrow_postings_schema():
-    import pyarrow as pa
-
-    return pa.schema(
-        [
-            ("shard", pa.int32()),
-            ("term", pa.string()),
-            ("df_shard", pa.int64()),
-            ("payload", pa.binary()),
-            ("block_off", pa.list_(pa.int64())),
-            ("block_n", pa.list_(pa.int32())),
-            ("block_max_doc", pa.list_(pa.int64())),
-            ("block_max_tf", pa.list_(pa.int64())),
-            ("block_min_dl", pa.list_(pa.int64())),
-        ]
-    )
-
-
 def _arrow_postings_kernel(tbl):
     """Build ALL posting lists of one shard in a single vectorized pass
     (``applyInArrow`` over groupBy(shard); input: ord, tokens, doc_len).
@@ -134,7 +118,7 @@ def _arrow_postings_kernel(tbl):
     import pyarrow as pa
     import pyarrow.compute as pc
 
-    schema = _arrow_postings_schema()
+    schema = to_arrow_schema(_POSTINGS_SCHEMA)
     if tbl.num_rows == 0:
         return pa.table({f.name: pa.array([], type=f.type) for f in schema})
     shard = tbl.column("shard")[0].as_py()
@@ -266,6 +250,25 @@ class IndexTables:
         return int(row.n_docs), int(row.total_tokens), float(row.avg_doc_len)
 
 
+def merged_stats(spark: SparkSession, segments: list[IndexTables]) -> tuple[int, float, str]:
+    """(n_docs, avgdl, tokenizer) over ``segments`` from ONE multi-path read
+    of their one-row ``corpus_stats`` tables. Queries are tokenized with
+    the tokenizer every segment records; if they disagree (their df would
+    not add up), ``ValueError`` names each segment's."""
+    rows = (
+        spark.read.parquet(*[t.corpus_stats_dir for t in segments])
+        .select("n_docs", "total_tokens", "tokenizer", F.input_file_name().alias("path"))
+        .collect()
+    )
+    names = {r.tokenizer for r in rows}
+    if len(names) > 1:
+        each = sorted(f"{r.path.rsplit('/corpus_stats/', 1)[0]}: {r.tokenizer}" for r in rows)
+        raise ValueError(f"segments were built with different tokenizers: {'; '.join(each)}")
+    n_docs = sum(int(r.n_docs) for r in rows)
+    total_tokens = sum(int(r.total_tokens) for r in rows)
+    return n_docs, (total_tokens / n_docs) if n_docs else 1.0, names.pop()
+
+
 def derive_doc_id(df: DataFrame) -> DataFrame:
     """DOCNO analogue: ``repo:path@commit`` (FIXTURES.md §1), or an
     existing ``doc_id`` column cast to string."""
@@ -386,8 +389,13 @@ def build_index(
     tokenizer — the segment-compaction path (streaming/incremental.py)
     rebuilds from stored forward indexes without re-tokenizing.
 
+    ``corpus_stats`` records ``tokenizer`` (for a pretokenized corpus,
+    the one that made its tokens); readers tokenize queries with it.
+
     The fwd table always stores the full token sequence (positional /
     parsedText mode — proximity scoring needs no rebuild)."""
+    if tokenizer not in TOKENIZERS:
+        raise ValueError(f"unknown tokenizer {tokenizer!r}; expected one of {sorted(TOKENIZERS)}")
     tables = IndexTables(index_dir)
     build_id = uuid.uuid4().hex[:12]
 
@@ -406,7 +414,7 @@ def build_index(
     if only_shards is not None:
         todo = [s for s in todo if s in only_shards]
     if not todo:
-        _finalize(spark, tables)
+        _finalize(spark, tables, tokenizer)
         return tables
     partial = len(todo) < num_shards
     if partial:
@@ -518,7 +526,7 @@ def build_index(
         "shard int, n_docs long, total_tokens long, checksum long, build_id string, duration_sec double",
     )
 
-    _finalize(spark, tables)
+    _finalize(spark, tables, tokenizer)
     return tables
 
 
@@ -584,7 +592,7 @@ def bm25_idf(n_docs: int, df: np.ndarray) -> np.ndarray:
     return np.log(1.0 + (float(n_docs) - df + 0.5) / (df + 0.5))
 
 
-def _finalize(spark: SparkSession, tables: IndexTables) -> None:
+def _finalize(spark: SparkSession, tables: IndexTables, tokenizer: str) -> None:
     """Idempotent global merge: dictionary (term_id, df, idf) + corpus
     stats, recomputed from ALL shards — resume-safe (no double counting).
 
@@ -595,10 +603,11 @@ def _finalize(spark: SparkSession, tables: IndexTables) -> None:
     total_tokens = int(lin["total_tokens"].sum())
     avgdl = (total_tokens / n_docs) if n_docs else 1.0
     stats_pdf = pd.DataFrame(
-        {"n_docs": [n_docs], "total_tokens": [total_tokens], "avg_doc_len": [float(avgdl)]}
+        {"n_docs": [n_docs], "total_tokens": [total_tokens], "avg_doc_len": [float(avgdl)], "tokenizer": [tokenizer]}
     )
     _write_control_table(
-        spark, stats_pdf, tables.corpus_stats_dir, "n_docs long, total_tokens long, avg_doc_len double"
+        spark, stats_pdf, tables.corpus_stats_dir,
+        "n_docs long, total_tokens long, avg_doc_len double, tokenizer string",
     )
 
     # explicit schema: a corpus whose docs ALL tokenize to zero tokens

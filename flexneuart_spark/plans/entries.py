@@ -275,7 +275,7 @@ def q_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     top-k (LuceneCandidateProvider.java:103-178 analogue). Output re-ranked
     on rounded score for cross-engine stability."""
     tables = _engine_index(spark, sf_dir)
-    s = Searcher(spark, tables, tokenizer="whitespace")
+    s = Searcher(spark, tables)
     run = s.search(DOC_QUERIES, k=ENGINE_BUFFER)
     run = run.select("query_id", F.col("doc_id").cast("long").alias("doc_id"), "score")
     return _rounded_topk(run)

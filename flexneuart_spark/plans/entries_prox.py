@@ -40,7 +40,6 @@ def _prox_entry(ordered: bool):
             query_window=QW,
             doc_window=DW,
             ordered=ordered,
-            tokenizer="whitespace",
         )
         run = run.select("query_id", F.col("doc_id").cast("long").alias("doc_id"), "score")
         return _rounded_topk(run)
@@ -167,7 +166,6 @@ def q_sdm_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         w_unordered=W_UNORD,
         query_window=QW,
         doc_window=DW,
-        tokenizer="whitespace",
         component_k=10_000_000,  # exhaustive components → exactly SQL-expressible
     )
     run = run.select("query_id", F.col("doc_id").cast("long").alias("doc_id"), "score")

@@ -25,6 +25,9 @@ from flexneuart_spark.functions.tokenize import code_tokens_col, whitespace_toke
 
 
 def tokens_df(df: DataFrame, text_col: str, id_col: str, tokenizer: str = "whitespace") -> DataFrame:
+    """(id_col, tokens) in a JVM column form: ``code`` or ``whitespace``."""
+    if tokenizer not in ("code", "whitespace"):
+        raise ValueError(f"no JVM column form of tokenizer {tokenizer!r}; expected 'code' or 'whitespace'")
     tok = code_tokens_col(text_col) if tokenizer == "code" else whitespace_tokens_col(text_col)
     return df.select(F.col(id_col).cast("string").alias(id_col), tok.alias("tokens"))
 

@@ -13,8 +13,9 @@ monolithic build — possible because posting payloads carry raw (tf, dl)
 and block metadata is avgdl-independent.
 
 Physical plan:
-  1. queries tokenized driver-side (the reference also loads all queries
-     into memory — ``BaseQueryApp.java:670``); the query vocabulary's
+  1. queries tokenized driver-side with the tokenizer the index records
+     (the reference also loads all queries into memory —
+     ``BaseQueryApp.java:670``); the query vocabulary's
      (term, df) rows are read from every segment's dictionary in one
      multi-path scan, summed driver-side into the global df and turned
      into idf with the builder's finalize formula — no shuffle, and only
@@ -55,7 +56,7 @@ from pyspark.sql import functions as F
 
 from flexneuart_spark.config import BM25_B, BM25_K1
 from flexneuart_spark.functions.tokenize import TOKENIZERS
-from flexneuart_spark.index.builder import SMALL_VOCAB, IndexTables, bm25_idf
+from flexneuart_spark.index.builder import SMALL_VOCAB, IndexTables, bm25_idf, merged_stats
 from flexneuart_spark.io.trec import rank_run
 from flexneuart_spark.search.scoring import TermPostings, bmw_topk, exhaustive_topk, maxscore_topk
 
@@ -125,7 +126,9 @@ def _search_frames(
 class SegmentedSearcher:
     """Search across N independently-built segments (incremental layout:
     ``root/segments/<id>/`` each a full IndexTables). Global df/N/avgdl
-    are exact merges, so results are identical to a monolithic build."""
+    are exact merges, so results are identical to a monolithic build.
+    Queries are tokenized with the tokenizer the segments record;
+    segments built with different ones raise ``ValueError``."""
 
     def __init__(
         self,
@@ -133,30 +136,17 @@ class SegmentedSearcher:
         segments: list[IndexTables | str],
         k1: float = BM25_K1,
         b: float = BM25_B,
-        tokenizer: str = "code",
     ):
         if not segments:
             raise ValueError("no segments")
-        if tokenizer not in TOKENIZERS:
-            raise ValueError(f"unknown tokenizer {tokenizer!r}; expected one of {sorted(TOKENIZERS)}")
         self.spark = spark
         self.segments = sorted(
             (IndexTables(s) if isinstance(s, str) else s for s in segments),
             key=lambda t: t.index_dir,
         )
         self.k1, self.b = k1, b
+        self.n_docs, self.avgdl, tokenizer = merged_stats(spark, self.segments)
         self.tokenize = TOKENIZERS[tokenizer]
-        # ONE multi-path read over every segment's 1-row stats table,
-        # summed driver-side — O(1) driver round-trips regardless of
-        # segment count (a thousand-segment index pays one job, not 1000)
-        rows = (
-            spark.read.parquet(*[t.corpus_stats_dir for t in self.segments])
-            .select("n_docs", "total_tokens")
-            .collect()
-        )
-        self.n_docs = sum(int(r.n_docs) for r in rows)
-        self.total_tokens = sum(int(r.total_tokens) for r in rows)
-        self.avgdl = (self.total_tokens / self.n_docs) if self.n_docs else 1.0
         self._posts: DataFrame | None = None
         self._idf_cache: dict[str, float] | None = None
 
@@ -265,7 +255,6 @@ class Searcher(SegmentedSearcher):
         index: IndexTables | str,
         k1: float = BM25_K1,
         b: float = BM25_B,
-        tokenizer: str = "code",
     ):
-        super().__init__(spark, [index], k1, b, tokenizer)
+        super().__init__(spark, [index], k1, b)
         self.tables = self.segments[0]

@@ -39,6 +39,7 @@ from pyspark.sql import functions as F
 
 from flexneuart_spark.config import BM25_B, BM25_K1
 from flexneuart_spark.functions.tokenize import TOKENIZERS
+from flexneuart_spark.index.builder import merged_stats
 from flexneuart_spark.io.trec import rank_run
 
 
@@ -198,7 +199,6 @@ def sdm_topk(
     w_unordered: float = 0.1,
     query_window: int = 4,
     doc_window: int = 8,
-    tokenizer: str = "code",
     component_k: int | None = None,
 ) -> DataFrame:
     """Sequential Dependence Model (SURVEY.md §2.8 C4,
@@ -214,11 +214,11 @@ def sdm_topk(
 
     ck = component_k if component_k is not None else max(k * 10, 100)
     runs = {
-        "s_uni": Searcher(spark, tables, tokenizer=tokenizer).search(queries, k=ck),
+        "s_uni": Searcher(spark, tables).search(queries, k=ck),
         "s_ord": proximity_topk(spark, tables, queries, k=ck, query_window=query_window,
-                                doc_window=doc_window, ordered=True, tokenizer=tokenizer),
+                                doc_window=doc_window, ordered=True),
         "s_unord": proximity_topk(spark, tables, queries, k=ck, query_window=query_window,
-                                  doc_window=doc_window, ordered=False, tokenizer=tokenizer),
+                                  doc_window=doc_window, ordered=False),
     }
     parts = [r.select("query_id", "doc_id", F.col("score").alias(c)) for c, r in runs.items()]
     weights = {"s_uni": w_unigram, "s_ord": w_ordered, "s_unord": w_unordered}
@@ -243,23 +243,20 @@ def proximity_topk(
     query_window: int = 4,
     doc_window: int = 8,
     ordered: bool = True,
-    tokenizer: str = "code",
     k1: float = BM25_K1,
     b: float = BM25_B,
 ) -> DataFrame:
     """Close-pair top-k over an index: :func:`close_pair_frame` with the
     index dictionary's idf, the corpus-stats avgdl and the forward
-    table's token sequences, ranked under the tie rule. ``tokenizer``
-    names the index's tokenizer (``functions/tokenize.TOKENIZERS``) —
-    queries must be tokenized the way the index was."""
-    if tokenizer not in TOKENIZERS:
-        raise ValueError(f"unknown tokenizer {tokenizer!r}; expected one of {sorted(TOKENIZERS)}")
+    table's token sequences, ranked under the tie rule. Queries are
+    tokenized with the tokenizer the index records (read with avgdl from
+    its ``corpus_stats`` row)."""
+    _n_docs, avgdl, tokenizer = merged_stats(spark, [tables])
     tok = TOKENIZERS[tokenizer]
     qtoks = [(qid, tok(text)) for qid, text in queries]
     vocab = sorted({t for _, toks in qtoks for t in toks})
     dic = tables.dictionary(spark).filter(F.col("term").isin(vocab)).select("term", "idf")
     idf = {r.term: r.idf for r in dic.collect()} if vocab else {}
-    _n_docs, _total, avgdl = tables.stats(spark)
     scored = close_pair_frame(
         tables.fwd(spark).select("doc_id", "tokens"),
         spark.createDataFrame(qtoks, "query_id string, tokens array<string>"),

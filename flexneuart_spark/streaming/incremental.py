@@ -23,11 +23,12 @@ are reassigned per shard; nothing else changes.
 from __future__ import annotations
 
 import glob
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 
 from flexneuart_spark.config import DEFAULT_NUM_SHARDS
-from flexneuart_spark.index.builder import build_index
+from flexneuart_spark.index.builder import IndexTables, build_index, merged_stats
 
 
 def list_segments(root: str) -> list[str]:
@@ -96,23 +97,25 @@ def compact_segments(
     builder's per-shard lineage checkpoint (completed shards are skipped,
     the rest rebuilt; ``index/builder.py`` resume semantics, tested in
     ``test_resume.py``). ``only_shards`` restricts the build to a shard
-    subset — the test hook that simulates the mid-write crash."""
-    from flexneuart_spark.index.builder import IndexTables
+    subset — the test hook that simulates the mid-write crash.
 
+    The segments must record one tokenizer (``ValueError`` naming each
+    segment's otherwise); the compacted index records it too."""
     segs = segment_dirs if segment_dirs is not None else list_segments(root)
     if not segs:
         raise ValueError(f"no segments under {root}")
-    union = None
-    for seg in segs:
-        fwd = spark.read.parquet(IndexTables(seg).fwd_dir).select(
-            "doc_id", "tokens", "content_sha256"
-        )
-        union = fwd if union is None else union.unionByName(fwd)
+    tables = [IndexTables(seg) for seg in segs]
+    tokenizer = merged_stats(spark, tables)[2]
+    union = reduce(
+        DataFrame.unionByName,
+        [t.fwd(spark).select("doc_id", "tokens", "content_sha256") for t in tables],
+    )
     return build_index(
         spark,
         union,
         out_dir,
         pretokenized=True,
+        tokenizer=tokenizer,
         num_shards=num_shards if num_shards is not None else DEFAULT_NUM_SHARDS,
         resume=resume,
         only_shards=only_shards,

@@ -26,11 +26,13 @@ import time
 
 
 def main() -> None:
+    from flexneuart_spark.functions.tokenize import TOKENIZERS
+
     ap = argparse.ArgumentParser()
     ap.add_argument("--input", required=True, help="parquet path or iceberg table (catalog.db.tbl)")
     ap.add_argument("--output", required=True, help="index directory")
     ap.add_argument("--num-shards", type=int, default=None)
-    ap.add_argument("--tokenizer", choices=["code", "whitespace", "krovetz"], default="code")
+    ap.add_argument("--tokenizer", choices=sorted(TOKENIZERS), default="code")
     ap.add_argument("--resume", action="store_true")
     ap.add_argument("--text-col", default=None)
     args = ap.parse_args()

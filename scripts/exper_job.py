@@ -9,15 +9,16 @@ eval), over an index built by ``scripts/build_index_job.py``.
         --index <index-dir> [--index <field>=<index-dir> ...] \\
         --train-queries <jsonl-or-parquet> --test-queries <jsonl-or-parquet> \\
         --qrels <trec-qrels> --output <out-dir> \\
-        [--base-dir <collection-root>] [--tokenizer code|whitespace|krovetz] \\
-        [--field-tokenizer <field>=<tokenizer> ...] [--seed 42]
+        [--base-dir <collection-root>] [--seed 42]
 
 Query files carry (query_id, text) rows. Repeated ``--index field=dir``
 arguments form a multi-field collection (one forward index per field,
 the reference layout); a single bare ``--index dir`` is the one-field
-case. Prints the fused-vs-baseline metrics as ONE JSON line and writes
-the fused run + trained model under ``<out-dir>/<experSubdir>``
-(the layout ``run_one_experiment.sh`` leaves in ``results/``).
+case. Each field's queries are tokenized with the tokenizer its index
+was built with (the index records it). Prints the fused-vs-baseline
+metrics as ONE JSON line and writes the fused run + trained model under
+``<out-dir>/<experSubdir>`` (the layout ``run_one_experiment.sh`` leaves
+in ``results/``).
 """
 
 from __future__ import annotations
@@ -48,9 +49,6 @@ def main() -> None:
     ap.add_argument("--output", required=True)
     ap.add_argument("--base-dir", default=None,
                     help="collection root for descriptor-relative extractor/model paths")
-    ap.add_argument("--tokenizer", choices=["code", "whitespace", "krovetz"], default="code")
-    ap.add_argument("--field-tokenizer", action="append", default=[],
-                    help="<field>=<tokenizer> per-field query tokenizer override (repeatable)")
     ap.add_argument("--seed", type=int, default=42)
     args = ap.parse_args()
 
@@ -74,7 +72,6 @@ def main() -> None:
         index = args.index[0]
     else:
         index = _kv_pairs(args.index, "--index")
-    field_tok = _kv_pairs(args.field_tokenizer, "--field-tokenizer") or None
 
     res = run_experiment(
         spark,
@@ -84,10 +81,8 @@ def main() -> None:
         test_queries=read_queries(spark, args.test_queries),
         qrels=read_qrels(spark, args.qrels),
         out_dir=args.output,
-        tokenizer=args.tokenizer,
         seed=args.seed,
         base_dir=args.base_dir,
-        field_tokenizers=field_tok,
     )
     print(json.dumps({
         "metrics": res["metrics"],

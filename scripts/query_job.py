@@ -5,6 +5,9 @@
         scripts/query_job.py --index <index-dir> \\
         --queries <json, jsonl or parquet with query_id,text> \\
         --output <run-dir> --k 100 [--run-id my_run]
+
+Queries are tokenized with the tokenizer the index was built with (the
+index records it).
 """
 
 from __future__ import annotations
@@ -20,7 +23,6 @@ def main() -> None:
     ap.add_argument("--output", required=True)
     ap.add_argument("--k", type=int, default=100)
     ap.add_argument("--run-id", default="flexneuart_spark")
-    ap.add_argument("--tokenizer", choices=["code", "whitespace", "krovetz"], default="code")
     ap.add_argument("--kernel", choices=["maxscore", "bmw", "exhaustive"], default="maxscore",
                     help="top-k scoring kernel (result-identical; maxscore is fastest in numpy)")
     args = ap.parse_args()
@@ -32,7 +34,7 @@ def main() -> None:
 
     spark = SparkSession.builder.appName("flexneuart_query").getOrCreate()
     queries = read_queries(spark, args.queries)
-    s = Searcher(spark, args.index, tokenizer=args.tokenizer)
+    s = Searcher(spark, args.index)
     run = s.search(queries, k=args.k, kernel=args.kernel)
     write_run(run, args.output, run_id=args.run_id)
     print(f"wrote run for {len(queries)} queries to {args.output}")

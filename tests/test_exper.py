@@ -157,7 +157,6 @@ def test_run_experiment_ca_beats_bm25(spark, tmp_path):
         test_queries=queries[4:],
         qrels=qrels,
         out_dir=str(tmp_path),
-        tokenizer="whitespace",
     )
     # the premise: BM25 alone misranks the distractor above the relevant doc
     assert res["baseline_metrics"]["map"] < 1.0
@@ -175,7 +174,6 @@ def test_run_experiment_ca_beats_bm25(spark, tmp_path):
         test_queries=queries[4:],
         qrels=qrels,
         out_dir=str(tmp_path),
-        tokenizer="whitespace",
     )
     got = sorted(map(tuple, res2["run"].collect()))
     want = sorted(map(tuple, res["run"].collect()))
@@ -221,7 +219,6 @@ def test_run_experiment_neural_fusion(spark, tmp_path):
         test_queries=queries[3:],
         qrels=qrels,
         out_dir=str(tmp_path),
-        tokenizer="whitespace",
     )
     assert res["baseline_metrics"]["map"] < 1.0
     assert res["metrics"]["map"] > res["baseline_metrics"]["map"]
@@ -257,7 +254,6 @@ def test_run_experiment_lambdamart(spark, tmp_path):
         test_queries=queries[3:],
         qrels=qrels,
         out_dir=str(tmp_path),
-        tokenizer="whitespace",
     )
     assert res["metrics"]["map"] >= res["baseline_metrics"]["map"]
     assert res["model_path"].endswith("out.model")
@@ -329,7 +325,6 @@ def test_run_experiment_retr_score_descriptor(spark, tmp_path):
         test_queries=queries[3:],
         qrels=qrels,
         out_dir=str(tmp_path),
-        tokenizer="whitespace",
     )
     # fusion with the term-match feature fixes BM25's tf-saturation miss
     assert res["metrics"]["map"] > res["baseline_metrics"]["map"]
@@ -471,7 +466,7 @@ def test_rm3_only_descriptor_covers_every_candidate(spark, tmp_path):
     res = E.run_experiment(
         spark, desc, index=idx,
         train_queries=[], test_queries=[("q1", "alpha")],
-        qrels=qrels, out_dir=str(tmp_path), tokenizer="whitespace",
+        qrels=qrels, out_dir=str(tmp_path),
     )
     rows = res["run"].collect()
     assert len(rows) == n, f"candidates dropped from the fused run: {len(rows)}"
@@ -531,8 +526,6 @@ def test_run_experiment_multi_field(spark, tmp_path):
         test_queries=[("q1", "alpha running")],
         qrels=qrels,
         out_dir=str(tmp_path),
-        tokenizer="whitespace",
-        field_tokenizers={"text_k": "krovetz"},
     )
     run_rows = {r.doc_id: r.score for r in res["run"].collect()}
     # dB matches "running" only through the stemmed field: its fused
@@ -549,5 +542,5 @@ def test_run_experiment_multi_field(spark, tmp_path):
         E.run_experiment(
             spark, bad, index={"text": idx_raw, "text_k": idx_k},
             train_queries=[], test_queries=[("q1", "alpha")], qrels=qrels,
-            out_dir=str(tmp_path), tokenizer="whitespace",
+            out_dir=str(tmp_path),
         )

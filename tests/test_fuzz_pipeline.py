@@ -85,7 +85,7 @@ def test_pipeline_fuzz_rank_identity(spark, case):
         for did, content in docs:
             assert sha_got[did] == hashlib.sha256(content.encode("utf-8")).hexdigest()
 
-        run = Searcher(spark, tables, tokenizer="whitespace").search(
+        run = Searcher(spark, tables).search(
             queries, k=k, kernel=kernel
         )
         got: dict[str, list[tuple[str, float]]] = {}

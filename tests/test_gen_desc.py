@@ -107,7 +107,6 @@ def test_generated_descriptor_runs(spark, tmp_path):
         test_queries=queries,
         qrels=qrels,
         out_dir=str(tmp_path / "out"),
-        tokenizer="whitespace",
         base_dir=str(coll),
     )
     run_rows = res["run"].collect()

@@ -196,7 +196,7 @@ def test_build_and_search_with_krovetz_tokenizer(spark, tmp_path_factory):
     terms = {r.term for r in t.dictionary(spark).collect()}
     assert "test" in terms and "tests" not in terms and "try" in terms
     # the query side stems identically, so inflected queries match
-    run = Searcher(spark, t, tokenizer="krovetz").search([("q", "testing tries")], k=3).collect()
+    run = Searcher(spark, t).search([("q", "testing tries")], k=3).collect()
     assert {r.doc_id.split(":")[1].split("@")[0] for r in run} == {"p0", "p1"}
 
 
@@ -263,3 +263,27 @@ def test_estimate_corpus_bytes_file_backed(spark, tmp_path_factory):
     assert auto_num_shards(est) == 1
     # in-memory frame → no estimate
     assert estimate_corpus_bytes(spark.createDataFrame(make_corpus(5, 1))) is None
+
+
+def test_build_rejects_unknown_tokenizer(spark, tmp_path_factory):
+    """An unknown tokenizer name raises ValueError before any Spark job
+    runs (it used to be tokenized as whitespace without a word)."""
+    corpus = spark.createDataFrame(make_corpus(10, 5))
+    sc = spark.sparkContext
+    sc.setJobGroup("build_unknown_tokenizer", "unknown tokenizer")
+    try:
+        with pytest.raises(ValueError, match="unknown tokenizer"):
+            build_index(spark, corpus, str(tmp_path_factory.mktemp("idx_bad")), tokenizer="no_such")
+        assert list(sc.statusTracker().getJobIdsForGroup("build_unknown_tokenizer")) == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+
+
+def test_tokens_df_rejects_tokenizer_without_jvm_form(spark):
+    """``tokens_df`` has JVM column forms of ``code`` and ``whitespace``
+    only; any other name raises instead of splitting on whitespace."""
+    from flexneuart_spark.search.bm25 import tokens_df
+
+    docs = spark.createDataFrame([("d1", "running tests")], "doc_id string, content string")
+    with pytest.raises(ValueError, match="'code' or 'whitespace'"):
+        tokens_df(docs, "content", "doc_id", tokenizer="krovetz")

@@ -139,7 +139,7 @@ def test_proximity_tokenizes_queries_like_the_index(spark, tmp_path):
     oracle = Bm25Oracle(list(docs.items()))
     idf = {t: oracle.idf(t) for t in oracle.df}
     for ordered in (True, False):
-        run = proximity_topk(spark, tables, queries, k=10, ordered=ordered, tokenizer="krovetz")
+        run = proximity_topk(spark, tables, queries, k=10, ordered=ordered)
         got = {(r.query_id, r.doc_id): r.score for r in run.collect()}
         want = {}
         for qid, text in queries:
@@ -152,35 +152,3 @@ def test_proximity_tokenizes_queries_like_the_index(spark, tmp_path):
         assert want and set(got) == set(want), (ordered, got, want)
         for key, s in want.items():
             assert got[key] == pytest.approx(s, rel=1e-9)
-
-
-def test_proximity_rejects_unknown_tokenizer(spark, setup):
-    """An unknown tokenizer name raises before any Spark job runs."""
-    tables, _, _ = setup
-    sc = spark.sparkContext
-    sc.setJobGroup("prox_unknown_tokenizer", "unknown tokenizer")
-    try:
-        with pytest.raises(ValueError, match="unknown tokenizer"):
-            proximity_topk(spark, tables, [("q", "def return")], tokenizer="no_such_tokenizer")
-        assert list(sc.statusTracker().getJobIdsForGroup("prox_unknown_tokenizer")) == []
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-
-
-def test_searchers_reject_unknown_tokenizer(spark, setup):
-    """``Searcher`` — and ``sdm_topk``, which builds one first — raise
-    ValueError for an unknown tokenizer name before any Spark job runs."""
-    from flexneuart_spark.search.engine import Searcher
-    from flexneuart_spark.search.proximity import sdm_topk
-
-    tables, _, _ = setup
-    sc = spark.sparkContext
-    sc.setJobGroup("searcher_unknown_tokenizer", "unknown tokenizer")
-    try:
-        with pytest.raises(ValueError, match="unknown tokenizer"):
-            Searcher(spark, tables, tokenizer="no_such_tokenizer")
-        with pytest.raises(ValueError, match="unknown tokenizer"):
-            sdm_topk(spark, tables, [("q", "def return")], tokenizer="no_such_tokenizer")
-        assert list(sc.statusTracker().getJobIdsForGroup("searcher_unknown_tokenizer")) == []
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)

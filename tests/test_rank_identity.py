@@ -99,8 +99,8 @@ def test_cold_warm_oracle_identity(spark, setup):
     row-identical to a cold one reading parquet, AND rank-identical to
     the oracle golden run — for every kernel."""
     tables, qlist, golden, _, _ = setup
-    cold = Searcher(spark, tables, tokenizer="code")
-    warmed = Searcher(spark, tables, tokenizer="code").warm()
+    cold = Searcher(spark, tables)
+    warmed = Searcher(spark, tables).warm()
     assert warmed._idf_cache is not None
     for kernel in ("maxscore", "bmw", "exhaustive"):
         run_warm = _collect_run(warmed.search(qlist, k=K, kernel=kernel))

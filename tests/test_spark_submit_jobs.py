@@ -83,7 +83,6 @@ def test_spark_submit_build_then_query(tmp_path):
             "--queries", str(qfile),
             "--output", run_path,
             "--k", "5",
-            "--tokenizer", "whitespace",
             "--kernel", "bmw",
         ],
         cwd=str(tmp_path),
@@ -318,7 +317,7 @@ def test_spark_submit_exper_job(tmp_path):
             "--py-files", zip_out,
             os.path.join(ROOT, "scripts", "query_job.py"),
             "--index", idx, "--queries", str(qfile),
-            "--output", probe_run, "--k", "3", "--tokenizer", "whitespace",
+            "--output", probe_run, "--k", "3",
         ],
         cwd=str(tmp_path),
     )
@@ -354,7 +353,6 @@ def test_spark_submit_exper_job(tmp_path):
             "--test-queries", str(qfile),
             "--qrels", str(qrels),
             "--output", out_dir,
-            "--tokenizer", "whitespace",
         ],
         cwd=str(tmp_path),
     )

@@ -187,3 +187,66 @@ def test_segment_lifecycle_invariant_on_bench_corpus(spark, tmp_path):
         # index — the documented MaxScore float-order property)
         assert before[key][0] == after[key][0], (key, before[key], after[key])
         assert before[key][1] == pytest.approx(after[key][1], rel=1e-9)
+
+
+def _ws_docs(n: int, offset: int = 0) -> list[tuple[str, str]]:
+    """Docs whose whitespace and code tokens differ (``hashJoin`` is one
+    whitespace token, two code tokens); every doc has its own length, so
+    no two scores tie."""
+    words = ["hashJoin", "scan_filter", "hash", "join", "scan", "filter"]
+    return [
+        (
+            f"d{i + offset:03d}",
+            " ".join([words[i % 6]] * (1 + i % 3) + [words[(i + 2) % 6]] + [f"w{j}" for j in range(i)]),
+        )
+        for i in range(n)
+    ]
+
+
+def test_segments_with_different_tokenizers_raise(spark, tmp_path):
+    """A code-built and a whitespace-built segment cannot be searched or
+    compacted together: their df would not add up."""
+    from flexneuart_spark.streaming.incremental import compact_segments
+
+    segs = []
+    for i, tok in enumerate(("code", "whitespace")):
+        d = str(tmp_path / f"segments/{i:06d}")
+        docs = spark.createDataFrame(_ws_docs(6, offset=10 * i), "doc_id string, content string")
+        build_index(spark, docs, d, num_shards=2, tokenizer=tok)
+        segs.append(d)
+    with pytest.raises(ValueError, match="different tokenizers.*code.*whitespace"):
+        SegmentedSearcher(spark, segs)
+    with pytest.raises(ValueError, match="different tokenizers"):
+        compact_segments(spark, str(tmp_path), str(tmp_path / "compacted"), num_shards=2)
+
+
+def test_compaction_keeps_the_tokenizer(spark, tmp_path):
+    """Compacted whitespace-built segments still tokenize queries on
+    whitespace: the run equals the relational BM25 over the whitespace
+    tokens of the union corpus (an independent implementation)."""
+    from flexneuart_spark.search.bm25 import bm25_topk_relational, tokens_df
+    from flexneuart_spark.streaming.incremental import compact_segments
+
+    docs = _ws_docs(24)
+    root = str(tmp_path / "root")
+    for i, part in enumerate((docs[:12], docs[12:])):
+        build_index(
+            spark, spark.createDataFrame(part, "doc_id string, content string"),
+            f"{root}/segments/{i:06d}", num_shards=2, tokenizer="whitespace",
+        )
+    compacted = compact_segments(spark, root, str(tmp_path / "compacted"), num_shards=2)
+    assert compacted.corpus_stats(spark).first().tokenizer == "whitespace"
+
+    queries = [("q1", "hashJoin"), ("q2", "scan_filter hashJoin"), ("q3", "scan_filter join")]
+    run = Searcher(spark, compacted).search(queries, k=5)
+    got = {(r.query_id, r.rank): (r.doc_id, r.score) for r in run.collect()}
+    want_df = bm25_topk_relational(
+        tokens_df(spark.createDataFrame(docs, "doc_id string, content string"), "content", "doc_id", "whitespace"),
+        tokens_df(spark.createDataFrame(queries, "query_id string, text string"), "text", "query_id", "whitespace"),
+        k=5,
+    )
+    want = {(r.query_id, r.rank): (r.doc_id, r.score) for r in want_df.collect()}
+    assert got.keys() == want.keys() and len(want) == 15
+    for key in want:
+        assert got[key][0] == want[key][0], (key, got[key], want[key])
+        assert got[key][1] == pytest.approx(want[key][1], abs=1e-9)
