@@ -254,7 +254,8 @@ def merged_stats(spark: SparkSession, segments: list[IndexTables]) -> tuple[int,
     """(n_docs, avgdl, tokenizer) over ``segments`` from ONE multi-path read
     of their one-row ``corpus_stats`` tables. Queries are tokenized with
     the tokenizer every segment records; if they disagree (their df would
-    not add up), ``ValueError`` names each segment's."""
+    not add up), ``ValueError`` names each segment's; so it does for a
+    recorded name this version has no tokenizer of."""
     rows = (
         spark.read.parquet(*[t.corpus_stats_dir for t in segments])
         .select("n_docs", "total_tokens", "tokenizer", F.input_file_name().alias("path"))
@@ -264,9 +265,13 @@ def merged_stats(spark: SparkSession, segments: list[IndexTables]) -> tuple[int,
     if len(names) > 1:
         each = sorted(f"{r.path.rsplit('/corpus_stats/', 1)[0]}: {r.tokenizer}" for r in rows)
         raise ValueError(f"segments were built with different tokenizers: {'; '.join(each)}")
+    tokenizer = names.pop()
+    if tokenizer not in TOKENIZERS:
+        where = rows[0].path.rsplit("/corpus_stats/", 1)[0]
+        raise ValueError(f"unknown tokenizer {tokenizer!r} recorded in {where}; expected one of {sorted(TOKENIZERS)}")
     n_docs = sum(int(r.n_docs) for r in rows)
     total_tokens = sum(int(r.total_tokens) for r in rows)
-    return n_docs, (total_tokens / n_docs) if n_docs else 1.0, names.pop()
+    return n_docs, (total_tokens / n_docs) if n_docs else 1.0, tokenizer
 
 
 def derive_doc_id(df: DataFrame) -> DataFrame:

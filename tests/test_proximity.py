@@ -152,3 +152,67 @@ def test_proximity_tokenizes_queries_like_the_index(spark, tmp_path):
         assert want and set(got) == set(want), (ordered, got, want)
         for key, s in want.items():
             assert got[key] == pytest.approx(s, rel=1e-9)
+
+
+@pytest.fixture(scope="module")
+def unknown_tokenizer_index(spark, tmp_path_factory):
+    """A small index whose ``corpus_stats`` records a tokenizer name this
+    version has no tokenizer of (an index from another version, say)."""
+    idx = str(tmp_path_factory.mktemp("prox_unknown_tok_idx"))
+    tables = build_index(spark, spark.createDataFrame(make_corpus(n_docs=20, seed=42)), idx, num_shards=2)
+    stats = tables.corpus_stats(spark).toPandas().assign(tokenizer="no_such_tokenizer")
+    spark.createDataFrame(stats).coalesce(1).write.mode("overwrite").parquet(tables.corpus_stats_dir)
+    return tables
+
+
+def _stats_read_jobs(spark, tables, group):
+    """Number of Spark jobs reading ``tables``' recorded stats takes."""
+    from flexneuart_spark.index.builder import merged_stats
+
+    sc = spark.sparkContext
+    sc.setJobGroup(group, "stats read")
+    try:
+        with pytest.raises(ValueError, match="unknown tokenizer 'no_such_tokenizer'"):
+            merged_stats(spark, [tables])
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+
+
+def test_proximity_rejects_unknown_tokenizer(spark, unknown_tokenizer_index):
+    """An unknown tokenizer name recorded in the index raises ValueError
+    before any Spark job beyond reading the recorded stats runs."""
+    tables = unknown_tokenizer_index
+    stats_jobs = _stats_read_jobs(spark, tables, "prox_unknown_tokenizer_stats")
+    sc = spark.sparkContext
+    sc.setJobGroup("prox_unknown_tokenizer", "unknown tokenizer")
+    try:
+        with pytest.raises(ValueError, match="unknown tokenizer 'no_such_tokenizer'"):
+            proximity_topk(spark, tables, [("q", "def return")])
+        assert len(sc.statusTracker().getJobIdsForGroup("prox_unknown_tokenizer")) == stats_jobs
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+
+
+def test_searchers_reject_unknown_tokenizer(spark, unknown_tokenizer_index):
+    """``Searcher`` — and ``sdm_topk``, which builds one first — raise
+    ValueError for an unknown tokenizer name recorded in the index before
+    any Spark job beyond reading the recorded stats runs."""
+    from flexneuart_spark.search.engine import Searcher
+    from flexneuart_spark.search.proximity import sdm_topk
+
+    tables = unknown_tokenizer_index
+    stats_jobs = _stats_read_jobs(spark, tables, "searcher_unknown_tokenizer_stats")
+    sc = spark.sparkContext
+    for name, call in (
+        ("searcher", lambda: Searcher(spark, tables)),
+        ("sdm", lambda: sdm_topk(spark, tables, [("q", "def return")])),
+    ):
+        group = f"{name}_unknown_tokenizer"
+        sc.setJobGroup(group, "unknown tokenizer")
+        try:
+            with pytest.raises(ValueError, match="unknown tokenizer 'no_such_tokenizer'"):
+                call()
+            assert len(sc.statusTracker().getJobIdsForGroup(group)) == stats_jobs, name
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
